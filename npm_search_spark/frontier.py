@@ -54,7 +54,7 @@ from .schema import FINAL_PACKAGE, FRONTIER, ONE_TIME, QUARANTINE
 from .seen import SeenSet
 from .sources.synthetic import FILE_OPTIONS
 from .state import CrawlState, StateStore
-from .tables import SnapTable
+from .tables import FILE_COL, Pin, SnapTable, source_files
 
 # per-host request budgets, req/s (reference src/npm/index.ts:52-53,
 # src/changelog.ts:29,39,50; jsDelivr uncapped in the reference -> registry-like)
@@ -1349,12 +1349,22 @@ class Crawl:
         """One drain generation. ``budgets_override``: absolute per-host
         budgets for THIS generation (multiplier 1) — watch mode passes the
         remaining per-trigger-window ledger so a multi-generation
-        micro-batch never admits more than rate x trigger per host."""
+        micro-batch never admits more than rate x trigger per host.
+
+        Driver actions: the scheduler's own scans, then ONE fused metrics
+        pass (every count plus the scheduled batch's data files). An empty
+        tick runs no action at all (the scheduler's exact
+        ``scheduled_count`` decides), and the frontier MERGE runs no
+        detection: the pending scan carries each row's file (provenance),
+        so the MERGE rewrites the scheduled rows' files directly."""
         spark = self.spark
         metrics: dict[str, Any] = {"generation": generation}
         t0 = time.time()
 
-        fr = self.frontier.read(spark)
+        # provenance: every pending row carries its data file, so the
+        # frontier MERGE below rewrites the scheduled rows' files without
+        # detecting them (fr_sid is the snapshot the MERGE must still see)
+        fr, fr_sid = self.frontier.read_with_files(spark)
         pending = fr.where(
             (F.col("state") == "pending")
             & (F.col("next_attempt_at").isNull() | (F.col("next_attempt_at") <= F.current_timestamp()))
@@ -1435,6 +1445,15 @@ class Crawl:
         # re-anchored at generation end after this generation's own writes
         self._counts_snapshot = self.frontier.current_snapshot_id()
         metrics["hist_counts_carried"] = counts is not None
+        if sched_raw.scheduled_count == 0:
+            # drained (or everything is backing off): the scheduler knows
+            # its exact winner count driver-side, so no action runs — the
+            # backoff-wait loop in run_bootstrap probes with empty
+            # generations until the earliest next_attempt_at matures
+            metrics["scheduled"] = 0
+            metrics["robots_blocked"] = 0
+            metrics["scheduled_by_host"] = {}
+            return metrics
         # robots.txt: disallowed URLs are terminal, never fetched. Flagging
         # (instead of splitting) lets one aggregation produce both the
         # scheduled and the blocked counts — per-generation driver actions
@@ -1444,18 +1463,8 @@ class Crawl:
             flagged = flag_robots(sched_raw, robots).cache()
         else:
             flagged = sched_raw.withColumn("_blocked", F.lit(False)).cache()
-        if flagged.isEmpty():
-            # drained (or everything is backing off): limit-1 short-circuit
-            # instead of paying the full dedup/fetch/metrics plan — the
-            # backoff-wait loop in run_bootstrap probes with empty
-            # generations until the earliest next_attempt_at matures
-            metrics["scheduled"] = 0
-            metrics["robots_blocked"] = 0
-            metrics["scheduled_by_host"] = {}
-            flagged.unpersist()
-            return metrics
-        scheduled = flagged.drop("_blocked")
-        eligible = flagged.where(~F.col("_blocked")).drop("_blocked")
+        scheduled = flagged.drop("_blocked", FILE_COL)
+        eligible = flagged.where(~F.col("_blocked")).drop("_blocked", FILE_COL)
         robots_blocked = (
             flagged.where(F.col("_blocked")).drop("_blocked") if robots is not None else None
         )
@@ -1514,15 +1523,25 @@ class Crawl:
         # ONE driver action materializes all three cached frames (flagged,
         # fresh, reg_fetched) and yields every count the generation needs:
         # scheduled/robots (leg 'sched'), per-kind hop sizes (leg 'fresh'),
-        # per-(status, host) fetch outcomes (leg 'reg'). Per-generation
-        # driver actions are the serial fraction that caps N->4N scaling —
-        # this pass replaces what used to be three separate count jobs.
+        # per-(status, host) fetch outcomes (leg 'reg'), plus the scheduled
+        # batch's distinct data files (leg 'file') — the provenance that
+        # lets the frontier MERGE skip detection. Per-generation driver
+        # actions are the serial fraction that caps N->4N scaling — this
+        # pass replaces what used to be three separate count jobs and the
+        # MERGE's two detection jobs.
         _null = F.lit(None).cast("string")
         legs = (
             flagged.select(
                 F.lit("sched").alias("_leg"),
                 F.col("_blocked").cast("string").alias("_k1"),
                 F.col("host").alias("_k2"),
+            )
+            .unionByName(
+                flagged.select(
+                    F.lit("file").alias("_leg"),
+                    _null.alias("_k1"),
+                    F.col(FILE_COL).alias("_k2"),
+                )
             )
             .unionByName(
                 fresh.where(F.col("kind") != "registry_doc").select(
@@ -1543,10 +1562,13 @@ class Crawl:
         kc: dict[str, int] = {}
         sc: dict[str, int] = {}
         sched_by_host: dict[str, int] = {}
+        sched_files: list[str] = []
         for r in legs.groupBy("_leg", "_k1", "_k2").count().collect():
             if r["_leg"] == "sched":
                 cnt[r["_k1"] == "true"] = cnt.get(r["_k1"] == "true", 0) + r["count"]
                 sched_by_host[r["_k2"]] = sched_by_host.get(r["_k2"], 0) + r["count"]
+            elif r["_leg"] == "file":
+                sched_files.append(r["_k2"])
             elif r["_leg"] == "fresh":
                 kc[r["_k1"]] = kc.get(r["_k1"], 0) + r["count"]
             else:
@@ -1593,16 +1615,20 @@ class Crawl:
                 self.total_downloads,
                 self.now_day_ms,
             )
+            # pinned, materialised inside the MERGE: formatPkg's Arrow pass
+            # runs once per generation, in the MERGE's SQL execution
+            landed = Pin(enriched.select(*[f.name for f in FINAL_PACKAGE.fields]))
             self.packages.merge_upsert(
                 spark,
-                enriched.select(*[f.name for f in FINAL_PACKAGE.fields]),
+                landed,
                 key="objectID",
                 guard="src._revision >= tgt._revision",
                 meta={"generation": generation},
             )
-            # hop 2: file list URLs — derived from the in-memory enriched
-            # batch (what the MERGE just landed), not a table read-back
-            hop2 = enriched.select(
+            # hop 2: file list URLs — derived from the pinned enriched batch
+            # (what the MERGE just landed), not a table read-back and not a
+            # second formatPkg pass
+            hop2 = landed.get().select(
                 canonicalize_url(filelist_url(F.col("objectID"), F.col("version"))).alias("url"),
                 F.lit("cdn.jsdelivr.net").alias("host"),
                 F.lit("file_list").alias("kind"),
@@ -1623,7 +1649,7 @@ class Crawl:
                     "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
                 )),
             )
-            pkgs = self.packages.read(spark)
+            pkgs, pkgs_sid = self.packages.read_with_files(spark)
             patched = (
                 pkgs.join(F.broadcast(spans_df), pkgs.objectID == spans_df.doc_id, "inner")
                 .drop("doc_id")
@@ -1641,8 +1667,11 @@ class Crawl:
                 )
                 .drop("spans")
             )
+            # provenance: the patched rows are packages rows, so the MERGE
+            # rewrites their files without a detection scan
             self.packages.merge_upsert(
-                spark, patched, key="objectID", meta={"generation": generation}
+                spark, patched, key="objectID", meta={"generation": generation},
+                read_at=pkgs_sid,
             )
             # hop 3: changelog probes for packages still missing a changelog,
             # memoized against one_time_data (J4)
@@ -1685,7 +1714,7 @@ class Crawl:
                 .groupBy("doc_id")
                 .agg(F.min_by("url", "_rank").alias("changelog_url"))
             )
-            pkgs = self.packages.read(spark)
+            pkgs, pkgs_sid = self.packages.read_with_files(spark)
             patched = (
                 pkgs.join(F.broadcast(winners), pkgs.objectID == winners.doc_id, "inner")
                 .drop("doc_id")
@@ -1694,7 +1723,8 @@ class Crawl:
                 .drop("changelog_url")
             )
             self.packages.merge_upsert(
-                spark, patched, key="objectID", meta={"generation": generation}
+                spark, patched, key="objectID", meta={"generation": generation},
+                read_at=pkgs_sid,
             )
             memo_rows = (
                 self.packages.read(spark)
@@ -1750,9 +1780,11 @@ class Crawl:
 
         # every scheduled row receives a new state this generation; rebuild
         # the full rows from the (cached) scheduled batch and MERGE them —
-        # only data files containing a scheduled URL are rewritten, the rest
-        # of the frontier is carried untouched (O(batch + affected files),
-        # never O(table), unlike a full overwrite)
+        # only the data files the scheduled rows were read from are
+        # rewritten, the rest of the frontier is carried untouched
+        # (O(batch + affected files), never O(table), unlike a full
+        # overwrite). Pinned once: the MERGE's upserts and deletes are both
+        # filters of it, so its state-resolution shuffle runs once.
         upd_rows = (
             scheduled.join(F.broadcast(upd), "url", "inner")
             .withColumn(
@@ -1789,6 +1821,7 @@ class Crawl:
             )
             .drop("_new_state")
             .select(*[f.name for f in FRONTIER.fields])
+            .localCheckpoint(eager=False)
         )
         if self.gc_terminal:
             # the reference GCs processed queue rows every minute
@@ -1804,13 +1837,17 @@ class Crawl:
                 spark,
                 "url",
                 upserts=upd_rows.where(~F.col("state").isin("done", "not_found")),
-                # host/priority carried so stats pruning applies to deletes too
+                # host/priority carried so stats pruning applies to deletes
+                # too, should the MERGE fall back to detection
                 delete_keys=terminal.select("url", "host", "priority"),
                 meta={"generation": generation},
+                read_at=fr_sid,
+                files=source_files(sched_files),
             )
         else:
             self.frontier.merge_upsert(
-                spark, upd_rows, key="url", meta={"generation": generation}
+                spark, upd_rows, key="url", meta={"generation": generation},
+                read_at=fr_sid, files=source_files(sched_files),
             )
         if new_rows:
             additions = (

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .enrich import POPULAR_DOWNLOADS_RATIO, human_number_col
 from .frontier import Crawl
+from .tables import FILE_COL, source_files
 
 DAY_MS = 86_400_000
 PERIODIC_WINDOW_MS = 30 * DAY_MS   # reference PeriodicBackgroundIndexer.ts:32-35
@@ -56,32 +57,35 @@ def run_periodic(crawl: Crawl, now_day_ms: int, error_modulus: int = 0) -> dict:
     ``error_modulus`` simulates per-package refresh errors (1/modulus of due
     packages fail): an errored package keeps its old values and is
     rescheduled for tomorrow (+1 day) instead of +30 days — the reference's
-    periodic-error class (PeriodicBackgroundIndexer.ts:170-183)."""
+    periodic-error class (PeriodicBackgroundIndexer.ts:170-183).
+
+    Every row this job writes or deletes is a due row, so the error defer,
+    the refresh and the reconcile delete commit as ONE provenance MERGE:
+    it rewrites exactly the files the due rows were read from, learnt from
+    the due-count pass, with no detection scan."""
     spark = crawl.spark
-    pkgs = crawl.packages.read(spark)
+    pkgs, read_at = crawl.packages.read_with_files(spark)
     due = due_for_periodic(pkgs, now_day_ms).where(~F.col("isSecurityHeld"))
     if error_modulus > 1:
         errored_c = F.pmod(F.xxhash64("objectID"), F.lit(error_modulus)) == 0
     else:
         errored_c = F.lit(False)
     due = due.withColumn("_err", errored_c)
-    ec = {r["_err"]: r["count"] for r in due.groupBy("_err").count().collect()}
+    ec: dict[bool, int] = {}
+    due_files: list[str] = []
+    for r in due.groupBy("_err", FILE_COL).count().collect():
+        ec[r["_err"]] = ec.get(r["_err"], 0) + r["count"]
+        due_files.append(r[FILE_COL])
     n_due = sum(ec.values())
     metrics = {"periodic_due": n_due, "periodic_errors": ec.get(True, 0)}
     if n_due == 0:
         return metrics
     errored = due.where(F.col("_err")).drop("_err")
     due = due.where(~F.col("_err")).drop("_err")
-    if ec.get(True, 0):
-        deferred = errored.withColumn(
-            "_periodicDataUpdatedAt",
-            F.lit(now_day_ms - PERIODIC_WINDOW_MS + PERIODIC_ERROR_RETRY_MS),
-        )
-        crawl.packages.merge_upsert(
-            spark, deferred, key="objectID", meta={"op": "periodic-error-defer"}
-        )
-    if ec.get(False, 0) == 0:
-        return metrics
+    deferred = errored.withColumn(
+        "_periodicDataUpdatedAt",
+        F.lit(now_day_ms - PERIODIC_WINDOW_MS + PERIODIC_ERROR_RETRY_MS),
+    )
 
     dl = crawl.universe["npm_downloads"].select(
         F.col("name").alias("_dl_name"), F.col("downloads_last_30d").alias("_dl")
@@ -118,11 +122,6 @@ def run_periodic(crawl: Crawl, now_day_ms: int, error_modulus: int = 0) -> dict:
         .withColumn("_periodicDataUpdatedAt", F.lit(now_day_ms))
         .drop("_dl_name", "_dl")
     )
-    crawl.packages.merge_upsert(
-        spark, refreshed, key="objectID", meta={"op": "periodic"}
-    )
-    metrics["periodic_refreshed"] = ec.get(False, 0)
-
     # J9: downloads-miss AND old enough -> live-check the registry; gone ->
     # delete + quarantine
     suspects = joined.where(
@@ -133,14 +132,27 @@ def run_periodic(crawl: Crawl, now_day_ms: int, error_modulus: int = 0) -> dict:
         "objectID",
         "left_anti",
     )
-    n_gone = gone.count()
-    metrics["periodic_deleted"] = n_gone
+    n_gone = 0
+    if ec.get(False, 0):
+        metrics["periodic_refreshed"] = ec[False]
+        n_gone = gone.count()
+        metrics["periodic_deleted"] = n_gone
     if n_gone:
-        # file-granular MERGE DELETE (J9 reconciliation): rewrite only the
-        # files containing a gone package, not the whole packages table
-        crawl.packages.merge_delete(
-            spark, gone, key="objectID", meta={"op": "periodic-reconcile"}
-        )
+        # a gone package is deleted, not refreshed (an upsert of a deleted
+        # key would land it again)
+        refreshed = refreshed.join(F.broadcast(gone), "objectID", "left_anti")
+    # file-granular MERGE (J9 reconciliation included): rewrite only the
+    # files holding a due package, not the whole packages table
+    crawl.packages.merge_apply(
+        spark,
+        "objectID",
+        upserts=deferred.unionByName(refreshed),
+        delete_keys=gone if n_gone else None,
+        meta={"op": "periodic"},
+        read_at=read_at,
+        files=source_files(due_files),
+    )
+    if n_gone:
         # release the registry URLs from the seen set so a later
         # re-publish of the same name is re-crawled (the cuckoo backend
         # deletes from the prefilter exactly; bloom goes conservative)
@@ -207,11 +219,15 @@ def run_one_time(crawl: Crawl, now_ms: int, max_generations: int = 4) -> dict:
         m = crawl.run_generation(-100 - gen)  # negative gen ids: background job
         if m["scheduled"] == 0:
             break
-    # defer still-unresolved packages by a week (error class T5)
-    still = due_for_one_time(crawl.packages.read(spark), now_ms).where(
+    # defer still-unresolved packages by a week (error class T5); the rows
+    # come from a packages read, so the MERGE rewrites their files directly
+    pkgs, read_at = crawl.packages.read_with_files(spark)
+    still = due_for_one_time(pkgs, now_ms).where(
         F.col("changelogFilename").isNull()
     ).withColumn("_oneTimeDataToUpdateAt", F.lit(now_ms + ONE_TIME_RETRY_MS))
-    crawl.packages.merge_upsert(spark, still, key="objectID", meta={"op": "one-time-defer"})
+    crawl.packages.merge_upsert(
+        spark, still, key="objectID", meta={"op": "one-time-defer"}, read_at=read_at
+    )
     metrics["one_time_resolved"] = int(
         n_due
         - still.count()

@@ -1,3 +1,3 @@
-from .snaptable import SnapTable
+from .snaptable import FILE_COL, Pin, SnapTable, source_files
 
-__all__ = ["SnapTable"]
+__all__ = ["FILE_COL", "Pin", "SnapTable", "source_files"]

@@ -23,6 +23,23 @@ O(affected files + batch), not O(table). Readers load
 ``spark.read.parquet(*files)`` — pushdown/pruning work as usual because
 these are plain parquet files.
 
+Merge cost model. A merge finds its affected files one of two ways:
+
+- *provenance* (Iceberg's ``_file`` metadata column): the source rows were
+  read with ``read_with_files`` and the caller passes the snapshot id they
+  were read at. If that is still the current snapshot, the affected files
+  are exactly the files those rows came from — given by the caller (who
+  usually learns them from an action it runs anyway) or collected from the
+  pinned source's ``_file`` column. No stats aggregate, no key scan: the
+  merge runs only the jobs of its write.
+- *detection* (a source not read from this table, or the table moved since
+  the read): one ``first()`` over the source's stats-column bounds prunes
+  candidates by manifest stats, then one ``collect()`` semi-joins the
+  candidates' key columns against the broadcast source keys. Each source
+  is pinned once, so detection and the write never re-derive it.
+
+Either way the write rewrites the affected files only.
+
 Per-file statistics (Iceberg-manifest style): when ``stats_cols`` is set,
 every write records min/max per file for those columns in the manifest.
 ``files_matching`` then prunes scans driver-side with zero I/O — the
@@ -68,6 +85,39 @@ class Snapshot:
 
 def _local_path(uri: str) -> str:
     return unquote(urlparse(uri).path)
+
+
+# the column ``read_with_files`` adds: the data file a row was read from,
+# as the URI Spark reports (``source_files`` normalises it to a path)
+FILE_COL = "_file"
+
+
+def source_files(uris) -> list[str]:
+    """The local data-file paths of ``FILE_COL`` values collected to the
+    driver, deduplicated and sorted."""
+    return sorted({_local_path(u) for u in uris if u})
+
+
+class Pin:
+    """A DataFrame whose plan runs once, at the first ``get()``: the rows
+    are checkpointed there and every later ``get()`` reads the checkpoint.
+    A MERGE given a Pin as its upserts materialises it inside its own
+    commit, so the plan runs in the MERGE's SQL execution, and a caller
+    that derives more rows from the same batch afterwards re-runs nothing
+    (the crawl's hop 2 reads the formatted packages it just merged)."""
+
+    def __init__(self, df: DataFrame):
+        self._plan = df
+        self._rows: DataFrame | None = None
+
+    def get(self) -> DataFrame:
+        if self._rows is None:
+            self._rows = self._plan.localCheckpoint(eager=True)
+        return self._rows
+
+
+def _drop_file_col(df: DataFrame | None) -> DataFrame | None:
+    return None if df is None else df.drop(FILE_COL)
 
 
 class SnapTable:
@@ -237,7 +287,8 @@ class SnapTable:
     def _carry(snap: Snapshot | None, files: list[str]) -> dict[str, dict[str, list]]:
         if snap is None:
             return {}
-        return {f: s for f, s in (snap.file_stats or {}).items() if f in set(files)}
+        keep = set(files)
+        return {f: s for f, s in (snap.file_stats or {}).items() if f in keep}
 
     # -- reads ---------------------------------------------------------------
 
@@ -251,6 +302,25 @@ class SnapTable:
                 raise ValueError(f"empty table {self.root} and no schema given")
             return spark.createDataFrame([], self.schema)
         return spark.read.parquet(*snap.files)
+
+    def read_with_files(
+        self, spark: SparkSession, snapshot_id: int | None = None
+    ) -> tuple[DataFrame, int | None]:
+        """``read`` plus each row's data file in a ``FILE_COL`` column, and
+        the snapshot id that was read. Rows derived from this read can go
+        back into ``merge_apply(read_at=...)``, which then rewrites exactly
+        their files instead of detecting them."""
+        snap = self.snapshot(snapshot_id)
+        sid = snap.snapshot_id if snap is not None else None
+        if snap is None or not snap.files:
+            return (
+                self.read(spark, snapshot_id).withColumn(
+                    FILE_COL, F.lit(None).cast("string")
+                ),
+                sid,
+            )
+        df = spark.read.parquet(*snap.files)
+        return df.withColumn(FILE_COL, F.col("_metadata.file_path")), sid
 
     def files_matching(self, col: str, values: list) -> list[str]:
         """Driver-side file pruning by manifest stats: the files whose
@@ -342,10 +412,12 @@ class SnapTable:
         self,
         spark: SparkSession,
         key: str | list[str],
-        upserts: DataFrame | None = None,
+        upserts: DataFrame | Pin | None = None,
         delete_keys: DataFrame | None = None,
         guard: str | None = None,
         meta: dict[str, Any] | None = None,
+        read_at: int | None = None,
+        files: list[str] | None = None,
     ) -> int:
         """One file-granular copy-on-write pass applying upserts and deletes
         together (Iceberg MERGE semantics):
@@ -361,36 +433,74 @@ class SnapTable:
         other file moves into the new snapshot untouched, so merge cost is
         O(affected files + batch), not O(table) — the property that keeps
         per-generation MERGEs viable on a 10^10-row frontier.
+
+        Provenance: ``read_at`` is the snapshot id the sources were read at
+        (``read_with_files``). While it is still the current snapshot, the
+        affected files are the files the source rows came from — ``files``
+        when the caller knows them, else the distinct ``FILE_COL`` values
+        of the sources (one job over the pinned sources) — and detection
+        (a stats ``first()`` plus a key-scan ``collect()``) is skipped. The
+        caller vouches that the key is unique in the table, so a source
+        row's file holds the only target row it matches. A stale
+        ``read_at``, or ``files`` outside the snapshot, falls back to
+        detection. ``upserts`` may be a ``Pin``: it is materialised here.
         """
         keys = [key] if isinstance(key, str) else list(key)
         snap = self.snapshot()
+        pinned = isinstance(upserts, Pin)
+        if pinned:
+            upserts = upserts.get()
         if snap is None or not snap.files:
             if upserts is None:
                 return self.current_snapshot_id() or 0
-            return self.overwrite(upserts, meta=meta)
-        if upserts is not None:
-            # pin the (possibly expensive) source plan: it is consumed by the
-            # affected-file detection, the kept/landing joins, and the write
+            return self.overwrite(_drop_file_col(upserts), meta=meta)
+        # pin each (possibly expensive) source plan once: detection or the
+        # provenance file collect, the kept/landing joins and the write all
+        # read it
+        if upserts is not None and not pinned:
             upserts = upserts.localCheckpoint(eager=False)
+        if delete_keys is not None:
+            delete_keys = delete_keys.localCheckpoint(eager=False)
 
         frames = [d for d in (upserts, delete_keys) if d is not None]
         if not frames:
             return self.current_snapshot_id() or 0
-        # carry every stats column the sources share: _affected_files prunes
-        # candidate files on all of them, not just the merge key
-        keep = keys + [
-            c
-            for c in self.stats_cols
-            if c not in keys and all(c in d.columns for d in frames)
-        ]
-        parts = [d.select(*keep) for d in frames]
-        all_keys = parts[0]
-        for p in parts[1:]:
-            all_keys = all_keys.unionByName(p)
-        all_keys = all_keys.dropDuplicates(keys)
-
-        affected_files = self._affected_files(spark, snap, keys, all_keys)
-        untouched = [f for f in snap.files if f not in set(affected_files)]
+        affected_files = None
+        if read_at is not None and read_at == snap.snapshot_id:
+            if files is None:
+                if not all(FILE_COL in d.columns for d in frames):
+                    raise ValueError(
+                        f"merge into {self.root} with read_at needs files or a "
+                        f"{FILE_COL} column on every source"
+                    )
+                src_files = frames[0].select(FILE_COL)
+                for d in frames[1:]:
+                    src_files = src_files.unionByName(d.select(FILE_COL))
+                files = source_files(
+                    r[0] for r in src_files.distinct().collect()
+                )
+            listed = set(files)
+            if listed <= set(snap.files):
+                affected_files = [f for f in snap.files if f in listed]
+        upserts = _drop_file_col(upserts)
+        delete_keys = _drop_file_col(delete_keys)
+        if affected_files is None:
+            # carry every stats column the sources share: _affected_files
+            # prunes candidate files on all of them, not just the merge key.
+            # No dropDuplicates: a semi-join's build side needs none.
+            frames = [d for d in (upserts, delete_keys) if d is not None]
+            keep = keys + [
+                c
+                for c in self.stats_cols
+                if c not in keys and all(c in d.columns for d in frames)
+            ]
+            parts = [d.select(*keep) for d in frames]
+            all_keys = parts[0]
+            for p in parts[1:]:
+                all_keys = all_keys.unionByName(p)
+            affected_files = self._affected_files(spark, snap, keys, all_keys)
+        affected = set(affected_files)
+        untouched = [f for f in snap.files if f not in affected]
 
         if not affected_files:
             if upserts is None:
@@ -440,14 +550,19 @@ class SnapTable:
     def merge_upsert(
         self,
         spark: SparkSession,
-        source: DataFrame,
+        source: DataFrame | Pin,
         key: str | list[str],
         guard: str | None = None,
         meta: dict[str, Any] | None = None,
+        read_at: int | None = None,
+        files: list[str] | None = None,
     ) -> int:
         """MERGE INTO semantics: upsert ``source`` rows by ``key`` (see
-        merge_apply)."""
-        return self.merge_apply(spark, key, upserts=source, guard=guard, meta=meta)
+        merge_apply, also for ``read_at``/``files`` provenance)."""
+        return self.merge_apply(
+            spark, key, upserts=source, guard=guard, meta=meta,
+            read_at=read_at, files=files,
+        )
 
     def merge_delete(
         self,

@@ -679,6 +679,74 @@ class TestFrontierGC:
         assert carried or not gen2_parent
 
 
+class TestProvenanceGeneration:
+    """Per-generation fixed cost pins, from one spied bootstrap: the
+    frontier MERGE takes the scheduled rows' files from the pending scan
+    (no detection), hop 2 reads the pinned formatPkg output (no second
+    Arrow pass), and an empty tick runs no ``isEmpty`` action."""
+
+    @pytest.fixture(scope="class")
+    def spied(self, spark, universe, tmp_path_factory):
+        from npm_search_spark.tables import SnapTable
+
+        detected: list[str] = []
+        enqueue_plans: list[str] = []
+        is_empty_calls: list[int] = []
+        real_detect = SnapTable._affected_files
+        real_filter = FR.filter_new_urls
+        df_cls = type(spark.range(1))
+
+        def detect(self, *args, **kwargs):
+            detected.append(self.root)
+            return real_detect(self, *args, **kwargs)
+
+        def filter_new(*args, **kwargs):
+            out = real_filter(*args, **kwargs)
+            enqueue_plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        def is_empty(self):
+            is_empty_calls.append(1)
+            return self.limit(1).count() == 0
+
+        # budgets that take each hop in one generation: few generations,
+        # each with a real MERGE, then an empty tick
+        c = Crawl(spark, str(tmp_path_factory.mktemp("prov") / "c"), universe,
+                  10_000_000, budget_multiplier=100, backoff_scale=0.02,
+                  transient_modulus=0)
+        c.seed(universe["raw_docs"].select("doc_id"))
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(SnapTable, "_affected_files", detect)
+            mp.setattr(FR, "filter_new_urls", filter_new)
+            mp.setattr(df_cls, "isEmpty", is_empty)
+            metrics = c.run_bootstrap(max_generations=60, log=None)
+        return c, metrics, detected, enqueue_plans, is_empty_calls
+
+    def test_frontier_merge_never_detects(self, spied):
+        c, metrics, detected, _, _ = spied
+        assert metrics[-1]["scheduled"] == 0  # drained
+        merges = [s for s in c.frontier.history() if s.operation == "merge"]
+        assert len(merges) == sum(1 for m in metrics if m["scheduled"])
+        assert c.frontier.root not in detected
+
+    def test_hop2_enqueue_reads_pinned_format_output(self, spied):
+        _, _, _, plans, _ = spied
+        hop2 = [p for p in plans if "cdn.jsdelivr.net" in p]
+        assert hop2  # the generations that fetched registry docs enqueued hop 2
+        # formatPkg's Arrow pass is the MapInPandas over raw registry JSON
+        # (the synthetic universe's own generators are MapInPandas too)
+        format_nodes = [
+            line for p in hop2 for line in p.splitlines()
+            if "MapInPandas" in line and "raw_json" in line
+        ]
+        assert format_nodes == []
+
+    def test_generation_runs_no_is_empty_action(self, spied):
+        _, metrics, _, _, calls = spied
+        assert any(m["scheduled"] == 0 for m in metrics)  # an empty tick ran
+        assert calls == []
+
+
 class TestGroupCommit:
     """checkpoint_interval > 1: seen appends group-commit at checkpoint
     boundaries (one durable append + one state save per interval) with

@@ -3,11 +3,13 @@ SeenSet: Bloom-prefiltered exact URL dedup."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
 from npm_search_spark.seen import SeenSet
-from npm_search_spark.tables import SnapTable
+from npm_search_spark.tables import SnapTable, source_files
 
 
 class TestSnapTable:
@@ -393,6 +395,127 @@ class TestMergeCopyOnWrite:
         assert len(t.history()) == n_commits_before + 1  # single commit
         got = {r["id"]: r["v"] for r in t.read(spark).collect()}
         assert got == {1: "a", 2: "B", 4: "d"}
+
+
+class TestMergeProvenance:
+    """A MERGE whose sources were read from the table's current snapshot
+    (``read_with_files`` + ``read_at``) rewrites exactly the files those
+    rows came from and runs no detection; the result must be the detection
+    MERGE's, row for row and file for file."""
+
+    SCHEMA = "k string, p double, rev int, v string"
+
+    def _table(self, spark, root):
+        t = SnapTable(root, stats_cols=["k", "p"], cluster_by=["p"])
+        old = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        try:
+            t.overwrite(spark.createDataFrame(
+                [(f"k{i:04d}", float(i % 97), 0, "a") for i in range(400)], self.SCHEMA))
+            t.append(spark.createDataFrame(
+                [(f"k{i:04d}", float(i % 97), 0, "b") for i in range(400, 480)], self.SCHEMA))
+        finally:
+            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old)
+        return t
+
+    @staticmethod
+    def _spy_detection(monkeypatch):
+        calls = []
+        real = SnapTable._affected_files
+
+        def spy(self, *args, **kwargs):
+            calls.append(self.root)
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(SnapTable, "_affected_files", spy)
+        return calls
+
+    @pytest.mark.parametrize("guard", [None, "src.rev >= tgt.rev"])
+    def test_provenance_equals_detection(self, spark, tmp_path, monkeypatch, guard):
+        t = self._table(spark, str(tmp_path / "t"))
+        parent = t.snapshot()
+        assert len(parent.files) >= 3
+        calls = self._spy_detection(monkeypatch)
+        rng = random.Random(7 if guard else 11)
+        for _ in range(2):
+            # a batch in a narrow priority band, like a scheduled batch:
+            # it touches some files and leaves the rest to be carried
+            lo = rng.randrange(80)
+            keys = sorted(rng.sample([i for i in range(480) if lo <= i % 97 < lo + 15], 30))
+            up_ids, del_ids = set(keys[::2]), set(keys[1::2])
+            new_rows = spark.createDataFrame(
+                [(f"n{rng.randrange(10**6):07d}", rng.uniform(0, 100), 1, "new")
+                 for _ in range(5)], self.SCHEMA)
+
+            def sources(df):
+                ups = (
+                    df.where(F.col("k").isin([f"k{i:04d}" for i in up_ids]))
+                    .withColumn("rev", (F.xxhash64("k") % 3).cast("int") - 1)
+                    .withColumn("v", F.concat(F.col("v"), F.lit("!")))
+                    .unionByName(new_rows, allowMissingColumns=True)
+                )
+                dels = df.where(F.col("k").isin([f"k{i:04d}" for i in del_ids]))
+                return ups, dels.drop("rev", "v")  # keys, stats and _file
+
+            def result():
+                snap = t.snapshot()
+                rows = sorted(tuple(r) for r in t.read(spark).collect())
+                return rows, sorted(set(snap.files) & set(parent.files))
+
+            # detection
+            ups, dels = sources(t.read(spark))
+            n = len(calls)
+            t.merge_apply(spark, "k", upserts=ups, delete_keys=dels, guard=guard)
+            assert len(calls) == n + 1
+            detected = result()
+
+            # provenance, files collected from the sources' _file column
+            t.rollback(parent.snapshot_id)
+            df, sid = t.read_with_files(spark)
+            ups, dels = sources(df)
+            t.merge_apply(spark, "k", upserts=ups, delete_keys=dels, guard=guard,
+                          read_at=sid)
+            assert len(calls) == n + 1  # no detection ran
+            assert result() == detected
+
+            # provenance, files given by the caller
+            t.rollback(parent.snapshot_id)
+            df, sid = t.read_with_files(spark)
+            ups, dels = sources(df)
+            files = source_files(
+                r[0] for r in ups.select("_file").union(dels.select("_file")).collect()
+            )
+            t.merge_apply(spark, "k", upserts=ups, delete_keys=dels, guard=guard,
+                          read_at=sid, files=files)
+            assert len(calls) == n + 1
+            assert result() == detected
+            assert detected[1] != sorted(parent.files)  # some files were rewritten
+            assert detected[1]  # and some were carried
+            t.rollback(parent.snapshot_id)
+
+    def test_table_moved_since_read_falls_back_to_detection(
+        self, spark, tmp_path, monkeypatch
+    ):
+        t = self._table(spark, str(tmp_path / "t"))
+        calls = self._spy_detection(monkeypatch)
+        df, sid = t.read_with_files(spark)
+        ups = df.where(F.col("k").isin("k0001", "k0401")).withColumn("v", F.lit("up"))
+        # a writer lands a row whose key the upserts also carry, in a file
+        # the read never saw: only detection can find it
+        t.append(spark.createDataFrame([("k0001", 1.0, 0, "dup")], self.SCHEMA))
+        t.merge_upsert(spark, ups, key="k", read_at=sid)
+        assert calls == [t.root]
+        got = t.read(spark).where(F.col("k").isin("k0001", "k0401")).collect()
+        assert sorted((r["k"], r["v"]) for r in got) == [("k0001", "up"), ("k0401", "up")]
+        assert "_file" not in t.read(spark).columns
+
+        # files outside the current snapshot are not trusted either
+        df, sid = t.read_with_files(spark)
+        t.merge_upsert(spark, df.where(F.col("k") == "k0002").withColumn("v", F.lit("x")),
+                       key="k", read_at=sid, files=["/no/such/file.parquet"])
+        assert calls == [t.root, t.root]
+        assert t.read(spark).where(F.col("k") == "k0002").first()["v"] == "x"
+        assert t.read(spark).count() == 480
 
 
 class TestClusteredWrites:
