@@ -3,18 +3,22 @@
   exact            hash-groupBy on a normalized-content fingerprint
   n-gram Jaccard   inverted-index self-join (explode ngram -> equi-join ->
                    shared/union counting) — the scalable exact method
-  MinHash + LSH    shingles -> grams hashed JVM-side (xxhash64) -> 64-perm
-                   signature + banded buckets in ONE Arrow numpy pass ->
-                   candidate pairs -> exact-Jaccard verification
+  MinHash + LSH    64-perm signature + banded buckets in ONE Arrow numpy
+                   pass -> candidate pairs -> exact-Jaccard verification
   SimHash          tokens hashed JVM-side -> 64-bit bit-vote via segmented
                    numpy sums, near-dup = small Hamming distance in buckets
 
+n-gram Jaccard and MinHash share ONE gram definition and ONE shingling
+pass, ``doc_grams``: word 3-grams of normalized text, hashed to 64 bits in
+a vectorized Arrow pass (no per-row Python, no interpreted Catalyst
+higher-order functions) and pinned so every consumer reads it once.
+
 Scale notes: every method is shuffle-bounded by its join key (fingerprint /
-ngram / band bucket), never all-pairs. The Python boundary only ever sees
-Arrow list<long> buffers (hashes), never strings or per-row calls: string
-hashing stays in codegen, permutation minima are ``np.minimum.reduceat``
-matrix ops. LSH bands turn the quadratic pair search into an equi-join;
-the exact verification joins only candidate pairs.
+ngram / band bucket), never all-pairs. Arrow stages work on whole batches:
+tokens are hashed once per distinct token per task, permutation minima are
+``np.minimum.reduceat`` matrix ops. LSH bands turn the quadratic pair
+search into an equi-join; the exact verification joins only candidate
+pairs.
 """
 
 from __future__ import annotations
@@ -28,37 +32,6 @@ from .textstats import normalize_text
 
 NUM_PERM = 64
 BANDS = 16  # 16 bands x 4 rows: P(candidate | j=0.9) ~ 1 - (1-0.9^4)^16 ~ 0.999
-
-
-def word_ngrams(text, n: int = 3):
-    toks = F.filter(F.split(normalize_text(text), " "), lambda t: t != "")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def word_ngram_hashes(text, n: int = 3):
-    """array<long> of distinct word-n-gram hashes — the join/Jaccard
-    currency of every dedup operator here.
-
-    Each token is xxhash64'd once, then a gram is the hash of its n-token
-    hash slice — no n-gram *strings* are ever materialized (n-gram string
-    building is O(text x n) allocation and was the single hottest stage of
-    the pipeline). Set relations are preserved modulo 64-bit collisions:
-    distinct grams <-> distinct hashes, so Jaccard over hash sets equals
-    Jaccard over string sets and the DuckDB string-gram oracle still
-    matches."""
-    toks = F.filter(F.split(normalize_text(text), " "), lambda t: t != "")
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    idx = F.sequence(F.lit(0), F.greatest(F.size(th) - n, F.lit(0)))
-    return F.when(
-        F.size(th) >= n,
-        F.array_distinct(F.transform(idx, lambda i: F.xxhash64(F.slice(th, i + 1, n)))),
-    ).otherwise(F.array(F.xxhash64(th)))
 
 
 # ---------------------------------------------------------------------------
@@ -122,7 +95,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """All pairs (a < b) with ngram-Jaccard >= threshold.
     Inverted-index join: |pairs considered| = sum over ngrams of df^2 —
-    bounded by content overlap, not n^2.
+    bounded by content overlap, not n^2. Grams come from ``doc_grams``,
+    the pinned Arrow pass MinHash reads too; every consumer below (index,
+    stop-gram count, verification) reads it without re-shingling.
 
     ``max_df`` prunes posting lists longer than max_df documents before the
     self-join: a universally-common gram otherwise makes the equi-join
@@ -131,14 +106,7 @@ def ngram_jaccard_pairs(
     sets (array_intersect), so reported jaccard is exact and a pair is
     missed only if EVERY gram it shares is a stop-gram (df > max_df). The
     default (None) stays exact so the DuckDB oracle matches bit-for-bit."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        # under-partitioned input (small files): fan out so the whole
-        # cluster runs the CPU-heavy gram expression; a no-op at real scale
-        df = df.repartition(sc.defaultParallelism)
-    grams = df.select(
-        F.col("doc_id"), word_ngram_hashes(F.col(text_col), n).alias("grams")
-    ).withColumn("n_grams", F.size("grams"))
+    grams = doc_grams(df, n, text_col).withColumn("n_grams", F.size("grams"))
     inv = grams.select("doc_id", "n_grams", F.explode("grams").alias("gram"))
     if max_df is not None:
         rare = inv.groupBy("gram").count().where(F.col("count") <= max_df).select("gram")
@@ -221,8 +189,9 @@ def ngram_jaccard_pairs_at_scale(
 
 
 def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
-    """(doc_id, grams) materialized once — both the signature stage and the
-    exact-Jaccard verification consume it.
+    """(doc_id, grams) materialized once — the gram source of n-gram
+    Jaccard (index, stop-gram count, verification) and of MinHash
+    (signature stage, verification).
 
     One Arrow pass replaces the Catalyst higher-order-function expression
     (transform/filter/slice are interpreted, not codegen'd — they were the
@@ -238,7 +207,15 @@ def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     If the input arrives in fewer partitions than the cluster has cores
     (small files), fan it out first so the whole cluster shingles — at real
     scale the input already has more partitions than cores and this is a
-    no-op."""
+    no-op.
+
+    The pin is eager: the Arrow pass runs as one job here, before any
+    consumer plan exists. A lazy pin is truncated at the end of whichever
+    consumer job finishes first, while sibling stages of the same query
+    (the other side of a join, the LSH groupBy) may still run tasks of the
+    old lineage; their metric updates then reach accumulators that were
+    already unregistered (DAGScheduler "Failed to update accumulator"
+    errors)."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)
@@ -357,28 +334,23 @@ def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     return (
         df.select("doc_id", text_col)
         .mapInArrow(grams_of, schema=f"doc_id {id_type}, grams array<bigint>")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
 
 
 def minhash_band_buckets(grams_df: DataFrame, num_perm: int = NUM_PERM, bands: int = BANDS) -> DataFrame:
     """(doc_id, band, bucket) in one Arrow-vectorized pass.
 
-    Grams are hashed once JVM-side (xxhash64 inside a transform — codegen);
-    the NUM_PERM permutation minima are then a numpy matrix op over the
-    Arrow list buffers (segmented min via ``np.minimum.reduceat`` on the
-    flattened values — no per-row Python, no 64x Catalyst expression
-    blowup, which cost ~10x the rest of the query battery), and the band
-    buckets fold signature rows with a splitmix64-style mixer. Output is
-    exploded to BANDS rows per doc for the equi-join."""
+    ``grams_df`` is ``doc_grams`` output: grams arrive as 64-bit hashes
+    from its Arrow pass. The NUM_PERM permutation minima are a numpy
+    matrix op over the Arrow list buffers (segmented min via
+    ``np.minimum.reduceat`` on the flattened values — no per-row Python,
+    no 64x Catalyst expression blowup, which cost ~10x the rest of the
+    query battery), and the band buckets fold signature rows with a
+    splitmix64-style mixer. Output is exploded to BANDS rows per doc for
+    the equi-join."""
     rows = num_perm // bands
-    gtype = grams_df.schema["grams"].dataType.elementType.simpleString()
-    if gtype == "bigint":
-        hashed = grams_df.select("doc_id", F.col("grams").alias("gh"))
-    else:  # hash arbitrary gram types once, JVM-side
-        hashed = grams_df.select(
-            "doc_id", F.transform("grams", lambda g: F.xxhash64(g)).alias("gh")
-        )
+    hashed = grams_df.select("doc_id", F.col("grams").alias("gh"))
     id_type = hashed.schema["doc_id"].dataType.simpleString()
 
     def sigs(batches):
@@ -436,8 +408,7 @@ def minhash_lsh_candidates(
     """Candidate pairs sharing at least one LSH band bucket."""
     if grams is None:
         grams = doc_grams(df, n, text_col)
-    # materialized: the self-join below must not run the signature stage
-    # once per side
+    # unpinned: the signature stage has one consumer, the groupBy below
     bands = minhash_band_buckets(grams)
     # r6: one shuffle instead of two — the previous shape self-joined the
     # band table (each side shuffled + sorted O(docs x bands) rows); this
@@ -473,10 +444,9 @@ def minhash_lsh_dedup_pairs(
     df: DataFrame, threshold: float = 0.9, n: int = 3, text_col: str = "text"
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard — final near-dup pairs."""
-    # pinned: grams feed three consumers (the signature stage and both
-    # sides of the verify join) — without the checkpoint the tokenize +
-    # hash expression tree re-executes once per consumer
-    grams = doc_grams(df, n, text_col).localCheckpoint(eager=False)
+    # grams feed three consumers (the signature stage and both sides of
+    # the verify join); doc_grams pins them, so the Arrow pass runs once
+    grams = doc_grams(df, n, text_col)
     cands = minhash_lsh_candidates(df, n, text_col, grams=grams)
     ga = grams.select(
         F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"),

@@ -3,6 +3,10 @@ recall vs brute force, multimodal plumbing shapes."""
 
 from __future__ import annotations
 
+import itertools
+import random
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +29,49 @@ def near_dup_docs(spark):
         (5, "another unrelated text mentioning catalysts and tungsten engines"),
     ]
     return spark.createDataFrame(rows, DOC_SCHEMA)
+
+
+def _reference_corpus() -> list[tuple[int, str]]:
+    """Docs with planted near-duplicates, docs under 3 tokens, runs of
+    mixed whitespace and upper case."""
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(40)] + ["Alpha", "BETA", "gamma", "Delta"]
+    seps = [" ", "  ", "\t", "\n", " \t\n ", "\r\n"]
+
+    def spaced(words):
+        lead, trail = rng.choice(["", " ", "\t", "\n "]), rng.choice(["", " ", "\n", "\t "])
+        return lead + "".join(w + rng.choice(seps) for w in words[:-1]) + words[-1] + trail
+
+    rows: list[tuple[int, str]] = []
+    for _ in range(8):
+        words = [rng.choice(vocab) for _ in range(rng.randint(12, 30))]
+        rows.append((len(rows) + 1, " ".join(words)))
+        rows.append((len(rows) + 1, spaced([w.upper() for w in words])))  # same grams
+        near = list(words)
+        near[rng.randrange(len(near))] = "changed"
+        rows.append((len(rows) + 1, spaced(near)))
+        rows.append((len(rows) + 1, spaced(words[: len(words) * 2 // 3])))
+    for text in ["Hello", "hello", "hello  World", "HELLO\tworld\n", "x y",
+                 "", "   ", "\t\n", "one two three", "ONE\n\ntwo   three "]:
+        rows.append((len(rows) + 1, text))
+    return rows
+
+
+def _string_gram_pairs(rows, threshold: float, n: int = 3) -> dict:
+    """Pure-Python twin of the DuckDB oracle's gram definition: normalize,
+    split, distinct n-grams joined by ' ' (one gram of all tokens for docs
+    under n tokens), rounded Jaccard over the string sets."""
+    grams = {}
+    for doc_id, text in rows:
+        toks = [t for t in re.sub(r"\s+", " ", text.lower()).strip().split(" ") if t]
+        grams[doc_id] = {" ".join(toks[i : i + n]) for i in range(max(len(toks) - n, 0) + 1)}
+    out = {}
+    for a, b in itertools.combinations(sorted(grams), 2):
+        shared = len(grams[a] & grams[b])
+        j = round(shared / (len(grams[a]) + len(grams[b]) - shared), 6)
+        if j >= threshold:
+            out[(a, b)] = j
+    return out
 
 
 class TestDedup:
@@ -119,6 +166,50 @@ class TestDedup:
         assert got[3] == ref[3]
         # null/empty/whitespace docs all collapse to the same empty-fold gram
         assert got[2] == got[4] == got[5] == got[6] == got[7]
+
+    @pytest.mark.parametrize("threshold", [0.8, 0.3])
+    def test_ngram_jaccard_matches_string_gram_reference(self, spark, threshold):
+        """The Arrow hash-gram pass gives the oracle's string-gram pairs,
+        row for row, in exact mode and with a stop-gram cap above every
+        document frequency; MinHash's verified pairs are a subset carrying
+        the same jaccard."""
+        from npm_search_spark.pipeline.dedup import (
+            minhash_lsh_dedup_pairs,
+            ngram_jaccard_pairs,
+        )
+
+        rows = _reference_corpus()
+        df = spark.createDataFrame(rows, DOC_SCHEMA)
+        want = _string_gram_pairs(rows, threshold)
+        assert len(want) >= 10  # planted pairs exist at both thresholds
+
+        def pairs(out):
+            return {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in out.collect()}
+
+        assert pairs(ngram_jaccard_pairs(df, threshold)) == want
+        assert pairs(ngram_jaccard_pairs(df, threshold, max_df=len(rows))) == want
+        mh = pairs(minhash_lsh_dedup_pairs(df, threshold))
+        assert mh and all(want[p] == j for p, j in mh.items())
+
+    @pytest.mark.parametrize("max_df", [None, 3])
+    def test_ngram_jaccard_reads_one_gram_pass(self, spark, near_dup_docs, monkeypatch, max_df):
+        """n-gram Jaccard takes its grams from exactly one ``doc_grams``
+        call (the pinned Arrow pass MinHash reads), and no interpreted
+        higher-order-function gram expression is left in its plan."""
+        from npm_search_spark.pipeline import dedup as D
+
+        calls: list[int] = []
+        real = D.doc_grams
+
+        def spy(*args, **kwargs):
+            calls.append(1)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(D, "doc_grams", spy)
+        out = D.ngram_jaccard_pairs(near_dup_docs, threshold=0.5, max_df=max_df)
+        assert len(calls) == 1
+        analyzed = out._jdf.queryExecution().analyzed().toString()
+        assert "lambdafunction" not in analyzed
 
     def test_minhash_lsh_finds_exact_and_near(self, spark, near_dup_docs):
         from npm_search_spark.pipeline.dedup import minhash_lsh_dedup_pairs
