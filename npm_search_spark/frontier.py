@@ -16,11 +16,12 @@ as a generation loop of pure DataFrame stages over SnapTables:
              snapshot ids, metrics, per-partition lineage
 
 Scale design (10^10 frontier):
-- Politeness top-k is a distributed exact top-k (range-partitioned sort +
-  driver-side prefix offsets + budget-pruned ranking) — the frontier has
-  only ~5 hosts, so a naive per-host window would funnel 10^10 rows
-  through ~5 tasks; the range shuffle spreads each hot host across the
-  whole cluster (the explicit skew handling the north rule demands).
+- Politeness top-k is a distributed exact threshold top-k (per-host
+  priority histograms collected to the driver, then a narrow filter of
+  pending plus a window over one boundary bin per host) — the frontier
+  has only ~5 hosts, so a naive per-host window would funnel 10^10 rows
+  through ~5 tasks; pending is scanned but never shuffled (the explicit
+  skew handling the north rule demands).
 - After seeding, the frontier table is only ever touched via pending-state
   filters (pruned parquet scans), file-granular MERGE of the scheduled
   batch (plan-asserted: no generation rewrites the whole table), appends
@@ -81,15 +82,6 @@ def backoff_seconds(retries_col):
     return F.least(F.pow(retries_col + 1, 3), F.lit(BACKOFF_CAP_S)).cast("long")
 
 
-# historical auto-dispatch threshold (small budgets -> Arrow partial
-# top-k). Retired in round 5: the pure-JVM histogram threshold top-k beats
-# the Arrow pass at EVERY budget size once the boundary window is guarded
-# (measured pinned at 32M rows: histogram 12.2 s @2 cores / 3.7 s @8 vs
-# thin-Arrow partial 20.2 / 9.4 — and it scales at 0.83 vs 0.54, because
-# codegen hash-aggs stay on the JVM side of the Arrow IPC boundary).
-# `strategy="partial"` remains available explicitly.
-SMALL_BUDGET_MAX = 2048
-
 # steady-state crawls reuse the histogram scheduler's per-host priority
 # bounds across generations (skipping its per-host stats job); every this
 # many generations the hints are dropped and re-derived — stale hints stay
@@ -103,55 +95,37 @@ def politeness_schedule(
     default_budget: int = 6,
     budget_multiplier: int = 1,
     n_partitions: int | None = None,
-    strategy: str = "auto",
     hist_hints: dict[str, tuple[float, float]] | None = None,
     hist_counts: dict[str, dict[int, int]] | None = None,
 ) -> DataFrame:
     """Exact top-budget rows per host under (priority DESC, url ASC) — the
-    T7 politeness-bucket operator. ``hist_hints`` (histogram strategy
-    only): per-host priority bounds from a previous tick — skips the
-    stats scan while staying exact. ``hist_counts`` (histogram strategy
-    only, requires hist_hints): the previous tick's carried bin-count
-    ledger — skips the histogram scan too, so a steady-state tick runs
-    ONE pending scan (see _schedule_histogram_topk).
+    T7 politeness-bucket operator — as a histogram threshold top-k.
 
     Scale design: a naive Window.partitionBy(host) funnels each hot host's
     entire pending set (10^9+ rows for 3 structurally hot hosts) through a
-    single partition — the frontier's skew problem. Three exact
-    strategies; ``auto`` picks ``histogram`` at every budget size (pure
-    JVM codegen — measured both faster and better-scaling than the Arrow
-    partial pass at small AND huge budgets; see SMALL_BUDGET_MAX note):
+    single partition — the frontier's skew problem. Instead, two tiny
+    agg-collect scans (per-host count/min/max, then a per-host priority
+    histogram) let the driver compute, per host, the exact priority bin
+    where the budget boundary falls. Winners are then a narrow FILTER of
+    pending (bins above the boundary) plus an exact window over the one
+    boundary bin (~count/n_bins rows) — the 10^10-row pending set is
+    scanned but NEVER shuffled. Pure JVM codegen throughout: an earlier
+    Arrow top-k pass measured slower (32M rows: 20.2 s vs 12.2 s @2 cores)
+    and scaled worse (0.54 vs 0.83).
 
-    - ``partial`` (explicit alternative): per-partition top-budget
-      priorities per host via one THIN Arrow pass shipping only (host,
-      priority) — never urls — then an exact boundary carve from one
-      narrow JVM filter of pending. No shuffle of pending; see
-      _schedule_partial_topk.
-    - ``histogram`` (the auto default): a threshold top-k. Two tiny
-      agg-collect scans (per-host count/min/max, then a per-host priority
-      histogram) let the driver compute, per host, the exact priority bin
-      where the budget boundary falls. Winners are then a narrow FILTER
-      of pending (bin above threshold) plus an exact window over the one
-      boundary bin (~count/n_bins rows) — the 10^10-row pending set is
-      scanned but NEVER shuffled. Degenerate priority distributions
-      (boundary bin too big, e.g. massively duplicated priorities) fall
-      back to ``range`` on the boundary subset only.
-    - ``range`` (explicit fallback for huge budgets):
-      1. repartitionByRange on (host, priority DESC, url) — a parallel
-         global sort; each host occupies a contiguous partition run
-         (spreading hot hosts across the cluster — the explicit skew
-         handling the north rule demands);
-      2. per-(partition, host) counts collected to the driver (tiny);
-         cumulative offsets prune every partition past the budget;
-      3. exact row_number + offset = global rank, filtered to the budget.
-      The ranged set is persisted spill-able (MEMORY_AND_DISK — lineage
-      retained, so an executor loss recomputes instead of killing the job)
-      only for the duration of the call: the O(budget) winner set is
-      checkpointed and the O(pending) storage released before returning.
+    Degenerate-boundary guard: a boundary bin above HIST_BOUNDARY_CAP rows
+    (massively duplicated priorities) would make that window a single-task
+    sort, so those bins alone are ranked by a range-partitioned sort
+    (_schedule_range_topk) over the checkpointed boundary rows.
 
-    Both return the exact top-budget per host under (priority DESC,
-    url ASC), independent of input partitioning — deterministic replay
-    (ties broken by url)."""
+    ``hist_hints``: per-host priority bounds from a previous tick — skips
+    the stats scan while staying exact. ``hist_counts`` (requires
+    hist_hints): the previous tick's carried bin-count ledger — skips the
+    histogram scan too, so a steady-state tick runs ONE pending scan (see
+    _schedule_histogram_topk).
+
+    The result is the exact top-budget per host, independent of input
+    partitioning — deterministic replay (ties broken by url)."""
     # None -> the reference's per-host budgets; an explicit {} means "no
     # per-host overrides, default_budget for every host" (an `or` here
     # would silently turn {} into DEFAULT_BUDGETS)
@@ -160,231 +134,14 @@ def politeness_schedule(
     def host_budget(host: str) -> int:
         return budgets.get(host, default_budget) * budget_multiplier
 
-    if strategy == "auto":
-        # the JVM threshold top-k wins at every budget size (see
-        # SMALL_BUDGET_MAX note); partial/range stay available explicitly
-        strategy = "histogram"
-    if strategy == "partial":
-        return _schedule_partial_topk(pending, budgets, default_budget, budget_multiplier)
-    if strategy == "histogram":
-        return _schedule_histogram_topk(
-            pending, budgets, default_budget, budget_multiplier, n_partitions,
-            host_budget, hist_hints=hist_hints, hist_counts=hist_counts,
-        )
-    return _schedule_range_topk(
-        pending, budgets, default_budget, budget_multiplier, n_partitions, host_budget
+    return _schedule_histogram_topk(
+        pending, host_budget, n_partitions,
+        hist_hints=hist_hints, hist_counts=hist_counts,
     )
 
 
-def _budget_col(budgets: dict[str, int], default_budget: int, budget_multiplier: int):
-    if not budgets:
-        # create_map() with zero entries types its value side VOID and the
-        # lookup fails analysis — an empty budget table is just the default
-        return F.lit(default_budget * budget_multiplier)
-    budget_map = F.create_map(*[F.lit(x) for kv in budgets.items() for x in kv])
-    return (
-        F.coalesce(budget_map[F.col("host")], F.lit(default_budget))
-        * budget_multiplier
-    )
-
-
-def _schedule_partial_topk(
-    pending: DataFrame,
-    budgets: dict[str, int],
-    default_budget: int,
-    budget_multiplier: int,
-) -> DataFrame:
-    """Shuffle-free exact top-k via a boundary-priority threshold.
-
-    The Arrow pass ships ONLY (host, priority) — 8 B of priority plus the
-    host bytes per row, never the ~60-80 B url string the previous shape
-    paid per row of the 10^10-row pending set (the per-pass cpu inflation
-    that capped the N->4N probe efficiency was Arrow-IPC bandwidth). The
-    per-partition top-budget priorities per host are a superset of the
-    global top-budget multiset, so the survivor window yields, per host,
-    the EXACT boundary value p_B (the budget-th largest priority) and the
-    exact count of rows strictly above it. Winners are then carved from
-    ONE narrow JVM filter of pending (`priority >= p_B`, broadcast-joined
-    per-host params — no shuffle of pending, no join-back on url):
-    definite winners sit strictly above p_B; the remaining slots go to the
-    boundary-tied rows (priority == p_B) under url ASC — same total order
-    (priority DESC NULLS LAST, url ASC), deterministic replay.
-
-    Degenerate boundary ties (a host with a huge number of rows at exactly
-    p_B — e.g. quantized priorities) are detected from the checkpointed
-    candidate set and that host's boundary is ranked via the range
-    strategy instead of a single-task window. NaN priorities are treated
-    as NULL (sorted last), matching the previous Arrow/pandas behavior.
-
-    The result carries ``scheduled_count`` (exact, known driver-side).
-    Driver-side state is O(hosts x budget) survivor values + O(hosts)
-    boundary params — the same order as the winner set itself."""
-    bmap = dict(budgets)
-    mult = budget_multiplier
-    dflt = default_budget
-
-    def host_budget(h: str) -> int:
-        return bmap.get(h, dflt) * mult
-
-    def partial_topk(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        # host -> accumulated priority ndarrays (NaN == null), truncated to
-        # the host's top-b whenever the buffer grows past 4x the budget so
-        # per-task memory stays O(hosts x budget)
-        acc: dict[str, list[np.ndarray]] = {}
-        acc_n: dict[str, int] = {}
-
-        def top_b(vals: np.ndarray, b: int) -> np.ndarray:
-            if len(vals) <= b:
-                return vals
-            nn = vals[~np.isnan(vals)]
-            if len(nn) >= b:
-                return np.partition(nn, len(nn) - b)[len(nn) - b:]
-            out = np.empty(b, dtype=np.float64)
-            out[: len(nn)] = nn
-            out[len(nn):] = np.nan  # nulls fill the remaining slots
-            return out
-
-        for batch in batches:
-            pri = batch.column("priority").to_numpy(zero_copy_only=False)
-            enc = batch.column("host").dictionary_encode()
-            idx = enc.indices.to_numpy(zero_copy_only=False)
-            names = enc.dictionary.to_pylist()
-            order = np.argsort(idx, kind="stable")
-            sidx = idx[order]
-            spri = pri[order]
-            uniq, starts = np.unique(sidx, return_index=True)
-            starts = np.append(starts, len(sidx))
-            for u, s, e in zip(uniq, starts[:-1], starts[1:]):
-                h = names[u]
-                b = host_budget(h)
-                chunk = spri[s:e]
-                acc.setdefault(h, []).append(chunk)
-                acc_n[h] = acc_n.get(h, 0) + len(chunk)
-                if acc_n[h] > 4 * b:
-                    merged = top_b(np.concatenate(acc[h]), b)
-                    acc[h] = [merged]
-                    acc_n[h] = len(merged)
-        if acc:
-            hosts_out: list[str] = []
-            vals_out: list[np.ndarray] = []
-            for h, chunks in acc.items():
-                vals = top_b(np.concatenate(chunks), host_budget(h))
-                hosts_out.extend([h] * len(vals))
-                vals_out.append(vals)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(hosts_out, type=pa.string()),
-                    # from_pandas=True maps NaN back to null
-                    pa.array(np.concatenate(vals_out), from_pandas=True),
-                ],
-                names=["host", "priority"],
-            )
-
-    spark = pending.sparkSession
-    survivors = pending.select("host", "priority").mapInArrow(
-        partial_topk, schema="host string, priority double"
-    )
-    # exact global top-b priorities per host: tiny window over the
-    # O(partitions x hosts x budget) survivors, O(hosts x budget) collected
-    w = Window.partitionBy("host").orderBy(F.col("priority").desc_nulls_last())
-    top = (
-        survivors.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= _budget_col(budgets, dflt, mult))
-        .select("host", "priority")
-        .toArrow()
-    )
-    if top.num_rows == 0:
-        out = pending.limit(0)
-        out.scheduled_count = 0
-        return out
-    by_host: dict[str, list] = {}
-    for h, p in zip(top.column("host").to_pylist(), top.column("priority").to_pylist()):
-        by_host.setdefault(h, []).append(p)
-    # params per host: take-all | (boundary value p_B, remaining slots)
-    params_rows: list[tuple[str, bool, float | None, bool, int]] = []
-    n_winners = 0
-    for h, vals in by_host.items():
-        b = host_budget(h)
-        vals.sort(key=lambda v: (v is None, -(v if v is not None else 0.0)))
-        if len(vals) < b:
-            # survivors < b means the host's total pending < b: take all
-            params_rows.append((h, True, None, False, 0))
-            n_winners += len(vals)
-            continue
-        p_b = vals[b - 1]
-        if p_b is None:
-            c_above = sum(1 for v in vals[:b] if v is not None)
-        else:
-            c_above = 0
-            while c_above < b and vals[c_above] is not None and vals[c_above] > p_b:
-                c_above += 1
-        params_rows.append((h, False, p_b, p_b is None, b - c_above))
-        n_winners += b
-    params = spark.createDataFrame(
-        params_rows, "host string, _ta boolean, _pbv double, _pbnull boolean, _rem long"
-    )
-    is_cand = (
-        F.col("_ta")
-        | F.col("_pbnull")  # boundary is the NULL-priority tail: keep all rows
-        | (F.col("priority") >= F.col("_pbv"))
-    )
-    cand = (
-        pending.join(F.broadcast(params), "host", "inner")
-        .where(is_cand)
-        .localCheckpoint(eager=True)
-    )
-    helper_cols = ["_ta", "_pbv", "_pbnull", "_rem"]
-    is_boundary = ~F.col("_ta") & (
-        F.when(F.col("_pbnull"), F.col("priority").isNull())
-        .otherwise(F.col("priority") == F.col("_pbv"))
-    )
-    definite = cand.where(~is_boundary).drop(*helper_cols)
-    bdry_all = cand.where(is_boundary)
-    # degenerate-tie guard: a host with a huge boundary tie set would make
-    # the per-host window a single-task sort — route it through the range
-    # strategy on its (already checkpointed) boundary subset instead
-    bstats = {
-        r["host"]: r["count"]
-        for r in bdry_all.groupBy("host").count().collect()
-    }
-    remaining = {h: rem for (h, ta, _pb, _pn, rem) in params_rows if not ta}
-    small_hosts = [h for h, c in bstats.items() if c <= HIST_BOUNDARY_CAP]
-    big_hosts = [h for h, c in bstats.items() if c > HIST_BOUNDARY_CAP]
-    parts = [definite]
-    if small_hosts:
-        bdry = bdry_all if not big_hosts else _host_subset(bdry_all, small_hosts)
-        w2 = Window.partitionBy("host").orderBy(F.asc("url"))
-        parts.append(
-            bdry.withColumn("_rn2", F.row_number().over(w2))
-            .where(F.col("_rn2") <= F.col("_rem"))
-            .drop("_rn2", *helper_cols)
-        )
-    if big_hosts:
-        parts.append(
-            _schedule_range_topk(
-                _host_subset(bdry_all, big_hosts).drop(*helper_cols),
-                {h: remaining[h] for h in big_hosts},
-                0,
-                1,
-                None,
-                lambda h: remaining.get(h, 0),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.select(*pending.columns)
-    out.scheduled_count = n_winners
-    # plan handles for tests: the thin Arrow scan and the no-shuffle carve
-    out._partial_debug = {"survivors": survivors, "candidates_source": params}
-    return out
-
-
-# a boundary bin larger than this per host falls back to the range
-# strategy for that bin (window funnel guard — one task sorts the bin)
+# a host's boundary bin larger than this is ranked by the range-sorted
+# fallback instead of a window (funnel guard — one task sorts the bin)
 HIST_BOUNDARY_CAP = 262_144
 HIST_N_BINS = 4096
 # above this many hosts the histogram scheduler stops embedding per-host
@@ -404,33 +161,37 @@ def _host_subset(df: DataFrame, hosts) -> DataFrame:
     return df.join(F.broadcast(hdf), "host", "left_semi")
 
 
-def histogram_bin_expr(
-    bounds: dict[str, tuple[float, float]], n_bins: int = HIST_N_BINS
-):
-    """The histogram strategy's per-host priority->bin expression for a
-    given bounds table — exposed so a caller can reason about the winner
-    set in bin space (e.g. the drain retires scheduled rows by threshold
-    predicate instead of materializing an anti-join)."""
-    mn_map = F.create_map(*[F.lit(x) for hh, (mn, _) in bounds.items() for x in (hh, mn)])
-    width_map = F.create_map(
-        *[
-            F.lit(x)
-            for hh, (mn, mx) in bounds.items()
-            for x in (hh, max((mx - mn) / n_bins, 1e-12))
-        ]
-    )
-    h = F.col("host")
-    # Spark's `least` SKIPS nulls, so clamping a null floor with
-    # least(floor, n_bins-1) would silently return n_bins-1 for a host
-    # absent from `bounds` — gate on the null floor explicitly so unknown
-    # hosts yield a NULL bin and route through the stats-first path.
+_INT_MIN = -(2**31)
+
+
+def _bin_width(mn: float, mx: float, n_bins: int) -> float:
+    return max((mx - mn) / n_bins, 1e-12)
+
+
+def _priority_bin(mn, width, n_bins: int):
+    """The one definition of the per-host priority->bin formula, given the
+    host's bin origin ``mn`` and ``width`` as columns (literal-map lookups
+    or broadcast-joined columns). NULL priorities coalesce to the host
+    minimum (bin 0), where the boundary window's (priority DESC NULLS
+    LAST, url) order handles them exactly. Spark's `least` SKIPS nulls, so clamping a null floor
+    with least(floor, n_bins-1) would silently return n_bins-1 for a host
+    with no bounds — gate on the null origin explicitly so unknown hosts
+    yield a NULL bin and route through the stats-first path.
+
+    The floor is clamped below at the int minimum: a row far under a
+    stale, near-zero-width hint (a host whose priorities were all equal)
+    would otherwise overflow the ANSI int cast and fail the job. The
+    optimizer can also evaluate a host-specialized copy of this formula
+    on other hosts' rows (constraints inferred through the checkpointed
+    candidates, ahead of the host filter). Clamping keeps the bin
+    monotone in priority, so the top-k stays exact."""
     return (
-        F.when(mn_map[h].isNull(), F.lit(None))
+        F.when(mn.isNull(), F.lit(None))
         .otherwise(
             F.least(
-                F.floor(
-                    (F.coalesce(F.col("priority"), mn_map[h]) - mn_map[h])
-                    / width_map[h]
+                F.greatest(
+                    F.floor((F.coalesce(F.col("priority"), mn) - mn) / width),
+                    F.lit(_INT_MIN),
                 ),
                 F.lit(n_bins - 1),
             )
@@ -439,14 +200,31 @@ def histogram_bin_expr(
     )
 
 
+def histogram_bin_expr(
+    bounds: dict[str, tuple[float, float]], n_bins: int = HIST_N_BINS
+):
+    """The scheduler's per-host priority->bin expression for a given bounds
+    table, with the bounds embedded as literal maps — exposed so a caller
+    can reason about the winner set in bin space (e.g. the drain retires
+    scheduled rows by threshold predicate instead of materializing an
+    anti-join)."""
+    mn_map = F.create_map(*[F.lit(x) for hh, (mn, _) in bounds.items() for x in (hh, mn)])
+    width_map = F.create_map(
+        *[
+            F.lit(x)
+            for hh, (mn, mx) in bounds.items()
+            for x in (hh, _bin_width(mn, mx, n_bins))
+        ]
+    )
+    h = F.col("host")
+    return _priority_bin(mn_map[h], width_map[h], n_bins)
+
+
 def _schedule_histogram_topk(
     pending: DataFrame,
-    budgets: dict[str, int],
-    default_budget: int,
-    budget_multiplier: int,
-    n_partitions: int | None,
     host_budget,
-    n_bins: int = 4096,
+    n_partitions: int | None,
+    n_bins: int = HIST_N_BINS,
     hist_hints: dict[str, tuple[float, float]] | None = None,
     hist_counts: dict[str, dict[int, int]] | None = None,
 ) -> DataFrame:
@@ -457,11 +235,13 @@ def _schedule_histogram_topk(
     bins — O(hosts x n_bins) rows. The driver walks each histogram from the
     top to find the boundary bin B: every row in a bin above B is a definite
     winner; the remaining (budget - definite) winners are the exact top of
-    bin B under (priority DESC, url ASC). The returned plan is a narrow
-    filter (definite) unioned with a tiny window over bin B — the pending
-    set is scanned, never shuffled or materialized. Bin membership is
-    decided by the same expression in both the histogram job and the final
-    plan, so float edge cases cannot misclassify a row across the two.
+    bin B under (priority DESC, url ASC). One narrow filter of pending
+    checkpoints the candidates (bins >= B); the winners are the definite
+    rows unioned with a tiny window over bin B, both carved from that
+    checkpoint — the pending set is scanned, never shuffled. Bin
+    membership is decided by the same expression (_priority_bin) in both
+    the histogram job and the final plan, so float edge cases cannot
+    misclassify a row across the two.
 
     ``hist_hints`` {host: (priority_min, priority_max)} skips job 1: a
     steady-state caller (the generation loop) reuses the previous tick's
@@ -522,21 +302,19 @@ def _schedule_histogram_topk(
         take_all, take_all_n, need = [], {}, None
         bounds = dict(hist_hints)
 
-    # per-host uniform bin assignment (shared by the histogram job and the
-    # final plan). NULL priorities sort last under DESC in every strategy;
-    # coalescing to the host minimum puts them in bin 0 where the boundary
-    # window's (priority DESC NULLS LAST, url) order handles them exactly.
-    # Host-cardinality guard: a handful of hosts embeds the params as
-    # create_map literals (no join in the plan at all); above
-    # HIST_MAP_MAX_HOSTS the same classification runs off a broadcast-joined
-    # host-params frame so the plan stays bounded at unbounded cardinality.
+    # per-host uniform bin assignment (_priority_bin, shared by the
+    # histogram job and the final plan). Host-cardinality guard: a handful
+    # of hosts embeds the params as create_map literals (no join in the
+    # plan at all); above HIST_MAP_MAX_HOSTS the same classification runs
+    # off a broadcast-joined host-params frame so the plan stays bounded at
+    # unbounded cardinality.
     h = F.col("host")
     spark = pending.sparkSession
     many_hosts = len(bounds) > HIST_MAP_MAX_HOSTS
     if many_hosts:
         params = spark.createDataFrame(
             [
-                (hh, mn, max((mx - mn) / n_bins, 1e-12))
+                (hh, mn, _bin_width(mn, mx, n_bins))
                 for hh, (mn, mx) in bounds.items()
             ],
             "host string, _mn double, _width double",
@@ -545,18 +323,7 @@ def _schedule_histogram_topk(
         def with_bin(df: DataFrame) -> DataFrame:
             j = df.join(F.broadcast(params), "host", "left")
             return j.withColumn(
-                "_bin",
-                F.when(F.col("_mn").isNull(), F.lit(None))
-                .otherwise(
-                    F.least(
-                        F.floor(
-                            (F.coalesce(F.col("priority"), F.col("_mn")) - F.col("_mn"))
-                            / F.col("_width")
-                        ),
-                        F.lit(n_bins - 1),
-                    )
-                )
-                .cast("int"),
+                "_bin", _priority_bin(F.col("_mn"), F.col("_width"), n_bins)
             ).drop("_mn", "_width")
 
     else:
@@ -674,8 +441,8 @@ def _schedule_histogram_topk(
     # the boundary bins: exact top-(remaining) per host. Tiny by
     # construction (~count/n_bins rows per host); hosts whose boundary bin
     # degenerated (massively duplicated priorities) go through the
-    # range strategy instead of a single-task window. Both carve from the
-    # checkpointed candidates — never from pending.
+    # range-sorted fallback instead of a single-task window. Both carve
+    # from the checkpointed candidates — never from pending.
     bdry_all = cand.where(F.col("_bin") == F.col("_thr"))
     small_hosts = [hh for hh in need_hosts if boundary_n[hh] <= HIST_BOUNDARY_CAP]
     big_hosts = [hh for hh in need_hosts if boundary_n[hh] > HIST_BOUNDARY_CAP]
@@ -689,15 +456,11 @@ def _schedule_histogram_topk(
             .drop("_hrank", *helper_cols)
         )
     if big_hosts:
-        bdry_big = _host_subset(bdry_all, big_hosts).drop(*helper_cols)
         parts.append(
             _schedule_range_topk(
-                bdry_big,
+                _host_subset(bdry_all, big_hosts).drop(*helper_cols),
                 {hh: remaining[hh] for hh in big_hosts},
-                0,
-                1,
                 n_partitions,
-                lambda hh: remaining.get(hh, 0),
             )
         )
     n_unknown = 0
@@ -705,13 +468,7 @@ def _schedule_histogram_topk(
         # hosts the hints didn't cover: schedule them through the
         # stats-first path on their (tiny) subset
         sub = _schedule_histogram_topk(
-            _host_subset(pending, sorted(unknown)),
-            budgets,
-            default_budget,
-            budget_multiplier,
-            n_partitions,
-            host_budget,
-            n_bins,
+            _host_subset(pending, sorted(unknown)), host_budget, n_partitions, n_bins
         )
         n_unknown = sub.scheduled_count
         parts.append(sub)
@@ -755,23 +512,22 @@ def _schedule_histogram_topk(
 
 
 def _schedule_range_topk(
-    pending: DataFrame,
-    budgets: dict[str, int],
-    default_budget: int,
-    budget_multiplier: int,
-    n_partitions: int | None,
-    host_budget,
+    rows: DataFrame, limits: dict[str, int], n_partitions: int | None
 ) -> DataFrame:
+    """Exact top-``limits[host]`` rows per host under (priority DESC, url
+    ASC) by a range-partitioned sort — the histogram scheduler's guard for
+    degenerate boundary bins, where a per-host window would sort the whole
+    bin in one task. Hosts absent from ``limits`` get no rows."""
     from pyspark import StorageLevel
 
-    spark = pending.sparkSession
+    spark = rows.sparkSession
     n_part = n_partitions or spark.sparkContext.defaultParallelism * 2
     # 1. parallel global sort: range-partition by the schedule order. Each
     #    host's rows land in a contiguous run of partitions. Persisted
     #    (spill-able, lineage retained) so the offsets pass and the ranking
     #    pass see identical partition ids; released before returning.
     ranged = (
-        pending.repartitionByRange(
+        rows.repartitionByRange(
             n_part, F.col("host"), F.desc("priority"), F.asc("url")
         )
         .withColumn("_pid", F.spark_partition_id())
@@ -779,43 +535,36 @@ def _schedule_range_topk(
     )
     try:
         # 2. tiny driver-side pass: per-(partition, host) counts -> cumulative
-        #    offsets; partitions whose offset already exceeds the host budget
-        #    are pruned entirely (the window below only ever sees O(budget)
-        #    rows, however big pending is).
+        #    offsets; partitions whose offset already reaches the host limit
+        #    are pruned entirely (the window below only ever sees O(limit)
+        #    rows, however big the input is).
         counts = ranged.groupBy("_pid", "host").count().collect()
         counts.sort(key=lambda r: (r["host"], r["_pid"]))
-        offsets: list[tuple[int, str, int]] = []
+        offsets: list[tuple[int, str, int, int]] = []
         acc: dict[str, int] = {}
         for r in counts:
             off = acc.get(r["host"], 0)
-            if off < host_budget(r["host"]):
-                offsets.append((r["_pid"], r["host"], off))
+            limit = limits.get(r["host"], 0)
+            if off < limit:
+                offsets.append((r["_pid"], r["host"], off, limit))
             acc[r["host"]] = off + r["count"]
         if not offsets:
-            return pending.limit(0)
-        off_df = spark.createDataFrame(offsets, "_pid int, host string, _off long")
-        # 3. exact rank on the surviving prefix partitions only; materialize
-        #    the O(budget) winner set so the O(pending) persist can be freed.
-        #    Host-cardinality guard: large per-host budget tables ride the
-        #    (already broadcast) offsets frame instead of a literal map.
-        w = Window.partitionBy("_pid", "host").orderBy(F.desc("priority"), F.asc("url"))
-        ranked = ranged.join(F.broadcast(off_df), ["_pid", "host"]).withColumn(
-            "_grank", F.row_number().over(w) + F.col("_off")
+            return rows.limit(0)
+        # each surviving (partition, host) carries its offset and its host's
+        # limit in one broadcast frame — bounded plan at any host count
+        off_df = spark.createDataFrame(
+            offsets, "_pid int, host string, _off long, _limit long"
         )
-        if len(budgets) > HIST_MAP_MAX_HOSTS:
-            bdf = spark.createDataFrame(
-                list(budgets.items()), "host string, _hb long"
-            )
-            ranked = ranked.join(F.broadcast(bdf), "host", "left").where(
-                F.col("_grank")
-                <= F.coalesce(F.col("_hb"), F.lit(default_budget)) * budget_multiplier
-            ).drop("_hb")
-        else:
-            ranked = ranked.where(
-                F.col("_grank")
-                <= _budget_col(budgets, default_budget, budget_multiplier)
-            )
-        return ranked.drop("_pid", "_off", "_grank").localCheckpoint(eager=True)
+        # 3. exact rank on the surviving prefix partitions only; materialize
+        #    the O(limit) winner set so the persisted input can be freed.
+        w = Window.partitionBy("_pid", "host").orderBy(F.desc("priority"), F.asc("url"))
+        return (
+            ranged.join(F.broadcast(off_df), ["_pid", "host"])
+            .withColumn("_grank", F.row_number().over(w) + F.col("_off"))
+            .where(F.col("_grank") <= F.col("_limit"))
+            .drop("_pid", "_off", "_limit", "_grank")
+            .localCheckpoint(eager=True)
+        )
     finally:
         ranged.unpersist()
 
@@ -1140,9 +889,7 @@ class Crawl:
         self.packages.rollback(snaps.get("packages") or None)
         self.one_time.rollback(snaps.get("one_time") or None)
         self.not_found.rollback(snaps.get("not_found") or None)
-        self.seen.discard_pending()  # un-flushed deferred adds are gone
-        self.seen.table.rollback(snaps.get("seen") or None)
-        self.seen._bloom = None  # force rebuild against the rolled-back set
+        self.seen.rollback(snaps.get("seen") or None)
         return st
 
     def refresh_dims(self) -> None:
@@ -1335,9 +1082,7 @@ class Crawl:
         """Start a fresh bootstrap epoch: empty the seen set, reseed the
         frontier, stage back to ``bootstrap``. The promoted prod table keeps
         serving the previous snapshot until the next finalize."""
-        self.seen.table.rollback(None)
-        self.seen._bloom = None
-        self.seen._bloom_snapshot = None
+        self.seen.rollback(None)
         self.host_pauses = {}
         self.seed(names)
 
@@ -1375,11 +1120,11 @@ class Crawl:
         self.host_pauses = {h: t for h, t in self.host_pauses.items() if t > now_s}
         if self.host_pauses:
             pending = pending.where(~F.col("host").isin(list(self.host_pauses)))
-        # steady-state hint reuse (histogram strategy only): the previous
-        # generation's per-host priority bounds skip the scheduler's
-        # per-host stats job; dropped every HINT_REFRESH_GENS generations so
-        # priority drift can't unbalance the bins forever (exactness does
-        # not depend on freshness — see _schedule_histogram_topk)
+        # steady-state hint reuse: the previous generation's per-host
+        # priority bounds skip the scheduler's per-host stats job; dropped
+        # every HINT_REFRESH_GENS generations so priority drift can't
+        # unbalance the bins forever (exactness does not depend on
+        # freshness — see _schedule_histogram_topk)
         hints = self.hist_hints or None
         if generation % HINT_REFRESH_GENS == 0:
             hints = None

@@ -6,8 +6,9 @@ partitions to control shuffle skew at 10^10-frontier scale". The engine
 has three structurally hot key families:
 
 - **hosts** (3 hot of ~6): handled by the politeness scheduler's
-  range/partial top-k (frontier.politeness_schedule) — a sort-based
-  spread, the right tool for exact per-key top-k.
+  histogram threshold top-k (frontier.politeness_schedule) — per-host
+  bins computed driver-side, so pending is filtered, never shuffled; the
+  right tool for exact per-key top-k.
 - **scopes** (@types, @babel, ... own a huge share of packages): the
   right tool for per-scope aggregation is salting, implemented here.
   Spark's hash aggregation already two-phases *algebraic* aggregates

@@ -982,6 +982,16 @@ class SeenSet:
         self._pending = []
         self._clear_delta()
 
+    def rollback(self, snapshot_id: int | None) -> None:
+        """Make ``snapshot_id`` (None = empty) the seen set's visible state
+        again: un-flushed deferred adds are dropped, the table rolls back,
+        and the derived prefilter is dropped so the next check rebuilds it
+        against the rolled-back table."""
+        self.discard_pending()
+        self.table.rollback(snapshot_id)
+        self._bloom = None
+        self._bloom_snapshot = None
+
     def _fold_arrays_into_bloom(self, buckets: np.ndarray, keys: np.ndarray) -> None:
         """Driver-local incremental fold of raw (bucket, key) arrays into the
         cached dense filter."""

@@ -79,7 +79,7 @@ class TestPolitenessSchedule:
             expected |= {u for u, _ in items[:budget]}
         # stale bounds for h0 (true range is [0, 12]); h1 absent entirely
         sched = politeness_schedule(
-            df, {}, default_budget=budget, strategy="histogram",
+            df, {}, default_budget=budget,
             hist_hints={"h0.org": (3.0, 7.0)},
         )
         got = {r["url"] for r in sched.collect()}
@@ -90,6 +90,21 @@ class TestPolitenessSchedule:
         # not silently clamped to the top bin: its true bounds come back in
         # hist_hints so the next tick schedules it on the fast path
         assert sched.hist_hints.get("h1.org") == (11.0, 50.0)
+
+    def test_zero_width_hint_stays_exact(self, spark):
+        """A hint whose bounds collapsed to one value (every pending row of
+        the host had the same priority) gives a near-zero bin width: rows
+        far below it must land in the lowest bin instead of overflowing
+        the int bin cast and failing the job, and the schedule stays
+        exact."""
+        rows = [(f"https://h0.org/p{i:02d}", "h0.org", float(i)) for i in range(20)]
+        df = spark.createDataFrame(rows, "url string, host string, priority double")
+        sched = politeness_schedule(
+            df, {}, default_budget=5, hist_hints={"h0.org": (3.0, 3.0)}
+        )
+        got = sorted(r["url"] for r in sched.collect())
+        assert got == [f"https://h0.org/p{i:02d}" for i in range(15, 20)]
+        assert sched.scheduled_count == 5
 
     def test_counts_carry_schedules_identically_across_generations(self, spark):
         """Counts-carry contract: when the caller's pending set changed
@@ -115,7 +130,7 @@ class TestPolitenessSchedule:
             per_gen: list[list[str]] = []
             for g in range(4):
                 sched = politeness_schedule(
-                    pending, {}, default_budget=700, strategy="histogram",
+                    pending, {}, default_budget=700,
                     hist_hints=hints,
                     hist_counts=counts if (carry and g > 0) else None,
                 )
@@ -137,9 +152,7 @@ class TestPolitenessSchedule:
         assert carried == fresh
         # h2 (50 rows < budget) drains in generation 1 and must leave the
         # carried ledger entirely
-        sched0 = politeness_schedule(
-            base, {}, default_budget=700, strategy="histogram",
-        )
+        sched0 = politeness_schedule(base, {}, default_budget=700)
         assert "h2.org" not in sched0.hist_counts
         # ledger totals must equal the surviving pending rows per host
         lived = {
@@ -154,7 +167,7 @@ class TestPolitenessSchedule:
         )
         with pytest.raises(ValueError, match="hist_counts requires"):
             politeness_schedule(
-                df, {}, default_budget=10, strategy="histogram",
+                df, {}, default_budget=10,
                 hist_counts={"h0.org": {0: 1}},
             )
 
@@ -181,7 +194,7 @@ class TestPolitenessSchedule:
             sc.setJobGroup(group, group)
             try:
                 sched = politeness_schedule(
-                    df, {}, default_budget=40, strategy="histogram",
+                    df, {}, default_budget=40,
                     hist_hints=hints,
                 )
                 urls = sorted(r["url"] for r in sched.collect())
@@ -221,9 +234,7 @@ class TestPolitenessSchedule:
         tracker = sc.statusTracker()
 
         # tick 1: fresh — captures bounds + the post-schedule ledger
-        first = politeness_schedule(
-            df, {}, default_budget=40, strategy="histogram",
-        )
+        first = politeness_schedule(df, {}, default_budget=40)
         gone = spark.createDataFrame(
             [(r["url"],) for r in first.collect()], "url string"
         )
@@ -234,7 +245,7 @@ class TestPolitenessSchedule:
             sc.setJobGroup(group, group)
             try:
                 sched = politeness_schedule(
-                    pending2, {}, default_budget=40, strategy="histogram",
+                    pending2, {}, default_budget=40,
                     hist_hints=first.hist_hints, hist_counts=counts,
                 )
                 urls = sorted(r["url"] for r in sched.collect())
@@ -285,9 +296,7 @@ class TestPolitenessSchedule:
             .select("url")
             .collect()
         }
-        sched = politeness_schedule(
-            df, {}, default_budget=budget, strategy="histogram"
-        )
+        sched = politeness_schedule(df, {}, default_budget=budget)
         got = {r["url"] for r in sched.collect()}
         assert got == expected
         assert sched.scheduled_count == len(expected)
@@ -295,7 +304,7 @@ class TestPolitenessSchedule:
 
         # hints path at the same cardinality: identical winners, no stats job
         warm = politeness_schedule(
-            df, {}, default_budget=budget, strategy="histogram",
+            df, {}, default_budget=budget,
             hist_hints=sched.hist_hints,
         )
         assert {r["url"] for r in warm.collect()} == expected
@@ -431,8 +440,6 @@ class TestSteadyStateHints:
         monkeypatch.setattr(FR, "_schedule_histogram_topk", spy)
         c = Crawl(
             spark, str(tmp_path / "hints"), universe, 10_000_000,
-            # max budget 20 * 128 = 2560 > SMALL_BUDGET_MAX -> auto picks the
-            # histogram strategy, the regime the hints exist for
             budget_multiplier=128,
             backoff_scale=0.02, transient_modulus=0, throttle_modulus=0,
         )
@@ -458,17 +465,12 @@ class TestSteadyStateHints:
 
 
 class TestCountsCarryEngine:
-    def test_bootstrap_equivalence_and_engagement(
-        self, spark, universe, tmp_path, monkeypatch
-    ):
+    def test_bootstrap_equivalence_and_engagement(self, spark, universe, tmp_path):
         """The engine loop's counts-carry ledger must (a) change NOTHING
         about what a bootstrap produces — packages, seen set, per-gen
         scheduled counts are byte-identical with the ledger on and off —
         and (b) actually engage (a generation scheduling real rows without
         a histogram scan) once the hop host set stabilizes."""
-        # force the histogram regime at fixture scale so budgets (12-40)
-        # bite against the 60-doc registry queue across generations
-        monkeypatch.setattr(FR, "SMALL_BUDGET_MAX", 4)
 
         def run(root: str, carry: bool):
             c = Crawl(
@@ -500,7 +502,7 @@ class TestCountsCarryEngine:
 
 
     def test_ledger_mode_subset_carry_and_snapshot_invalidation(
-        self, spark, universe, tmp_path, monkeypatch
+        self, spark, universe, tmp_path
     ):
         """Two corners of the engine ledger: (a) budgets_override (the
         watch per-trigger-window path) schedules off a SUBSET of the
@@ -508,7 +510,6 @@ class TestCountsCarryEngine:
         generations must still schedule identically to a no-carry run;
         (b) an external frontier write (watch/periodic enqueue) moves the
         snapshot anchor and must force a rescan, never a stale carry."""
-        monkeypatch.setattr(FR, "SMALL_BUDGET_MAX", 4)
         ov = {
             "registry.npmjs.org": 7,
             "cdn.jsdelivr.net": 0,  # exhausted window: not even scanned

@@ -80,32 +80,62 @@ def test_ivf_centroid_seed_is_bounded_topk(spark, sf_dir):
     assert "Sort " not in plan and "Exchange rangepartitioning" not in plan
 
 
-def test_politeness_partial_path_no_shuffle_of_pending(spark):
-    """The production-budget politeness path must scan pending narrowly —
-    the Arrow pass ships ONLY (host, priority), never urls — and the
-    winner carve must reach pending via a broadcast params join, with no
-    Exchange consuming the full pending relation."""
+def _schedule_checkpoint_plans(monkeypatch, pending, **kw):
+    """Run the politeness scheduler with ``DataFrame.localCheckpoint``
+    spied; return the result and the executed plan of every frame it
+    checkpointed, in order: the candidate materialization (the one pending
+    scan) first, the winner set last."""
     from npm_search_spark.frontier import politeness_schedule
 
-    pending = spark.createDataFrame(
-        [(f"https://h{i%3}.org/{i}", f"h{i%3}.org", float(i)) for i in range(1000)],
-        "url string, host string, priority double",
+    # the concrete DataFrame class (Spark 4's classic DataFrame overrides
+    # the abstract pyspark.sql.DataFrame's methods)
+    cls = type(pending)
+    plans = []
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(plan_of(self))
+        return real(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "localCheckpoint", spy)
+        out = politeness_schedule(pending, **kw)
+    return out, plans
+
+
+def _assert_pending_never_shuffled(plans):
+    cand_plan, winners_plan = plans
+    # the candidate materialization is the pending scan plus a narrow
+    # bin-threshold filter: no hash/range Exchange consumes pending (the
+    # input's own round-robin repartition is its plan, not the scheduler's)
+    assert "Range (" in cand_plan
+    assert "Exchange hashpartitioning" not in cand_plan
+    assert "Exchange rangepartitioning" not in cand_plan
+    # the winner set (definite rows + boundary window) is carved from the
+    # checkpointed candidates and never re-scans pending
+    assert "Scan ExistingRDD" in winners_plan
+    assert "Range (" not in winners_plan
+
+
+def _pending(spark, n, n_hosts, n_priorities):
+    host = F.concat(F.lit("h"), F.col("id") % n_hosts, F.lit(".org"))
+    return spark.range(n).select(
+        F.concat(F.lit("https://"), host, F.lit("/"), F.col("id")).alias("url"),
+        host.alias("host"),
+        (F.col("id") % n_priorities).cast("double").alias("priority"),
+    ).repartition(8)
+
+
+def test_politeness_partial_path_no_shuffle_of_pending(spark, monkeypatch):
+    """The production-budget politeness path must scan pending narrowly:
+    its one pending scan (the candidate materialization) feeds no shuffle
+    Exchange, and the winner carve reads the checkpointed candidates."""
+    pending = _pending(spark, 1000, 3, 1000)
+    out, plans = _schedule_checkpoint_plans(
+        monkeypatch, pending, budgets={"h0.org": 5}, default_budget=5
     )
-    out = politeness_schedule(pending, {"h0.org": 5}, default_budget=5, strategy="partial")
-    surv_plan = plan_of(out._partial_debug["survivors"])
-    # the Arrow pass consumes a (host, priority) projection — the url
-    # column must be pruned before the Python boundary (the MapInArrow
-    # node's input signature and the Project feeding it carry no url)
-    lines = surv_plan.splitlines()
-    assert lines[0].startswith("MapInArrow") and "url" not in lines[0]
-    assert "Project [host" in lines[1] and "url" not in lines[1]
-    # the final plan reads the checkpointed O(budget) candidates, never
-    # re-scans or shuffles pending; the only Exchange is the O(boundary)
-    # window over checkpointed rows
-    plan = plan_of(out)
-    assert "Exchange hashpartitioning(url" not in plan
-    assert "MapInArrow" not in plan  # pending is not re-scanned by the carve
-    assert "Scan ExistingRDD" in plan  # carve reads the checkpoint
+    assert out.count() == 15
+    _assert_pending_never_shuffled(plans)
 
 
 def test_enqueue_check_never_shuffles_frontier(spark, tmp_path):
@@ -158,24 +188,17 @@ def test_enqueue_check_never_shuffles_frontier(spark, tmp_path):
         filter_new_urls(t, spark, stray, ["cdn.jsdelivr.net"]).collect()
 
 
-def test_histogram_schedule_never_shuffles_pending(spark):
-    """The huge-budget (histogram) politeness path must scan pending and
-    filter — the only shuffle allowed is the window over the tiny boundary
-    bin, never an Exchange of the full pending relation."""
-    from npm_search_spark.frontier import politeness_schedule
-
-    pending = spark.createDataFrame(
-        [(f"https://h{i%2}.org/{i}", f"h{i%2}.org", float(i % 997)) for i in range(4000)],
-        "url string, host string, priority double",
-    ).repartition(8)
-    out = politeness_schedule(
-        pending, {}, default_budget=1200, strategy="histogram"
+def test_histogram_schedule_never_shuffles_pending(spark, monkeypatch):
+    """The huge-budget politeness path (heavy priority ties) must scan
+    pending and filter — the only shuffle allowed is the window over the
+    tiny boundary bin of the checkpointed candidates, never an Exchange of
+    the full pending relation."""
+    pending = _pending(spark, 4000, 2, 997)
+    out, plans = _schedule_checkpoint_plans(
+        monkeypatch, pending, budgets={}, default_budget=1200
     )
     assert out.count() == 2400  # exact: 1200 per host
-    # the executed plan is a checkpointed winner set; assert the SHAPE on
-    # the pre-checkpoint logical path instead: filter + boundary window
-    explained = out._jdf.queryExecution().analyzed().toString()
-    assert "LogicalRDD" in explained  # winners are materialized (no rescan)
+    _assert_pending_never_shuffled(plans)
 
 
 def test_whole_stage_codegen_on_span_functions(spark):

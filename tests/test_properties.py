@@ -1,8 +1,11 @@
 """Property-based invariants (hypothesis): URL canonicalization algebra,
 politeness-scheduler exactness vs a brute-force reference on random
-frontiers (both strategies), and Bloom no-false-negatives."""
+frontiers (window and range-sorted boundary carves), and Bloom
+no-false-negatives."""
 
 from __future__ import annotations
+
+from unittest import mock
 
 import numpy as np
 import pytest
@@ -120,10 +123,13 @@ class TestPolitenessExactness:
         st.integers(min_value=1, max_value=9),  # default budget
     )
     def test_both_strategies_match_bruteforce(self, spark, rows, budget):
-        """Either strategy returns EXACTLY the top-budget rows per host
+        """The scheduler returns EXACTLY the top-budget rows per host
         under (priority DESC, url ASC) — compared against a straight
         Python reference on adversarially small random frontiers with
-        priority ties."""
+        priority ties — through both boundary carves: the per-host window
+        (default HIST_BOUNDARY_CAP) and the range-sorted fallback (cap 0
+        sends every boundary bin through _schedule_range_topk)."""
+        from npm_search_spark import frontier as FR
         from npm_search_spark.frontier import politeness_schedule
 
         data = [
@@ -140,14 +146,15 @@ class TestPolitenessExactness:
             items.sort(key=lambda t: (-t[1], t[0]))
             expected |= {u for u, _ in items[:budget]}
 
-        for strategy in ("partial", "range", "histogram"):
-            got = {
-                r["url"]
-                for r in politeness_schedule(
-                    df, {}, default_budget=budget, strategy=strategy
-                ).collect()
-            }
-            assert got == expected, f"strategy={strategy}"
+        for cap in (FR.HIST_BOUNDARY_CAP, 0):
+            with mock.patch.object(FR, "HIST_BOUNDARY_CAP", cap):
+                got = {
+                    r["url"]
+                    for r in politeness_schedule(
+                        df, {}, default_budget=budget
+                    ).collect()
+                }
+            assert got == expected, f"HIST_BOUNDARY_CAP={cap}"
 
     @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
     @given(
@@ -186,7 +193,7 @@ class TestPolitenessExactness:
         taken: dict[str, int] = {}
         for _gen in range(4):
             sched = politeness_schedule(
-                pending, {}, default_budget=budget, strategy="histogram",
+                pending, {}, default_budget=budget,
                 hist_hints=hints, hist_counts=counts,
             )
             got = sorted(r["url"] for r in sched.collect())

@@ -106,6 +106,31 @@ class TestDeltaBroadcastIsPerBatch:
         assert out.count() == 50
 
 
+class TestRollback:
+    @pytest.mark.parametrize("store_urls", [True, False], ids=["url", "wide"])
+    def test_rollback_forgets_deferred_and_later_adds(self, spark, tmp_path, store_urls):
+        """rollback(snapshot) — the resume / bootstrap-redo API — drops
+        un-flushed deferred adds and every add committed after the
+        snapshot: those keys read unseen again and the count is the
+        snapshot's."""
+        s = SeenSet(str(tmp_path / "s"), expected_keys_per_bucket=64,
+                    store_urls=store_urls)
+        snap = s.add(spark, _urls(spark, 0, 100))
+        s.filter_unseen(spark, _urls(spark, 0, 10)).count()  # prefilter at snap
+        s.add(spark, _urls(spark, 100, 200), defer=True)
+        s.flush(spark)  # committed after snap
+        s.add(spark, _urls(spark, 200, 300), defer=True)  # never flushed
+        s.rollback(snap)
+        got = sorted(r["url"] for r in s.filter_unseen(spark, _urls(spark, 0, 300)).collect())
+        assert got == sorted(r["url"] for r in _urls(spark, 100, 300).collect())
+        assert s.count(spark) == 100
+
+        s.add(spark, _urls(spark, 300, 400), defer=True)
+        s.rollback(None)  # empty again, as a bootstrap redo starts
+        assert s.filter_unseen(spark, _urls(spark, 0, 400)).count() == 400
+        assert s.count(spark) == 0
+
+
 class TestModeEquivalence:
     def test_bootstrap_results_identical(self, spark, tmp_path):
         """A full bootstrap in url mode and wide-key mode must converge to
