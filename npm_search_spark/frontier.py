@@ -748,7 +748,6 @@ class Crawl:
         throttle_modulus: int = 0,
         gc_terminal: bool = True,
         seen_backend: str = "bloom",
-        seen_store_urls: bool = True,
         checkpoint_interval: int = 1,
         carry_counts: bool = True,
     ):
@@ -781,14 +780,7 @@ class Crawl:
         self.packages = SnapTable(f"{root}/packages", FINAL_PACKAGE)
         self.one_time = SnapTable(f"{root}/one_time_data", ONE_TIME)
         self.not_found = SnapTable(f"{root}/not_found", QUARANTINE)
-        # seen_store_urls=False is the wide-key scale mode: the seen-set hot
-        # path (dedup shuffle, delta broadcast, parquet append) carries
-        # (bucket, key, key2) 128-bit identities instead of url strings —
-        # ~4.5x fewer bytes per row on the drain's bus-bound stages; crawl
-        # results are identical (tests/test_seen_modes.py equivalence)
-        self.seen = SeenSet(
-            f"{root}/seen", backend=seen_backend, store_urls=seen_store_urls
-        )
+        self.seen = SeenSet(f"{root}/seen", backend=seen_backend)
         self.state = StateStore(f"{root}/state")
         self.universe = universe
         self.budgets = DEFAULT_BUDGETS if budgets is None else budgets

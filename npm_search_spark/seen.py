@@ -1,5 +1,4 @@
-"""URL-seen set: partitioned Bloom/cuckoo prefilter + exact anti-join
-fallback.
+"""URL-seen set: partitioned Bloom/cuckoo prefilter + exact key check.
 
 Re-creates the reference's dedup semantics — its queue upsert by objectID
 and isProcessed flag (src/watch.ts:134-141, src/indexers/
@@ -8,23 +7,30 @@ MainBootstrapIndexer.ts:31-36) are semantically a URL-seen set — at
 merged per micro-batch).
 
 Design:
-- The exact set is a SnapTable of (bucket, key, url) where
-  key = xxhash64(canonical_url), bucket = pmod(key, 256). Rows are written
-  repartitioned+sorted by (bucket, key) so parquet row-group min/max stats
-  prune the exact-check scan.
-- A prefilter sharded by bucket is built per snapshot with mapInArrow
-  (vectorized numpy, one shard per bucket partition), merged on the
-  driver, and broadcast. Candidates that miss it are definitively unseen
-  (no false negatives); hits go to the exact semi-join (false positives
-  resolved exactly). Two backends, selected at construction: a Bloom
-  filter (OR-merged bitmaps, default) or a cuckoo filter
-  (cuckoo.DenseCuckoo — deletable, so `remove()` keeps it tight).
+- The exact set is a SnapTable of (bucket, key, key2) where
+  key = xxhash64(canonical_url), key2 = an independently-salted xxhash64
+  of the same url and bucket = pmod(xxhash64, 256). Identity is the
+  128-bit (key, key2) pair: dedup, membership, remove and count all
+  compare both halves, so a 64-bit key collision never merges two urls.
+  Rows are written repartitioned+sorted by (bucket, key) so parquet
+  row-group min/max stats prune the exact-check scan.
+- Tables up to ``SeenSet.EXACT_DRIVER_MAX_BYTES`` are resolved from a
+  driver-held, (key, key2)-lexsorted copy broadcast once per snapshot:
+  one Arrow pass decides membership exactly.
+- Larger tables use a prefilter sharded by bucket, built per snapshot with
+  mapInArrow (vectorized numpy, one shard per bucket partition), merged on
+  the driver, and broadcast. Candidates that miss it are definitively
+  unseen (no false negatives); hits go to a bucket-pruned semi-join that
+  compares (key, key2) (false positives resolved exactly). Two backends,
+  selected at construction: a Bloom filter (OR-merged bitmaps, default) or
+  a cuckoo filter (cuckoo.DenseCuckoo — deletable, so `remove()` keeps it
+  tight).
 - At 1e10 keys / 1% fp the filter is ~1.5 GiB total, i.e. ~6 MiB per
   bucket shard: on a real cluster only the shards matching the micro-batch's
   buckets need shipping; in local mode we broadcast the whole dict.
 
-The exact check never leaves the JVM-side join path; the Bloom is the only
-Python stage and is Arrow-batched.
+The streamed exact check never leaves the JVM-side join path; the
+prefilter is the only Python stage and is Arrow-batched.
 """
 
 from __future__ import annotations
@@ -41,17 +47,37 @@ from .cuckoo import CuckooShards, DenseCuckoo, rows_for
 from .functions.urls import N_SEEN_BUCKETS, canonicalize_url, url_bucket, url_key
 from .tables import SnapTable
 
-SEEN_SCHEMA = "bucket int, key long, url string"
-# wide-key mode (store_urls=False): no url column in the hot path — identity
-# is the 128-bit (key, key2) pair, where key2 is an independently-salted
-# xxhash64. ~20 B/row vs ~90 B/row: the drain's dedup shuffle, checkpoint,
-# delta broadcast and parquet append all shed the ~70 B url payload that was
-# pure memory-bus load (VERDICT r4 "Next round" #1).
-SEEN_SCHEMA_WIDE = "bucket int, key long, key2 long"
+# no url column: ~20 B/row instead of ~90 B, so the dedup shuffle,
+# checkpoint, delta broadcast and parquet append carry keys only
+SEEN_SCHEMA = "bucket int, key long, key2 long"
 # a distinct leading literal makes key2 = xxhash64(salt, url) statistically
 # independent of key = xxhash64(url); pair-collision odds are 2^-128 per
 # candidate pair (at 10^10 seen keys vs a 10^7 batch: ~3e-22 expected)
 _KEY2_SALT = "seen-k2:"
+_HELPER_COLS = ["key", "bucket", "key2"]
+
+
+def _contains_pairs(
+    sorted_k: np.ndarray, sorted_k2: np.ndarray, k: np.ndarray, k2: np.ndarray
+) -> np.ndarray:
+    """Which (k[i], k2[i]) pairs occur in (sorted_k, sorted_k2), a
+    (key, key2)-lexsorted pair list. Two int64 searchsorteds find each
+    key's run; a run of one compares key2 directly and only longer runs
+    (64-bit key collisions, repeated durable adds) are scanned."""
+    n = len(sorted_k)
+    if not n:
+        return np.zeros(len(k), dtype=bool)
+    lo = np.searchsorted(sorted_k, k, "left")
+    runs = np.searchsorted(sorted_k, k, "right") - lo
+    hit = (runs == 1) & (sorted_k2[np.minimum(lo, n - 1)] == k2)
+    for i in np.nonzero(runs > 1)[0]:
+        hit[i] = k2[i] in sorted_k2[lo[i] : lo[i] + runs[i]]
+    return hit
+
+
+def _lexsorted(k: np.ndarray, k2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    order = np.lexsort((k2, k))
+    return np.ascontiguousarray(k[order]), np.ascontiguousarray(k2[order])
 
 
 def _murmur3_int(x: int, seed: int = 42) -> int:
@@ -214,10 +240,13 @@ class SeenSet:
         fp_rate: float = 0.01,
         n_buckets: int = N_SEEN_BUCKETS,
         backend: str = "bloom",
-        store_urls: bool = True,
+        store_urls: bool = False,
         n_ranges: int = 0,
     ):
-        """``backend``: the in-memory prefilter implementation.
+        """Rows are (bucket, key, key2): identity is the 128-bit
+        (key, key2) pair, never the url string.
+
+        ``backend``: the in-memory prefilter implementation.
 
         - ``"bloom"`` (default): DenseBloom — ~9.6 bits/key at 1 % fp;
           deletions leave it stale-conservative (extra false positives,
@@ -225,13 +254,6 @@ class SeenSet:
         - ``"cuckoo"``: cuckoo.DenseCuckoo — ~19 bits/key, fp ≈ 0.012 %,
           2-row lookups, and **exact O(1) deletion** so `remove()` keeps
           the filter tight (package deletions, bootstrap redo).
-
-        ``store_urls``: True (default) keeps the url column in the exact
-        table — byte-exact dedup and url forensics (J9 debugging). False
-        is the wide-key scale mode: rows are (bucket, key, key2) with
-        128-bit identity, so the hot path never shuffles/writes/broadcasts
-        url strings (~4.5x fewer bytes per row). Both modes produce
-        identical crawl results (tests/test_seen_modes.py equivalence).
 
         ``n_ranges``: 0 (default) broadcasts the dense prefilter whole —
         right for local mode and small tables. >0 is the sharded scale
@@ -244,13 +266,19 @@ class SeenSet:
         the whole 1.5 GiB, and a flush invalidates (re-ships) only the
         slices whose buckets changed. tests/test_seen_sharded.py pins the
         touch-only-your-range property with poisoned foreign slices.
+
+        ``store_urls`` is accepted for old callers: False is the only row
+        format, True raises.
         """
         from pyspark.sql import types as T
 
+        if store_urls:
+            raise ValueError(
+                "seen-set url rows were removed: rows are (bucket, key, key2)"
+            )
         if backend not in ("bloom", "cuckoo"):
             raise ValueError(f"unknown seen-set backend {backend!r}")
-        self.store_urls = store_urls
-        schema = T.StructType.fromDDL(SEEN_SCHEMA if store_urls else SEEN_SCHEMA_WIDE)
+        schema = T.StructType.fromDDL(SEEN_SCHEMA)
         # per-file bucket min/max in the manifest: the exact check prunes
         # files driver-side by the suspects' buckets before any I/O
         self.table = SnapTable(root, schema, stats_cols=["bucket"])
@@ -272,23 +300,23 @@ class SeenSet:
         # the whole filter
         self._range_bcs: list = []
         self._range_dirty: set[int] = set()
-        # group-commit buffer: keyed (bucket,key,url) batches added with
+        # group-commit buffer: keyed (bucket, key, key2) batches added with
         # defer=True, localCheckpointed, awaiting one flush() append
         self._pending: list[DataFrame] = []
-        # driver-side (bucket, key) arrays of the same batches. Pending keys
-        # are made visible via SMALL per-batch sorted-key delta broadcasts,
+        # driver-side (bucket, key, key2) arrays of the same batches. Pending
+        # keys are made visible via SMALL per-batch sorted-key delta broadcasts,
         # NOT by folding into the dense filter: a fold would invalidate the
         # big filter's broadcast and force every Python worker to re-fetch
         # O(table) bits each micro-batch — a per-worker tax that grows with
         # cluster size (the 4N-executor cluster pays 4x). Each deferred
         # batch gets its OWN broadcast, created once and kept until flush —
         # a worker's per-generation fetch is O(batch), never a re-sorted
-        # re-broadcast O(total pending). In wide-key mode the delta carries
-        # (sorted keys, aligned key2) so membership is 128-bit EXACT and
+        # re-broadcast O(total pending). The delta is the batch's
+        # (key, key2)-lexsorted pairs, so membership is 128-bit EXACT and
         # pending resolution needs no join against the buffered batches.
-        self._pending_arrays: list[tuple[np.ndarray, np.ndarray]] = []
+        self._pending_arrays: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
         self._delta_bcs: list = []
-        # wide-key small-table fast path (r6): a driver-cached, (key, key2)-
+        # small-table fast path (r6): a driver-cached, (key, key2)-
         # lexsorted copy of the exact table, broadcast once per snapshot —
         # the Arrow verdict pass then resolves EXACT membership in-place
         # (searchsorted), so a steady-state filter_unseen runs NO per-batch
@@ -306,7 +334,7 @@ class SeenSet:
         self._keyed_out_rows = None
 
     # upper bound on the driver-cached exact-array copy of the table
-    # (~64 MB = ~4M wide-key rows); larger tables use the streamed check
+    # (~64 MB = ~4M rows); larger tables use the streamed check
     EXACT_DRIVER_MAX_BYTES = 64 << 20
 
     # -- bloom maintenance ---------------------------------------------------
@@ -424,11 +452,11 @@ class SeenSet:
             self._bloom_snapshot = snap
             # deferred batches are NOT folded here: their keys stay
             # prefilter-visible through the sorted-key delta broadcast
-            # (_delta_broadcasts), which filter_unseen ORs into the dense
+            # (_delta_bcs), which filter_unseen ORs into the dense
             # filter's verdict — a miss would route a pending key to
             # "definitely unseen" (a dup crawl), so the delta is exact.
-        if not self.store_urls and not self.n_ranges:
-            # keep the wide-key exact-array broadcast current alongside the
+        if not self.n_ranges:
+            # keep the exact-array broadcast current alongside the
             # prefilter (same lifecycle: derived filter state, rebuilt per
             # snapshot; cheap no-op when the table is scale-sized)
             self._exact_current(spark)
@@ -446,13 +474,10 @@ class SeenSet:
         """The broadcast of the (key, key2)-lexsorted exact table, rebuilt
         only when the snapshot changes (a drain's generations share one
         snapshot — deferred adds live in the delta broadcasts). Returns
-        None when the table is too big for a driver copy (scale mode) or
-        in url mode (exact identity is the url string, not broadcastable
-        at interesting sizes)."""
+        None when there is no table yet or it is too big for a driver copy
+        (above ``EXACT_DRIVER_MAX_BYTES``: the streamed check's regime)."""
         import os
 
-        if self.store_urls:
-            return None
         snap_id = self.table.current_snapshot_id()
         if snap_id is None:
             return None
@@ -474,23 +499,12 @@ class SeenSet:
             k2s.append(t.column("key2").to_numpy(zero_copy_only=False))
         k = np.concatenate(ks) if ks else np.empty(0, dtype=np.int64)
         k2 = np.concatenate(k2s) if k2s else np.empty(0, dtype=np.int64)
-        order = np.lexsort((k2, k))
-        self._exact_arrays = (
-            np.ascontiguousarray(k[order]), np.ascontiguousarray(k2[order])
-        )
+        self._exact_arrays = _lexsorted(k, k2)
         if self._exact_bc is not None:
             self._exact_bc.unpersist()
         self._exact_bc = spark.sparkContext.broadcast(self._exact_arrays)
         self._exact_snapshot = snap_id
         return self._exact_bc
-
-    def _delta_broadcasts(self, spark: SparkSession) -> list:
-        """The per-batch delta broadcasts (one per deferred add, created at
-        add time and reused until flush — a defer-add never invalidates an
-        earlier batch's broadcast, and never the dense filter's). Each
-        value is ``(sorted_keys,)`` in url mode or ``(sorted_keys,
-        key2_aligned)`` in wide-key mode."""
-        return self._delta_bcs
 
     def _clear_delta(self) -> None:
         self._pending_arrays = []
@@ -501,34 +515,26 @@ class SeenSet:
     # -- public API ------------------------------------------------------------
 
     def keyed(self, urls: DataFrame, url_col: str = "url") -> DataFrame:
+        """``urls`` with ``url_col`` canonicalized and the seen-table
+        identity columns (key, bucket, key2) added."""
         canon = canonicalize_url(F.col(url_col))
-        out = urls.withColumn(url_col, canon).withColumn(
-            "key", url_key(F.col(url_col))
-        ).withColumn("bucket", url_bucket(F.col(url_col), self.n_buckets))
-        if not self.store_urls:
+        return (
+            urls.withColumn(url_col, canon)
+            .withColumn("key", url_key(F.col(url_col)))
+            .withColumn("bucket", url_bucket(F.col(url_col), self.n_buckets))
             # independent second hash: xxhash64 over (salt, url) — NOT a
             # function of key alone (tests/test_seen_modes.py pins this)
-            out = out.withColumn(
-                "key2", F.xxhash64(F.lit(_KEY2_SALT), F.col(url_col))
-            )
-        return out
-
-    def _helper_cols(self) -> list[str]:
-        return ["key", "bucket"] if self.store_urls else ["key", "bucket", "key2"]
+            .withColumn("key2", F.xxhash64(F.lit(_KEY2_SALT), F.col(url_col)))
+        )
 
     def _rows_of(self, urls: DataFrame, url_col: str, dedup: bool = True) -> DataFrame:
-        """The batch in table-row shape: (bucket, key, url) in url mode,
-        (bucket, key, key2) in wide-key mode — deduped by key unless the
-        caller defers that to a later global dedup (the group-commit path:
-        flush() drops duplicate keys across ALL buffered batches anyway,
-        so a per-batch dropDuplicates was a pure extra shuffle per
-        generation — r6)."""
-        k = self.keyed(urls.select(url_col), url_col)
-        if self.store_urls:
-            rows = k.select("bucket", "key", F.col(url_col).alias("url"))
-        else:
-            rows = k.select("bucket", "key", "key2")
-        return rows.dropDuplicates(["key"]) if dedup else rows
+        """The batch in table-row shape (bucket, key, key2), deduped by
+        (key, key2) unless the caller defers that to a later global dedup
+        (the group-commit path: flush() drops duplicates across ALL
+        buffered batches anyway, so a per-batch dropDuplicates was a pure
+        extra shuffle per generation — r6)."""
+        rows = self.keyed(urls.select(url_col), url_col).select("bucket", "key", "key2")
+        return rows.dropDuplicates(["key", "key2"]) if dedup else rows
 
     def filter_unseen(
         self,
@@ -539,10 +545,17 @@ class SeenSet:
     ) -> DataFrame:
         """Rows of ``urls`` whose canonical URL is not in the seen set.
 
-        Plan shape: Bloom prefilter (Arrow batch, broadcast shards) splits
-        candidates into definitely-unseen and possibly-seen; only the
-        latter touch the exact seen table, via a key-pruned semi scan +
-        broadcast anti-join (the big table is never shuffled).
+        Deferred (un-flushed) adds count as seen: their per-batch delta
+        broadcasts confirm (key, key2) pairs exactly inside the Arrow pass.
+        The durable table is checked one of two ways, chosen by its size:
+
+        - up to ``EXACT_DRIVER_MAX_BYTES`` (and not sharded): against the
+          driver-held lexsorted array, in the same Arrow pass — one job
+          over the batch, no table scan, no join;
+        - above it: the prefilter (Arrow batch, broadcast shards) splits
+          candidates into definitely-unseen and possibly-seen; only the
+          latter touch the table, via a bucket-pruned scan broadcast-joined
+          on (key, key2) (the big table is never shuffled).
 
         ``prune_buckets=False`` skips the suspects' distinct-bucket collect
         (one driver action) and scans every file: right for bootstrap-sized
@@ -551,22 +564,20 @@ class SeenSet:
         the default (a handful of buckets -> a handful of files read).
         """
         cand = self.keyed(urls, url_col)
-        helpers = self._helper_cols()
         if self.table.current_snapshot_id() is None and not self._pending:
-            return cand.drop(*helpers)
+            return cand.drop(*_HELPER_COLS)
 
         deltas = list(self._delta_bcs)
         from pyspark.sql.pandas.functions import pandas_udf
 
-        # r6 wide-key small-table fast path: with the lexsorted exact
-        # table broadcast available, membership is decided EXACTLY inside
-        # the one Arrow pass (table searchsorted + the per-batch delta
-        # confirms) — no prefilter, no suspects, no per-batch scan of the
-        # table, no broadcast-join chain. Every generation of a drain then
-        # runs ONE job over the batch. Oversized tables (or sharded /
-        # url mode) keep the prefilter + streamed exact check below.
+        def pending_hit(k: np.ndarray, k2: np.ndarray) -> np.ndarray:
+            hit = np.zeros(len(k), dtype=bool)
+            for dbc in deltas:
+                hit |= _contains_pairs(*dbc.value, k, k2)
+            return hit
+
         exact_bc = None if self.n_ranges else self._exact_current(spark)
-        if not self.store_urls and exact_bc is not None:
+        if exact_bc is not None:
 
             @pandas_udf("boolean")
             def seen_exact(key, key2):
@@ -574,25 +585,7 @@ class SeenSet:
 
                 k = key.to_numpy()
                 k2 = key2.to_numpy()
-                hit = np.zeros(len(k), dtype=bool)
-                for dbc in deltas:
-                    d, d2 = dbc.value
-                    if not len(d):
-                        continue
-                    idx = np.minimum(np.searchsorted(d, k), len(d) - 1)
-                    hit |= (d[idx] == k) & (d2[idx] == k2)
-                tk, tk2 = exact_bc.value
-                if len(tk):
-                    lo = np.searchsorted(tk, k, "left")
-                    hi = np.searchsorted(tk, k, "right")
-                    runs = hi - lo
-                    lo_c = np.minimum(lo, len(tk) - 1)
-                    hit |= (runs == 1) & (tk2[lo_c] == k2)
-                    for i in np.nonzero(runs > 1)[0]:
-                        # duplicate keys in the table (64-bit collisions /
-                        # repeated durable adds): scan the short run
-                        if k2[i] in tk2[lo[i] : hi[i]]:
-                            hit[i] = True
+                hit = pending_hit(k, k2) | _contains_pairs(*exact_bc.value, k, k2)
                 return pd.Series(hit)
 
             kept = (
@@ -601,7 +594,7 @@ class SeenSet:
                 .drop("_seen")
                 .localCheckpoint(eager=False)
             )
-            out = kept.drop(*helpers)
+            out = kept.drop(*_HELPER_COLS)
             # r6 keyed-frame reuse: the checkpoint above already holds the
             # (bucket, key, key2) columns for every returned row. When the
             # caller passes this very DataFrame object straight into
@@ -648,68 +641,38 @@ class SeenSet:
             def dense_hit(bk: np.ndarray, k: np.ndarray) -> np.ndarray:
                 return bc.value.might_contain(bk, k)
 
-        if self.store_urls:
+        # 0 unseen, 1 seen (a deferred batch's delta holds the pair), 2
+        # possibly in the table (prefilter hit; resolved by the exact table
+        # check below, which therefore never needs the buffered batches)
+        @pandas_udf("byte")
+        def verdict_of(bucket, key, key2):
+            import pandas as pd
 
-            @pandas_udf("boolean")
-            def maybe_seen(bucket, key):
-                import pandas as pd
-
-                k = key.to_numpy()
-                hit = dense_hit(bucket.to_numpy(), k)
-                for dbc in deltas:
-                    d = dbc.value[0]  # sorted pending keys (exact, tiny)
-                    if not len(d):
-                        continue
-                    idx = np.minimum(np.searchsorted(d, k), len(d) - 1)
-                    hit |= d[idx] == k
-                return pd.Series(hit)
-
-            verdict = maybe_seen(F.col("bucket"), F.col("key"))
-            flag, sure_pred, suspect_pred = "_maybe", ~F.col("_maybe"), F.col("_maybe")
-        else:
-            # wide-key mode: the delta is 128-bit EXACT, so pending keys
-            # resolve entirely inside this Arrow pass — 0 unseen, 1 seen
-            # (confirmed by a delta (key, key2) match), 2 possibly-in-table
-            # (dense-filter hit; resolved by the exact table check below,
-            # which therefore never needs the buffered batches)
-            @pandas_udf("byte")
-            def verdict_of(bucket, key, key2):
-                import pandas as pd
-
-                k = key.to_numpy()
-                k2 = key2.to_numpy()
-                confirmed = np.zeros(len(k), dtype=bool)
-                for dbc in deltas:
-                    d, d2 = dbc.value
-                    if not len(d):
-                        continue
-                    idx = np.minimum(np.searchsorted(d, k), len(d) - 1)
-                    confirmed |= (d[idx] == k) & (d2[idx] == k2)
-                hit = dense_hit(bucket.to_numpy(), k)
-                return pd.Series(
-                    np.where(confirmed, 1, np.where(hit, 2, 0)).astype(np.int8)
-                )
-
-            verdict = verdict_of(F.col("bucket"), F.col("key"), F.col("key2"))
-            flag, sure_pred, suspect_pred = "_v", F.col("_v") == 0, F.col("_v") == 2
+            k = key.to_numpy()
+            confirmed = pending_hit(k, key2.to_numpy())
+            hit = dense_hit(bucket.to_numpy(), k)
+            return pd.Series(
+                np.where(confirmed, 1, np.where(hit, 2, 0)).astype(np.int8)
+            )
 
         # materialize once: both branches below consume this plan, and the
         # politeness/bloom upstream must not re-execute per branch
-        cand = cand.withColumn(flag, verdict).localCheckpoint(eager=False)
-        sure_new = cand.filter(sure_pred)
-        suspects = cand.filter(suspect_pred)
-        drop_cols = [*helpers, flag]
+        cand = cand.withColumn(
+            "_v", verdict_of(F.col("bucket"), F.col("key"), F.col("key2"))
+        ).localCheckpoint(eager=False)
+        sure_new = cand.filter(F.col("_v") == 0)
+        suspects = cand.filter(F.col("_v") == 2)
+        drop_cols = [*_HELPER_COLS, "_v"]
 
-        # exact check: seen ⨝ suspects (suspects broadcast — the big table is
-        # never shuffled), URL-compared to kill hash collisions, then anti.
-        # The scan is pruned twice before it reads anything: manifest stats
-        # drop every file whose bucket range misses the suspects' buckets
-        # (rows are written range-clustered by (bucket, key)), and the
-        # bucket IN (...) predicate is pushed into the parquet scan so
-        # row-group stats prune within the surviving files. A small suspect
-        # batch (watch mode) therefore reads a handful of files, not the
-        # table.
-        val_col = "url" if self.store_urls else "key2"
+        # exact check: seen ⨝ suspects on (key, key2) (suspects broadcast —
+        # the big table is never shuffled; key2 kills 64-bit key
+        # collisions), then anti. The scan is pruned twice before it reads
+        # anything: manifest stats drop every file whose bucket range
+        # misses the suspects' buckets (rows are written range-clustered by
+        # (bucket, key)), and the bucket IN (...) predicate is pushed into
+        # the parquet scan so row-group stats prune within the surviving
+        # files. A small suspect batch (watch mode) therefore reads a
+        # handful of files, not the table.
         snap = self.table.snapshot()
         seen = None
         if prune_buckets:
@@ -721,14 +684,9 @@ class SeenSet:
                 "files_scanned": len(files),
                 "files_total": len(snap.files) if snap else 0,
             }
-            if not sus_buckets:
-                # every candidate missed the prefilter — nothing to check
-                return sure_new.unionByName(suspects).drop(*drop_cols)
-            if files:
-                seen = (
-                    spark.read.parquet(*files)
-                    .where(F.col("bucket").isin([int(b) for b in sus_buckets]))
-                    .select("key", F.col(val_col).alias("_seen_val"))
+            if files and sus_buckets:
+                seen = spark.read.parquet(*files).where(
+                    F.col("bucket").isin([int(b) for b in sus_buckets])
                 )
         else:
             files = snap.files if snap else []
@@ -737,58 +695,19 @@ class SeenSet:
                 "files_total": len(files),
             }
             if files:
-                seen = spark.read.parquet(*files).select(
-                    "key", F.col(val_col).alias("_seen_val")
-                )
-        if self.store_urls:
-            # deferred batches are seen-but-not-yet-durable: the delta
-            # broadcast routes their keys here as suspects, and they must
-            # confirm against the buffer exactly like table rows. Pending
-            # batches are localCheckpointed and tiny relative to the table —
-            # an unpruned union is a memory scan, not file I/O. (Wide-key
-            # mode never reaches the buffer: its delta already confirmed
-            # pending keys exactly in the Arrow pass above.)
-            for batch in self._pending:
-                pend = batch.select("key", F.col("url").alias("_seen_val"))
-                seen = pend if seen is None else seen.unionByName(pend)
+                seen = spark.read.parquet(*files)
         if seen is None:
-            # zero files (e.g. merge_delete removed everything) and nothing
-            # buffered that could confirm: every suspect is unseen
+            # no suspect, or zero files (e.g. merge_delete removed
+            # everything): every suspect is unseen
             return sure_new.unionByName(suspects).drop(*drop_cols)
-        if self.store_urls:
-            confirmed = (
-                seen.join(
-                    F.broadcast(
-                        suspects.select("key", F.col(url_col).alias("_cand_url"))
-                    ),
-                    on="key",
-                    how="inner",
-                )
-                .where(F.col("_seen_val") == F.col("_cand_url"))
-                .select(F.col("_cand_url").alias("_confirmed_url"))
-                .distinct()
-            )
-            false_pos = suspects.join(
-                F.broadcast(confirmed),
-                suspects[url_col] == F.col("_confirmed_url"),
-                "left_anti",
-            )
-        else:
-            confirmed = (
-                seen.join(
-                    F.broadcast(
-                        suspects.select("key", F.col("key2").alias("_cand_key2"))
-                    ),
-                    on="key",
-                    how="inner",
-                )
-                .where(F.col("_seen_val") == F.col("_cand_key2"))
-                .select("key", F.col("_cand_key2").alias("key2"))
-                .distinct()
-            )
-            false_pos = suspects.join(
-                F.broadcast(confirmed), ["key", "key2"], "left_anti"
-            )
+        confirmed = (
+            seen.select("key", "key2")
+            .join(F.broadcast(suspects.select("key", "key2")), ["key", "key2"])
+            .distinct()
+        )
+        false_pos = suspects.join(
+            F.broadcast(confirmed), ["key", "key2"], "left_anti"
+        )
         return sure_new.unionByName(false_pos).drop(*drop_cols)
 
     def add(
@@ -821,7 +740,7 @@ class SeenSet:
 
             _t0 = _time.time()
             ref = getattr(self, "_keyed_out_ref", None)
-            if ref is not None and ref() is urls and not self.store_urls:
+            if ref is not None and ref() is urls:
                 # keyed-frame reuse: `urls` IS the frame filter_unseen just
                 # returned — its backing checkpoint already carries the
                 # (bucket, key, key2) columns, so skip the re-canonicalize/
@@ -838,23 +757,15 @@ class SeenSet:
             # stay valid — the next filter_unseen ships each worker only
             # the batches it hasn't cached, O(batch) bytes, never a
             # re-sorted O(total pending) blob. The fold is paid at flush.
-            cols = ["bucket", "key"] + ([] if self.store_urls else ["key2"])
-            tbl = batch.select(*cols).toArrow()
-            bks = tbl.column("bucket").to_numpy(zero_copy_only=False)
-            kys = tbl.column("key").to_numpy(zero_copy_only=False)
-            self._pending_arrays.append(
-                (np.ascontiguousarray(bks), np.ascontiguousarray(kys))
+            tbl = batch.toArrow()
+            arrays = tuple(
+                np.ascontiguousarray(tbl.column(c).to_numpy(zero_copy_only=False))
+                for c in ("bucket", "key", "key2")
             )
-            order = np.argsort(kys, kind="stable")
-            if self.store_urls:
-                value = (np.ascontiguousarray(kys[order]),)
-            else:
-                k2s = tbl.column("key2").to_numpy(zero_copy_only=False)
-                value = (
-                    np.ascontiguousarray(kys[order]),
-                    np.ascontiguousarray(k2s[order]),
-                )
-            self._delta_bcs.append(spark.sparkContext.broadcast(value))
+            self._pending_arrays.append(arrays)
+            self._delta_bcs.append(
+                spark.sparkContext.broadcast(_lexsorted(*arrays[1:]))
+            )
             self._pending.append(batch)
             self.last_add = {
                 "append_s": round(_t1 - _t0, 3),
@@ -914,44 +825,44 @@ class SeenSet:
         return sid
 
     def flush(self, spark: SparkSession, n_partitions: int | None = None) -> int:
-        """Commit all deferred batches as ONE clustered append. The cached
-        prefilter already contains every pending key (folded at defer
-        time), so the flush is purely the durable write: union the
-        checkpointed batches, drop cross-batch dup keys, one token-bucket
-        shuffle, one sort, one parquet write, one snapshot commit."""
+        """Commit all deferred batches as ONE clustered append: union the
+        checkpointed batches, drop cross-batch duplicate (key, key2) pairs,
+        one token-bucket shuffle, one sort, one parquet write, one
+        snapshot commit, then one driver-side fold of the pending keys
+        into the cached prefilter."""
         if not self._pending:
             return self.table.current_snapshot_id() or 0
         from functools import reduce
 
         batch = reduce(lambda a, b: a.unionByName(b), self._pending)
+        allb, allk, allk2 = (np.concatenate(a) for a in zip(*self._pending_arrays))
         spark_ = batch.sparkSession
         n_part = int(n_partitions or spark_.conf.get("spark.sql.shuffle.partitions"))
-        if n_partitions is None and self._pending_arrays:
+        if n_partitions is None:
             # r6 output-file sizing (guide §6): the driver knows the exact
             # buffered row count (the delta arrays) — target >=128k rows
             # (~2.5 MB) per file instead of always fanning to the shuffle
             # width, which wrote dozens of sub-MB files per flush. Scale-
             # adaptive: row count drives the file count up to the shuffle
             # cap; an explicit n_partitions still wins.
-            n_pending = sum(len(k) for _, k in self._pending_arrays)
-            n_part = min(n_part, max(1, -(-n_pending // 131_072)))
+            n_part = min(n_part, max(1, -(-len(allk) // 131_072)))
         n_part = max(1, min(n_part, self.n_buckets))
         toks = _bucket_partition_tokens(n_part)
         pmap = F.create_map(
             *[F.lit(x) for p in range(n_part) for x in (p, toks[p])]
         )
         range_id = F.floor(F.col("bucket") * n_part / self.n_buckets).cast("int")
-        # r6: the driver already holds every buffered key (the delta
+        # r6: the driver already holds every buffered pair (the delta
         # arrays) — when they are provably unique across batches, the
         # cross-batch dropDuplicates is an identity and its whole exchange
         # is skipped. A crawl drain hits this every time (filter_unseen
-        # removed dups before add); duplicate keys keep the exact dedup.
-        keys_unique = False
-        if self._pending_arrays:
-            allk = np.concatenate([k for _, k in self._pending_arrays])
-            keys_unique = len(np.unique(allk)) == len(allk)
-        if not keys_unique:
-            batch = batch.dropDuplicates(["key"])
+        # removed dups before add); duplicate pairs keep the exact dedup.
+        # `first` marks each pair's first occurrence (lexsort is stable).
+        order = np.lexsort((allk2, allk))
+        first = np.ones(len(order), dtype=bool)
+        first[1:] = (np.diff(allk[order]) != 0) | (np.diff(allk2[order]) != 0)
+        if not first.all():
+            batch = batch.dropDuplicates(["key", "key2"])
         rows = (
             batch.repartition(n_part, pmap[range_id])
             .sortWithinPartitions("bucket", "key")
@@ -960,14 +871,13 @@ class SeenSet:
             rows, meta={"op": "seen-add", "batched": len(self._pending)}
         )
         self._pending = []
-        if self._bloom is not None and self._pending_arrays:
-            # ONE driver-side fold of all flushed keys (deduped) — the big
-            # broadcast is invalidated here, once per flush, instead of once
-            # per deferred add
-            allb = np.concatenate([b for b, _ in self._pending_arrays])
-            allk = np.concatenate([k for _, k in self._pending_arrays])
-            _, first = np.unique(allk, return_index=True)
-            self._fold_arrays_into_bloom(allb[first], allk[first])
+        if self._bloom is not None:
+            # ONE driver-side fold of all flushed pairs (deduped, so the
+            # cuckoo holds one copy per distinct pair) — the big broadcast
+            # is invalidated here, once per flush, instead of once per
+            # deferred add
+            keep = order[first]
+            self._fold_arrays_into_bloom(allb[keep], allk[keep])
             self._bloom_snapshot = sid
         self._clear_delta()
         return sid
@@ -1072,24 +982,27 @@ class SeenSet:
         filter_live = self._bloom is not None and self._bloom_snapshot == prev_snap
         # O(batch) driver collect, cuckoo only (bloom can't delete anyway);
         # remove() batches are reconcile-sized, not crawl-sized. The delete
-        # set is semi-joined against the exact table first: cuckoo delete is
-        # only valid for keys actually added (cuckoo.py contract) — deleting
-        # a never-added key that fingerprint-aliases a present key would
-        # strip the present key's copy and create a prefilter false negative.
+        # set is semi-joined on (key, key2) against the exact table first:
+        # cuckoo delete is only valid for keys actually added (cuckoo.py
+        # contract) — deleting a never-added url whose key collides with,
+        # or fingerprint-aliases, a present one would strip the present
+        # row's copy and create a prefilter false negative.
         rows = []
         if filter_live and self.backend == "cuckoo" and prev_snap is not None:
-            batch = keyed.select("bucket", "key").localCheckpoint(eager=True)
+            batch = keyed.localCheckpoint(eager=True)
             bks = sorted({r["bucket"] for r in batch.select("bucket").distinct().collect()})
             files = self.table.files_matching("bucket", bks)
             if files:
                 present = (
                     spark.read.parquet(*files)
                     .where(F.col("bucket").isin([int(b) for b in bks]))
-                    .select("key")
+                    .select("key", "key2")
                 )
-                rows = batch.join(present, "key", "left_semi").collect()
-        sid = self.table.merge_delete(spark, keyed.select("key"), key="key",
-                                      meta={"op": "seen-remove"})
+                rows = batch.join(present, ["key", "key2"], "left_semi").collect()
+        sid = self.table.merge_delete(
+            spark, keyed.select("key", "key2"), key=["key", "key2"],
+            meta={"op": "seen-remove"},
+        )
         if filter_live:
             if self.backend == "cuckoo" and rows:
                 bks = np.array([r["bucket"] for r in rows], dtype=np.int64)
@@ -1104,8 +1017,8 @@ class SeenSet:
     def count(self, spark: SparkSession) -> int:
         dfs = []
         if self.table.current_snapshot_id() is not None:
-            dfs.append(self.table.read(spark).select("key"))
-        dfs.extend(p.select("key") for p in self._pending)
+            dfs.append(self.table.read(spark).select("key", "key2"))
+        dfs.extend(p.select("key", "key2") for p in self._pending)
         if not dfs:
             return 0
         from functools import reduce

@@ -150,16 +150,30 @@ def test_crawl_order_and_seen_set_match_simulator(spark, crawl):
     }
     sim_gens, sim_states = simulate(nf)
 
-    # engine per-generation fetched sets from seen-set snapshot lineage
+    # engine per-generation fetched sets from seen-set snapshot lineage. The
+    # seen table holds (key, key2) identities, not urls: each engine pair
+    # is named by the simulator url keyed to it, and a pair no simulated
+    # url keys to stays a (key, key2) tuple — a mismatch below.
+    sim_urls = sorted(set().union(*sim_gens))
+    url_of = {
+        (r["key"], r["key2"]): r["sim_url"]
+        for r in crawl.seen.keyed(
+            spark.createDataFrame([(u, u) for u in sim_urls], "url string, sim_url string")
+        ).collect()
+    }
+    assert len(url_of) == len(sim_urls)
     history = crawl.state.history()
-    engine_gens: list[set[str]] = []
-    prev: set[str] = set()
+    engine_gens: list[set] = []
+    prev: set = set()
     for st in history:
         if st.generation == 0:
             continue
         snap = st.snapshots.get("seen") or None
         cur = (
-            {r["url"] for r in crawl.seen.table.read(spark, snapshot_id=snap).collect()}
+            {
+                url_of.get((r["key"], r["key2"]), (r["key"], r["key2"]))
+                for r in crawl.seen.table.read(spark, snapshot_id=snap).collect()
+            }
             if snap
             else set()
         )
@@ -170,7 +184,7 @@ def test_crawl_order_and_seen_set_match_simulator(spark, crawl):
 
     assert len(engine_gens) == len(sim_gens)
     for i, (e, s) in enumerate(zip(engine_gens, sim_gens)):
-        assert e == s, f"generation {i+1}: engine^sim diff {sorted(e ^ s)[:6]}"
+        assert e == s, f"generation {i+1}: engine^sim diff {sorted(map(str, e ^ s))[:6]}"
 
     # final URL-seen set equality (north rule)
     assert prev == set().union(*sim_gens)

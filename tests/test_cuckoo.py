@@ -16,7 +16,7 @@ from npm_search_spark.cuckoo import (
     DenseCuckoo,
     rows_for,
 )
-from npm_search_spark.seen import SeenSet
+from npm_search_spark.seen import DenseBloom, SeenSet
 
 
 def _mk_keys(seed: int, n: int, n_buckets: int = 16):
@@ -104,6 +104,12 @@ class TestDenseCuckoo:
 
 
 class TestSeenSetCuckooBackend:
+    @pytest.fixture(autouse=True)
+    def _streamed(self, monkeypatch):
+        # the prefilter backends only serve the streamed check: with the
+        # driver-held array bound at 0, every table takes it
+        monkeypatch.setattr(SeenSet, "EXACT_DRIVER_MAX_BYTES", 0)
+
     @pytest.fixture()
     def urls(self, spark):
         return spark.range(500).select(
@@ -123,6 +129,8 @@ class TestSeenSetCuckooBackend:
         expect = {r["url"] for r in urls.join(first, "url", "left_anti").collect()}
         assert got_b == expect
         assert got_c == expect
+        assert isinstance(bloom._bloom, DenseBloom)
+        assert isinstance(cuckoo._bloom, DenseCuckoo)
 
     def test_cold_start_rebuild(self, spark, tmp_path, urls):
         """A fresh SeenSet over an existing table rebuilds the cuckoo
@@ -132,12 +140,15 @@ class TestSeenSetCuckooBackend:
         s1.add(spark, urls)
         s2 = SeenSet(root, expected_keys_per_bucket=64, backend="cuckoo")
         assert s2.filter_unseen(spark, urls).count() == 0
+        assert isinstance(s2._bloom, DenseCuckoo)
 
-    def test_filter_unseen_zero_file_snapshot(self, spark, tmp_path, urls):
+    def test_filter_unseen_zero_file_snapshot(self, spark, tmp_path, urls, monkeypatch):
         """A snapshot that exists but holds zero files (everything
         merge-deleted) must treat every candidate as unseen in BOTH
         pruning modes — the unpruned branch used to call
         spark.read.parquet() with no paths and raise."""
+        # below 0 even the zero-byte table takes the streamed check
+        monkeypatch.setattr(SeenSet, "EXACT_DRIVER_MAX_BYTES", -1)
         root = str(tmp_path / "zf")
         s = SeenSet(root, expected_keys_per_bucket=64)
         s.add(spark, urls)
@@ -159,6 +170,7 @@ class TestSeenSetCuckooBackend:
             )
             s.add(spark, urls)
             assert s.filter_unseen(spark, urls).count() == 0
+            assert s._bloom is not None
             gone = urls.limit(100)
             s.remove(spark, gone)
             # released URLs pass the filter again; the rest stay seen

@@ -15,6 +15,22 @@ from npm_search_spark.sources import synthetic as SYN
 N_DOCS = 60
 
 
+def _seen_pairs(spark, crawl) -> set[tuple[int, int]]:
+    """The seen table's (key, key2) identities — it stores no urls."""
+    return {
+        (r["key"], r["key2"])
+        for r in crawl.seen.table.read(spark).select("key", "key2").collect()
+    }
+
+
+def _url_pairs(crawl, urls) -> set[tuple[int, int]]:
+    """The (key, key2) identities the seen set gives ``urls``."""
+    return {
+        (r["key"], r["key2"])
+        for r in crawl.seen.keyed(urls.select("url")).select("key", "key2").collect()
+    }
+
+
 @pytest.fixture(scope="module")
 def universe(spark):
     u = SYN.universe(spark, N_DOCS, partitions=4)
@@ -353,21 +369,15 @@ class TestBootstrap:
                 or "/npm/@angular/" in u or "/user-99" in u
                 for u in blocked_urls
             )
-            seen_urls = crawl.seen.table.read(spark)
-            assert seen_urls.join(
-                fr.where(F.col("state") == "robots_blocked").select("url"), "url", "left_semi"
-            ).count() == 0
+            blocked = _url_pairs(crawl, fr.where(F.col("state") == "robots_blocked"))
+            assert not blocked & _seen_pairs(spark, crawl)
 
         # seen-set invariant, exact: seen == URLs whose frontier row reached a
         # successfully-processed terminal state (done incl. dups, not_found).
         # robots-blocked and lost rows were never fetched -> never seen; a
         # transiently-failed URL enters seen only after its successful retry.
-        seen_urls = {r["url"] for r in crawl.seen.table.read(spark).select("url").collect()}
-        terminal_urls = {
-            r["url"]
-            for r in fr.where(F.col("state").isin("done", "not_found")).collect()
-        }
-        assert seen_urls == terminal_urls
+        terminal = _url_pairs(crawl, fr.where(F.col("state").isin("done", "not_found")))
+        assert _seen_pairs(spark, crawl) == terminal
 
         # retry-loss regression: with transient failures enabled, every named
         # doc must end up in packages or quarantined not_found — a retried
@@ -419,9 +429,7 @@ class TestBootstrap:
 
         assert digest(pa) == digest(pb)
         # seen sets identical
-        sa = {r["url"] for r in a.seen.table.read(spark).select("url").collect()}
-        sb = {r["url"] for r in b2.seen.table.read(spark).select("url").collect()}
-        assert sa == sb
+        assert _seen_pairs(spark, a) == _seen_pairs(spark, b2)
 
 
 class TestSteadyStateHints:
@@ -484,9 +492,7 @@ class TestCountsCarryEngine:
                 r["objectID"]
                 for r in c.packages.read(spark).select("objectID").collect()
             )
-            seen = sorted(
-                r["url"] for r in c.seen.table.read(spark).select("url").collect()
-            )
+            seen = sorted(_seen_pairs(spark, c))
             return pk, seen, [g.get("scheduled") for g in m], [
                 (g.get("hist_counts_carried"), g.get("scheduled")) for g in m
             ]
@@ -775,9 +781,7 @@ class TestGroupCommit:
         assert self._digest(spark, a.packages.read(spark)) == self._digest(
             spark, b.packages.read(spark)
         )
-        sa = {r["url"] for r in a.seen.table.read(spark).select("url").collect()}
-        sb = {r["url"] for r in b.seen.table.read(spark).select("url").collect()}
-        assert sa == sb
+        assert _seen_pairs(spark, a) == _seen_pairs(spark, b)
         assert not b.seen._pending  # everything flushed at exit
         # the whole point: fewer durable seen commits than generations
         gens = len([s for s in a.seen.table.history() if s.operation == "append"])
@@ -809,9 +813,7 @@ class TestGroupCommit:
         assert self._digest(spark, a.packages.read(spark)) == self._digest(
             spark, b2.packages.read(spark)
         )
-        sa = {r["url"] for r in a.seen.table.read(spark).select("url").collect()}
-        sb = {r["url"] for r in b2.seen.table.read(spark).select("url").collect()}
-        assert sa == sb
+        assert _seen_pairs(spark, a) == _seen_pairs(spark, b2)
 
 
 class TestBootstrapLifecycle:

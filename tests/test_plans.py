@@ -52,9 +52,12 @@ def test_parquet_pushdown(spark, sf_dir):
     assert "o_totalprice" not in plan.split("ReadSchema")[1][:200]
 
 
-def test_seen_exact_check_never_shuffles_big_side(spark, tmp_path):
+def test_seen_exact_check_never_shuffles_big_side(spark, tmp_path, monkeypatch):
     from npm_search_spark.seen import SeenSet
 
+    # the streamed check (the one that scans the table): forced by
+    # putting the driver-held array's bound at 0
+    monkeypatch.setattr(SeenSet, "EXACT_DRIVER_MAX_BYTES", 0)
     s = SeenSet(str(tmp_path / "seen"))
     urls = spark.createDataFrame(
         [(f"https://registry.npmjs.org/p{i}",) for i in range(50)], "url string"

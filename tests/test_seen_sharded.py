@@ -69,8 +69,7 @@ class TestShardedCorrectness:
 
     def test_wide_key_mode_composes(self, spark, tmp_path):
         s = SeenSet(
-            str(tmp_path / "w"), expected_keys_per_bucket=64,
-            store_urls=False, n_ranges=N_RANGES,
+            str(tmp_path / "w"), expected_keys_per_bucket=64, n_ranges=N_RANGES,
         )
         s.add(spark, _urls(spark, 0, 400))
         s.add(spark, _urls(spark, 400, 500), defer=True)

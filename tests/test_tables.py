@@ -98,11 +98,13 @@ class TestSeenSet:
         )
         assert [r["url"] for r in out.collect()] == ["https://registry.npmjs.org/react2"]
 
-    def test_exact_check_prunes_files(self, spark, tmp_path):
+    def test_exact_check_prunes_files(self, spark, tmp_path, monkeypatch):
         """A small suspect batch against a large seen table must read only
         the files whose bucket range can contain the suspects — sub-linear
         in table size (manifest-stats pruning over the (bucket, key)
-        range-clustered layout)."""
+        range-clustered layout). The bound at 0 forces the streamed check
+        a table too big for the driver-held array takes."""
+        monkeypatch.setattr(SeenSet, "EXACT_DRIVER_MAX_BYTES", 0)
         s = SeenSet(str(tmp_path / "seen"), expected_keys_per_bucket=1000)
         for g in range(4):
             urls = [f"https://registry.npmjs.org/pkg-{g}-{i}" for i in range(500)]
@@ -122,9 +124,11 @@ class TestSeenSet:
         assert s.last_prune["files_total"] >= 8
         assert 0 < s.last_prune["files_scanned"] < s.last_prune["files_total"]
 
-    def test_compact_restores_locality(self, spark, tmp_path):
+    def test_compact_restores_locality(self, spark, tmp_path, monkeypatch):
         """Many incremental appends -> one compacted, (bucket, key)-clustered
-        file set: fewer files, same rows, pruning tighter than before."""
+        file set: fewer files, same rows, pruning tighter than before
+        (read from the streamed check, forced by the bound at 0)."""
+        monkeypatch.setattr(SeenSet, "EXACT_DRIVER_MAX_BYTES", 0)
         s = SeenSet(str(tmp_path / "seen"), expected_keys_per_bucket=1000)
         for g in range(6):
             urls = [f"https://registry.npmjs.org/c-{g}-{i}" for i in range(300)]
@@ -219,12 +223,15 @@ class TestSeenDeferred:
         s.flush(spark)
         assert s.table.read(spark).count() == 2
 
-    def test_defer_keeps_dense_broadcast_stable(self, spark, tmp_path):
+    def test_defer_keeps_dense_broadcast_stable(self, spark, tmp_path, monkeypatch):
         """Deferred adds must not invalidate the dense filter's broadcast:
         re-shipping O(table) bits to every Python worker per micro-batch
         is a per-worker tax that grows with cluster size (the N->4N
         scaling criterion's enemy). Pending keys ride the small sorted-key
-        delta broadcast instead; the dense fold happens once, at flush."""
+        delta broadcast instead; the dense fold happens once, at flush.
+        The bound at 0 forces the streamed check, the one that broadcasts
+        the dense filter."""
+        monkeypatch.setattr(SeenSet, "EXACT_DRIVER_MAX_BYTES", 0)
         s = SeenSet(str(tmp_path / "seen"), expected_keys_per_bucket=1000)
         s.add(spark, self._urls(spark, ["https://registry.npmjs.org/base"]))
         s.filter_unseen(spark, self._urls(spark, ["https://x.org/q"])).count()
@@ -234,7 +241,7 @@ class TestSeenDeferred:
         b2 = [f"https://registry.npmjs.org/g2-{i}" for i in range(40)]
         s.add(spark, self._urls(spark, b1), defer=True)
         assert s._bloom_bc is dense_bc  # untouched by the deferred add
-        deltas = s._delta_broadcasts(spark)
+        deltas = list(s._delta_bcs)
         assert len(deltas) == 1 and len(deltas[0].value[0]) == 40
         # dedup still exact across buffer + table while the dense bc is stale
         out = s.filter_unseen(spark, self._urls(spark, b1 + b2))
@@ -242,12 +249,12 @@ class TestSeenDeferred:
         s.add(spark, self._urls(spark, b2), defer=True)
         assert s._bloom_bc is dense_bc  # still untouched
         # per-batch deltas: batch 1's broadcast is reused, batch 2 adds one
-        deltas2 = s._delta_broadcasts(spark)
+        deltas2 = list(s._delta_bcs)
         assert deltas2[0] is deltas[0] and len(deltas2) == 2
         assert len(deltas2[1].value[0]) == 40
         # flush folds ONCE: dense broadcast finally rolls, delta clears
         s.flush(spark)
-        assert s._delta_broadcasts(spark) == []
+        assert s._delta_bcs == []
         s.filter_unseen(spark, self._urls(spark, b1)).count()
         assert s._bloom_bc is not dense_bc
         assert s.filter_unseen(spark, self._urls(spark, b1 + b2)).count() == 0
