@@ -32,8 +32,6 @@ def main() -> int:
                     help="politeness budget = rate x this (seconds per generation)")
     ap.add_argument("--max-generations", type=int, default=200)
     ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--seen-backend", choices=["bloom", "cuckoo"], default="bloom",
-                    help="URL-seen prefilter (cuckoo adds exact deletion)")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -51,7 +49,6 @@ def main() -> int:
         spark, args.root, uni,
         total_npm_downloads=int(total),
         budget_multiplier=args.budget_multiplier,
-        seen_backend=args.seen_backend,
     )
     if not crawl.frontier.exists():
         crawl.seed(uni["raw_docs"].select("doc_id"))

@@ -41,8 +41,6 @@ def main() -> int:
     ap.add_argument("--n-docs", type=int, default=10_000)
     ap.add_argument("--budget-multiplier", type=int, default=600)
     ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--seen-backend", choices=["bloom", "cuckoo"], default="bloom",
-                    help="URL-seen prefilter (cuckoo adds exact deletion)")
     ap.add_argument("--emit-synthetic-changes", type=int, default=0,
                     help="write N synthetic change events before draining (smoke mode)")
     args = ap.parse_args()
@@ -64,7 +62,6 @@ def main() -> int:
         total_npm_downloads=int(total),
         budget_multiplier=args.budget_multiplier,
         gc_terminal=True,  # long-running mode: GC processed frontier rows
-        seen_backend=args.seen_backend,
     )
     st = crawl.state.load()
     if st is None:

@@ -747,7 +747,6 @@ class Crawl:
         transient_modulus: int = 37,
         throttle_modulus: int = 0,
         gc_terminal: bool = True,
-        seen_backend: str = "bloom",
         checkpoint_interval: int = 1,
         carry_counts: bool = True,
     ):
@@ -780,7 +779,7 @@ class Crawl:
         self.packages = SnapTable(f"{root}/packages", FINAL_PACKAGE)
         self.one_time = SnapTable(f"{root}/one_time_data", ONE_TIME)
         self.not_found = SnapTable(f"{root}/not_found", QUARANTINE)
-        self.seen = SeenSet(f"{root}/seen", backend=seen_backend)
+        self.seen = SeenSet(f"{root}/seen")
         self.state = StateStore(f"{root}/state")
         self.universe = universe
         self.budgets = DEFAULT_BUDGETS if budgets is None else budgets
@@ -1245,15 +1244,8 @@ class Crawl:
             )
             .cache()
         )
-        failed = reg_fetched.where(F.col("_status") == "retry").drop("_status")
-        retry_urls: list[DataFrame] = [failed.select("url")]
-        throttled = reg_fetched.where(F.col("_status") == "throttled").drop("_status")
-        throttled_urls = [throttled.select("url")]
-        notfound_urls: list[DataFrame] = []
-        nf = reg_fetched.where(F.col("_status") == "not_found").drop("_status")
-        notfound_urls.append(nf.select("url"))
         ok = reg_fetched.where(F.col("_status") == "ok").drop("_status")
-        new_rows, done_urls = [], [fresh.select("url")]
+        new_rows = []
         hop_hosts: set[str] = set()  # static host set of enqueued hop kinds
 
         # ---- fused per-generation metrics pass ---------------------------------
@@ -1338,6 +1330,13 @@ class Crawl:
         metrics["registry_ok"] = n_ok
         metrics["registry_retry"] = sc.get("retry", 0)
         metrics["registry_throttled"] = sc.get("throttled", 0)
+        # urls of each non-ok fetch outcome that occurred: a status with no
+        # rows joins, unions and commits nothing below
+        outcome_urls = {
+            s: reg_fetched.where(F.col("_status") == s).select("url")
+            for s in ("retry", "throttled", "not_found")
+            if sc.get(s)
+        }
         if n_ok:
             formatted = format_packages_df(
                 ok, self.now_day_ms, "2026-08-16T00:00:00.000Z"
@@ -1486,21 +1485,13 @@ class Crawl:
         # document is silently lost — the reference re-queues by leaving
         # isProcessed unset, src/indexers/MainWatchIndexer.ts:36-45)
         processed = fresh.select("url")
-        for pending_again in (retry_urls, throttled_urls):
-            if pending_again:
-                processed = processed.join(union_all(pending_again), "url", "left_anti")
+        for pending_again in ("retry", "throttled"):
+            if pending_again in outcome_urls:
+                processed = processed.join(outcome_urls[pending_again], "url", "left_anti")
         self.seen.add(spark, processed, defer=self.checkpoint_interval > 1)
 
-        done = union_all(done_urls).withColumn("_new_state", F.lit("done"))
-        updates = [done]
-        if retry_urls:
-            updates.append(union_all(retry_urls).withColumn("_new_state", F.lit("retry")))
-        if throttled_urls:
-            updates.append(
-                union_all(throttled_urls).withColumn("_new_state", F.lit("throttled"))
-            )
-        if notfound_urls:
-            updates.append(union_all(notfound_urls).withColumn("_new_state", F.lit("not_found")))
+        updates = [fresh.select("url").withColumn("_new_state", F.lit("done"))]
+        updates += [u.withColumn("_new_state", F.lit(s)) for s, u in outcome_urls.items()]
         # later entries win (retry/not_found override the blanket 'done')
         upd = union_all(updates).groupBy("url").agg(
             F.max_by("_new_state", F.when(F.col("_new_state") == "done", 0).otherwise(1)).alias("_new_state")
@@ -1634,10 +1625,10 @@ class Crawl:
                 for hh, bn, c in folds:
                     bins = self.hist_counts.setdefault(hh, {})
                     bins[bn] = bins.get(bn, 0) + c
-        if notfound_urls:
+        if "not_found" in outcome_urls:
             # moved_by: which job/generation quarantined the row (reference
             # tags moved records `movedBy`, src/algolia/index.ts:64-93)
-            nf_rows = fresh.join(union_all(notfound_urls), "url", "left_semi").withColumn(
+            nf_rows = fresh.join(outcome_urls["not_found"], "url", "left_semi").withColumn(
                 "moved_by", F.lit(f"bootstrap:gen-{generation}")
             )
             self.not_found.append(nf_rows, meta={"generation": generation})

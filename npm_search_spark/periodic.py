@@ -154,8 +154,9 @@ def run_periodic(crawl: Crawl, now_day_ms: int, error_modulus: int = 0) -> dict:
     )
     if n_gone:
         # release the registry URLs from the seen set so a later
-        # re-publish of the same name is re-crawled (the cuckoo backend
-        # deletes from the prefilter exactly; bloom goes conservative)
+        # re-publish of the same name is re-crawled (the Bloom prefilter
+        # cannot delete and goes stale-conservative; the exact check
+        # resolves the removed keys)
         from .frontier import registry_url
         from .functions.urls import canonicalize_url as _canon
 

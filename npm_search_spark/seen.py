@@ -1,4 +1,4 @@
-"""URL-seen set: partitioned Bloom/cuckoo prefilter + exact key check.
+"""URL-seen set: partitioned Bloom prefilter + exact key check.
 
 Re-creates the reference's dedup semantics — its queue upsert by objectID
 and isProcessed flag (src/watch.ts:134-141, src/indexers/
@@ -14,20 +14,19 @@ Design:
   compare both halves, so a 64-bit key collision never merges two urls.
   Rows are written repartitioned+sorted by (bucket, key) so parquet
   row-group min/max stats prune the exact-check scan.
-- Tables up to ``SeenSet.EXACT_DRIVER_MAX_BYTES`` are resolved from a
-  driver-held, (key, key2)-lexsorted copy broadcast once per snapshot:
-  one Arrow pass decides membership exactly.
-- Larger tables use a prefilter sharded by bucket, built per snapshot with
-  mapInArrow (vectorized numpy, one shard per bucket partition), merged on
-  the driver, and broadcast. Candidates that miss it are definitively
+- Tables up to ``SeenSet.EXACT_DRIVER_MAX_BYTES`` (and the empty table)
+  are resolved from a driver-held, (key, key2)-lexsorted copy broadcast
+  once per snapshot: one Arrow pass decides membership exactly.
+- Larger tables use a Bloom filter sharded by bucket (DenseBloom: one
+  (n_buckets, m/64) bitmap), built per snapshot with mapInArrow
+  (vectorized numpy, one shard per bucket partition), OR-merged on the
+  driver and broadcast whole. Candidates that miss it are definitively
   unseen (no false negatives); hits go to a bucket-pruned semi-join that
-  compares (key, key2) (false positives resolved exactly). Two backends,
-  selected at construction: a Bloom filter (OR-merged bitmaps, default) or
-  a cuckoo filter (cuckoo.DenseCuckoo — deletable, so `remove()` keeps it
-  tight).
+  compares (key, key2) (false positives resolved exactly). The Bloom
+  cannot delete: `remove()` leaves it stale-conservative, and the exact
+  check resolves the extra suspects.
 - At 1e10 keys / 1% fp the filter is ~1.5 GiB total, i.e. ~6 MiB per
-  bucket shard: on a real cluster only the shards matching the micro-batch's
-  buckets need shipping; in local mode we broadcast the whole dict.
+  bucket shard.
 
 The streamed exact check never leaves the JVM-side join path; the
 prefilter is the only Python stage and is Arrow-batched.
@@ -42,8 +41,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cuckoo import SLOTS as CUCKOO_SLOTS
-from .cuckoo import CuckooShards, DenseCuckoo, rows_for
 from .functions.urls import N_SEEN_BUCKETS, canonicalize_url, url_bucket, url_key
 from .tables import SnapTable
 
@@ -126,6 +123,13 @@ def _bucket_partition_tokens(n_parts: int) -> list[int]:
     return out  # type: ignore[return-value]
 
 
+def _bucket_slice_partitioner(n_parts: int, n_buckets: int):
+    """The column that ``repartition(n_parts, ...)`` clusters seen rows by:
+    partition p holds exactly the contiguous bucket slice whose
+    ``floor(bucket * n_parts / n_buckets)`` is p."""
+    toks = _bucket_partition_tokens(n_parts)
+    pmap = F.create_map(*[F.lit(x) for p in range(n_parts) for x in (p, toks[p])])
+    return pmap[F.floor(F.col("bucket") * n_parts / n_buckets).cast("int")]
 
 
 def _bloom_params(expected_keys: int, fp_rate: float) -> tuple[int, int]:
@@ -198,40 +202,6 @@ class BloomShards:
         return out
 
 
-class _OffsetFilter:
-    """A contiguous bucket-range slice of a dense prefilter — the unit a
-    sharded broadcast ships (~filter_bytes / n_ranges each). Buckets passed
-    to ``might_contain`` stay absolute; the slice re-bases them."""
-
-    def __init__(self, inner, lo: int):
-        self.inner = inner
-        self.lo = lo
-
-    def might_contain(self, buckets: np.ndarray, keys: np.ndarray) -> np.ndarray:
-        return self.inner.might_contain(buckets - self.lo, keys)
-
-
-def _slice_filter(flt, lo: int, hi: int) -> _OffsetFilter:
-    """Copy buckets [lo, hi) of a DenseBloom/DenseCuckoo into a standalone
-    slice whose pickle is exactly the slice's bytes."""
-    if isinstance(flt, DenseBloom):
-        s = DenseBloom(flt.m, flt.k, hi - lo)
-        s.bits = np.ascontiguousarray(flt.bits[lo:hi])
-    else:
-        s = DenseCuckoo(flt.n, hi - lo)
-        s.table = np.ascontiguousarray(flt.table[lo:hi])
-        s.stash = {(b - lo, r, f) for (b, r, f) in flt.stash if lo <= b < hi}
-    return _OffsetFilter(s, lo)
-
-
-def _range_bounds(rid: int, n_ranges: int, n_buckets: int) -> tuple[int, int]:
-    """Bucket bounds [lo, hi) of range ``rid`` under the floor(bucket * R /
-    NB) range id used everywhere (append clustering, candidate alignment)."""
-    lo = -((-rid * n_buckets) // n_ranges)
-    hi = -((-(rid + 1) * n_buckets) // n_ranges)
-    return lo, hi
-
-
 class SeenSet:
     def __init__(
         self,
@@ -239,33 +209,16 @@ class SeenSet:
         expected_keys_per_bucket: int = 200_000,
         fp_rate: float = 0.01,
         n_buckets: int = N_SEEN_BUCKETS,
-        backend: str = "bloom",
         store_urls: bool = False,
-        n_ranges: int = 0,
     ):
         """Rows are (bucket, key, key2): identity is the 128-bit
         (key, key2) pair, never the url string.
 
-        ``backend``: the in-memory prefilter implementation.
-
-        - ``"bloom"`` (default): DenseBloom — ~9.6 bits/key at 1 % fp;
-          deletions leave it stale-conservative (extra false positives,
-          resolved by the exact check — never a false negative).
-        - ``"cuckoo"``: cuckoo.DenseCuckoo — ~19 bits/key, fp ≈ 0.012 %,
-          2-row lookups, and **exact O(1) deletion** so `remove()` keeps
-          the filter tight (package deletions, bootstrap redo).
-
-        ``n_ranges``: 0 (default) broadcasts the dense prefilter whole —
-        right for local mode and small tables. >0 is the sharded scale
-        mode: the filter is broadcast as ``n_ranges`` bucket-range slices,
-        candidates are range-aligned with ONE small shuffle (the exact
-        token partitioner — no sampling pass), and each task dereferences
-        ONLY the slice broadcasts covering its partition's bucket range —
-        so at the 10^10-key north star (~1.5 GiB of filter at 1% fp) a
-        worker fetches ~filter/n_ranges bytes per range it owns instead of
-        the whole 1.5 GiB, and a flush invalidates (re-ships) only the
-        slices whose buckets changed. tests/test_seen_sharded.py pins the
-        touch-only-your-range property with poisoned foreign slices.
+        The prefilter of the streamed check is a DenseBloom sized for
+        ``expected_keys_per_bucket`` at ``fp_rate`` (~9.6 bits/key at 1 %),
+        broadcast whole. It cannot delete: `remove()` leaves it
+        stale-conservative (extra false positives, resolved by the exact
+        check — never a false negative).
 
         ``store_urls`` is accepted for old callers: False is the only row
         format, True raises.
@@ -276,30 +229,16 @@ class SeenSet:
             raise ValueError(
                 "seen-set url rows were removed: rows are (bucket, key, key2)"
             )
-        if backend not in ("bloom", "cuckoo"):
-            raise ValueError(f"unknown seen-set backend {backend!r}")
         schema = T.StructType.fromDDL(SEEN_SCHEMA)
         # per-file bucket min/max in the manifest: the exact check prunes
         # files driver-side by the suspects' buckets before any I/O
         self.table = SnapTable(root, schema, stats_cols=["bucket"])
         self.last_prune: dict[str, int] = {}
         self.n_buckets = n_buckets
-        self.backend = backend
         self.m, self.k = _bloom_params(expected_keys_per_bucket, fp_rate)
-        self.cuckoo_rows = rows_for(expected_keys_per_bucket)
-        # `_bloom` is the prefilter object regardless of backend (DenseBloom
-        # or DenseCuckoo — identical might_contain/merge_shard surface)
-        self._bloom: DenseBloom | DenseCuckoo | None = None
+        self._bloom: DenseBloom | None = None
         self._bloom_snapshot: int | None = None
         self._bloom_bc = None  # cached spark broadcast of the dense filter
-        if n_ranges and not 0 < n_ranges <= n_buckets:
-            raise ValueError(f"n_ranges must be in (0, {n_buckets}]")
-        self.n_ranges = int(n_ranges)
-        # sharded mode: one broadcast per bucket range; a fold marks only
-        # the touched ranges dirty, so flushes re-ship slice bytes, never
-        # the whole filter
-        self._range_bcs: list = []
-        self._range_dirty: set[int] = set()
         # group-commit buffer: keyed (bucket, key, key2) batches added with
         # defer=True, localCheckpointed, awaiting one flush() append
         self._pending: list[DataFrame] = []
@@ -324,7 +263,6 @@ class SeenSet:
         # dense prefilter (which is already driver-held, O(table) bits);
         # gated on table bytes <= EXACT_DRIVER_MAX_BYTES so the 10^10-key
         # deployment keeps the streamed, never-shuffled exact check.
-        self._exact_arrays: tuple[np.ndarray, np.ndarray] | None = None
         self._exact_snapshot: int | None = None
         self._exact_bc = None
         # keyed-frame reuse stash (see filter_unseen's exact path): weakref
@@ -339,105 +277,37 @@ class SeenSet:
 
     # -- bloom maintenance ---------------------------------------------------
 
-    def _invalidate_filter_broadcasts(self, buckets=None) -> None:
-        """Mark cached prefilter broadcasts stale after a fold/delete.
-        ``buckets``: the touched bucket ids — sharded mode dirties only
-        their ranges (None = everything, e.g. a full rebuild)."""
+    def _invalidate_bloom_bc(self) -> None:
+        """Drop the cached prefilter broadcast after a fold or rebuild."""
         if self._bloom_bc is not None:
             # unpersist, NOT destroy: lazy plans built before this update
             # may still reference the old broadcast and must re-fetch it
             self._bloom_bc.unpersist()
             self._bloom_bc = None
-        if not self.n_ranges:
-            return
-        if buckets is None:
-            self._range_dirty.update(range(self.n_ranges))
-            return
-        b = np.asarray(buckets, dtype=np.int64)
-        if len(b):
-            rids = np.unique(b * self.n_ranges // self.n_buckets)
-            self._range_dirty.update(int(r) for r in rids)
-
-    def _range_broadcasts(self, spark: SparkSession) -> list:
-        """The per-bucket-range slice broadcasts (sharded mode). Only dirty
-        ranges are re-sliced and re-broadcast; a steady-state flush touches
-        the ranges its keys landed in and leaves every other slice's
-        broadcast (and the workers' cached copies) untouched."""
-        self._bloom_current(spark)
-        if not self._range_bcs:
-            self._range_bcs = [None] * self.n_ranges
-            self._range_dirty = set(range(self.n_ranges))
-        for rid in sorted(self._range_dirty):
-            lo, hi = _range_bounds(rid, self.n_ranges, self.n_buckets)
-            if self._range_bcs[rid] is not None:
-                self._range_bcs[rid].unpersist()
-            self._range_bcs[rid] = spark.sparkContext.broadcast(
-                _slice_filter(self._bloom, lo, hi)
-            )
-        self._range_dirty.clear()
-        return list(self._range_bcs)
 
     def _shards_of(self, df: DataFrame) -> list:
-        """Per-partition filter shards via mapInArrow -> (bucket, bits,
-        overflow) rows. For the bloom backend ``bits`` is the packed
-        bitmap; for cuckoo it's the subtable buffer and ``overflow`` packs
-        any (row, fingerprint) pairs whose eviction walk overran (empty
-        below the target load)."""
+        """Per-partition Bloom shards via mapInArrow -> (bucket, bits) rows,
+        ``bits`` the shard's packed bitmap: the cold build hashes on the
+        executors and the driver only ORs the shards together."""
         df = df.select("bucket", "key")
         m, k = self.m, self.k
-        backend, cuckoo_rows = self.backend, self.cuckoo_rows
 
         def build(batches):
             import pyarrow as pa
 
-            out_schema = pa.schema(
-                [
-                    ("bucket", pa.int32()),
-                    ("bits", pa.binary()),
-                    ("overflow", pa.binary()),
-                ]
-            )
-            local = (
-                BloomShards(m, k) if backend == "bloom" else CuckooShards(cuckoo_rows)
-            )
+            out_schema = pa.schema([("bucket", pa.int32()), ("bits", pa.binary())])
+            local = BloomShards(m, k)
             for batch in batches:
                 local.add(
                     batch.column("bucket").to_numpy(zero_copy_only=False),
                     batch.column("key").to_numpy(zero_copy_only=False),
                 )
-            over: dict[int, list[tuple[int, int]]] = {}
-            for b, row, fp in getattr(local, "overflow", []):
-                over.setdefault(b, []).append((row, fp))
             for b, bm in local.shards.items():
-                ov = np.array(over.get(b, []), dtype=np.int64).tobytes()
                 yield pa.RecordBatch.from_pydict(
-                    {"bucket": [b], "bits": [bm.tobytes()], "overflow": [ov]},
-                    schema=out_schema,
+                    {"bucket": [b], "bits": [bm.tobytes()]}, schema=out_schema
                 )
 
-        return df.mapInArrow(
-            build, schema="bucket int, bits binary, overflow binary"
-        ).collect()
-
-    def _new_filter(self):
-        if self.backend == "bloom":
-            return DenseBloom(self.m, self.k, self.n_buckets)
-        return DenseCuckoo(self.cuckoo_rows, self.n_buckets)
-
-    def _fold_into_bloom(self, rows) -> None:
-        if self._bloom is None:
-            self._bloom = self._new_filter()
-        for r in rows:
-            if self.backend == "bloom":
-                self._bloom.merge_shard(
-                    r["bucket"], np.frombuffer(r["bits"], dtype=np.uint64)
-                )
-            else:
-                self._bloom.merge_shard(r["bucket"], r["bits"])
-                ov = np.frombuffer(r["overflow"] or b"", dtype=np.int64)
-                for row, fp in ov.reshape(-1, 2):
-                    self._bloom.reinsert_pair(r["bucket"], int(row), int(fp))
-        self._invalidate_filter_broadcasts([r["bucket"] for r in rows])
+        return df.mapInArrow(build, schema="bucket int, bits binary").collect()
 
     def _bloom_current(self, spark: SparkSession) -> DenseBloom:
         """Rebuild from the full table only on a cold start / external
@@ -445,21 +315,23 @@ class SeenSet:
         (O(batch) per micro-batch, not O(table))."""
         snap = self.table.current_snapshot_id()
         if self._bloom is None or self._bloom_snapshot != snap:
-            self._bloom = self._new_filter()
-            self._invalidate_filter_broadcasts(None)  # full rebuild
+            self._bloom = DenseBloom(self.m, self.k, self.n_buckets)
+            self._invalidate_bloom_bc()
             if snap is not None:
-                self._fold_into_bloom(self._shards_of(self.table.read(spark)))
+                for r in self._shards_of(self.table.read(spark)):
+                    self._bloom.merge_shard(
+                        r["bucket"], np.frombuffer(r["bits"], dtype=np.uint64)
+                    )
             self._bloom_snapshot = snap
             # deferred batches are NOT folded here: their keys stay
             # prefilter-visible through the sorted-key delta broadcast
             # (_delta_bcs), which filter_unseen ORs into the dense
             # filter's verdict — a miss would route a pending key to
             # "definitely unseen" (a dup crawl), so the delta is exact.
-        if not self.n_ranges:
-            # keep the exact-array broadcast current alongside the
-            # prefilter (same lifecycle: derived filter state, rebuilt per
-            # snapshot; cheap no-op when the table is scale-sized)
-            self._exact_current(spark)
+        # keep the exact-array broadcast current alongside the prefilter
+        # (same lifecycle: derived filter state, rebuilt per snapshot;
+        # cheap no-op when the table is scale-sized)
+        self._exact_current(spark)
         return self._bloom
 
     def _bloom_broadcast(self, spark: SparkSession):
@@ -473,36 +345,38 @@ class SeenSet:
     def _exact_current(self, spark: SparkSession):
         """The broadcast of the (key, key2)-lexsorted exact table, rebuilt
         only when the snapshot changes (a drain's generations share one
-        snapshot — deferred adds live in the delta broadcasts). Returns
-        None when there is no table yet or it is too big for a driver copy
-        (above ``EXACT_DRIVER_MAX_BYTES``: the streamed check's regime)."""
+        snapshot — deferred adds live in the delta broadcasts). A table
+        with no snapshot yet (deferred adds before the first flush) is an
+        empty one, so its array pass decides from the deltas alone.
+        Returns None when the table is too big for a driver copy (above
+        ``EXACT_DRIVER_MAX_BYTES``: the streamed check's regime)."""
         import os
 
         snap_id = self.table.current_snapshot_id()
-        if snap_id is None:
-            return None
         if self._exact_snapshot == snap_id and self._exact_bc is not None:
             return self._exact_bc
-        snap = self.table.snapshot()
+        if self._exact_bc is not None:
+            # stale: also when the table outgrew the bound, whose check
+            # never reads this copy again
+            self._exact_bc.unpersist()
+            self._exact_bc = None
+        files = self.table.snapshot().files if snap_id is not None else []
         try:
-            total = sum(os.path.getsize(f) for f in snap.files)
+            total = sum(os.path.getsize(f) for f in files)
         except OSError:
             return None
-        if total > self.EXACT_DRIVER_MAX_BYTES:
+        if snap_id is not None and total > self.EXACT_DRIVER_MAX_BYTES:
             return None
         import pyarrow.parquet as pq
 
         ks, k2s = [], []
-        for f in snap.files:
+        for f in files:
             t = pq.read_table(f, columns=["key", "key2"])
             ks.append(t.column("key").to_numpy(zero_copy_only=False))
             k2s.append(t.column("key2").to_numpy(zero_copy_only=False))
         k = np.concatenate(ks) if ks else np.empty(0, dtype=np.int64)
         k2 = np.concatenate(k2s) if k2s else np.empty(0, dtype=np.int64)
-        self._exact_arrays = _lexsorted(k, k2)
-        if self._exact_bc is not None:
-            self._exact_bc.unpersist()
-        self._exact_bc = spark.sparkContext.broadcast(self._exact_arrays)
+        self._exact_bc = spark.sparkContext.broadcast(_lexsorted(k, k2))
         self._exact_snapshot = snap_id
         return self._exact_bc
 
@@ -549,10 +423,10 @@ class SeenSet:
         broadcasts confirm (key, key2) pairs exactly inside the Arrow pass.
         The durable table is checked one of two ways, chosen by its size:
 
-        - up to ``EXACT_DRIVER_MAX_BYTES`` (and not sharded): against the
-          driver-held lexsorted array, in the same Arrow pass — one job
-          over the batch, no table scan, no join;
-        - above it: the prefilter (Arrow batch, broadcast shards) splits
+        - up to ``EXACT_DRIVER_MAX_BYTES``, or with no snapshot yet:
+          against the driver-held lexsorted array, in the same Arrow pass —
+          one job over the batch, no table scan, no join;
+        - above it: the broadcast Bloom prefilter (same Arrow pass) splits
           candidates into definitely-unseen and possibly-seen; only the
           latter touch the table, via a bucket-pruned scan broadcast-joined
           on (key, key2) (the big table is never shuffled).
@@ -576,7 +450,7 @@ class SeenSet:
                 hit |= _contains_pairs(*dbc.value, k, k2)
             return hit
 
-        exact_bc = None if self.n_ranges else self._exact_current(spark)
+        exact_bc = self._exact_current(spark)
         if exact_bc is not None:
 
             @pandas_udf("boolean")
@@ -611,35 +485,7 @@ class SeenSet:
             self._keyed_out_rows = kept
             return out
 
-        if self.n_ranges:
-            # sharded mode: align candidates to bucket ranges (ONE small
-            # shuffle of the batch via the exact token partitioner), then
-            # have each task dereference only the slice broadcasts its
-            # partition's buckets fall in — the worker fetches slice bytes,
-            # never the whole filter
-            toks = _bucket_partition_tokens(self.n_ranges)
-            pmap = F.create_map(
-                *[F.lit(x) for p in range(self.n_ranges) for x in (p, toks[p])]
-            )
-            range_id = F.floor(
-                F.col("bucket") * self.n_ranges / self.n_buckets
-            ).cast("int")
-            cand = cand.repartition(self.n_ranges, pmap[range_id])
-            bcs = self._range_broadcasts(spark)
-            n_ranges, n_buckets = self.n_ranges, self.n_buckets
-
-            def dense_hit(bk: np.ndarray, k: np.ndarray) -> np.ndarray:
-                hit = np.zeros(len(k), dtype=bool)
-                rids = bk.astype(np.int64) * n_ranges // n_buckets
-                for rid in np.unique(rids):
-                    m = rids == rid
-                    hit[m] = bcs[int(rid)].value.might_contain(bk[m], k[m])
-                return hit
-        else:
-            bc = self._bloom_broadcast(spark)
-
-            def dense_hit(bk: np.ndarray, k: np.ndarray) -> np.ndarray:
-                return bc.value.might_contain(bk, k)
+        bc = self._bloom_broadcast(spark)
 
         # 0 unseen, 1 seen (a deferred batch's delta holds the pair), 2
         # possibly in the table (prefilter hit; resolved by the exact table
@@ -650,7 +496,7 @@ class SeenSet:
 
             k = key.to_numpy()
             confirmed = pending_hit(k, key2.to_numpy())
-            hit = dense_hit(bucket.to_numpy(), k)
+            hit = bc.value.might_contain(bucket.to_numpy(), k)
             return pd.Series(
                 np.where(confirmed, 1, np.where(hit, 2, 0)).astype(np.int8)
             )
@@ -682,14 +528,14 @@ class SeenSet:
             files = self.table.files_matching("bucket", sus_buckets)
             self.last_prune = {
                 "files_scanned": len(files),
-                "files_total": len(snap.files) if snap else 0,
+                "files_total": len(snap.files),
             }
             if files and sus_buckets:
                 seen = spark.read.parquet(*files).where(
                     F.col("bucket").isin([int(b) for b in sus_buckets])
                 )
         else:
-            files = snap.files if snap else []
+            files = snap.files
             self.last_prune = {
                 "files_scanned": len(files),
                 "files_total": len(files),
@@ -789,14 +635,9 @@ class SeenSet:
         # is ONE job, all JVM-side (no Python stage in the write path).
         n_part = int(n_partitions or spark_.conf.get("spark.sql.shuffle.partitions"))
         n_part = max(1, min(n_part, self.n_buckets))
-        toks = _bucket_partition_tokens(n_part)
-        pmap = F.create_map(
-            *[F.lit(x) for p in range(n_part) for x in (p, toks[p])]
-        )
-        range_id = F.floor(F.col("bucket") * n_part / self.n_buckets).cast("int")
         rows = (
             self._rows_of(urls, url_col)
-            .repartition(n_part, pmap[range_id])
+            .repartition(n_part, _bucket_slice_partitioner(n_part, self.n_buckets))
             .sortWithinPartitions("bucket", "key")
         )
         import time as _time
@@ -847,11 +688,6 @@ class SeenSet:
             # cap; an explicit n_partitions still wins.
             n_part = min(n_part, max(1, -(-len(allk) // 131_072)))
         n_part = max(1, min(n_part, self.n_buckets))
-        toks = _bucket_partition_tokens(n_part)
-        pmap = F.create_map(
-            *[F.lit(x) for p in range(n_part) for x in (p, toks[p])]
-        )
-        range_id = F.floor(F.col("bucket") * n_part / self.n_buckets).cast("int")
         # r6: the driver already holds every buffered pair (the delta
         # arrays) — when they are provably unique across batches, the
         # cross-batch dropDuplicates is an identity and its whole exchange
@@ -864,7 +700,7 @@ class SeenSet:
         if not first.all():
             batch = batch.dropDuplicates(["key", "key2"])
         rows = (
-            batch.repartition(n_part, pmap[range_id])
+            batch.repartition(n_part, _bucket_slice_partitioner(n_part, self.n_buckets))
             .sortWithinPartitions("bucket", "key")
         )
         sid = self.table.append(
@@ -872,8 +708,7 @@ class SeenSet:
         )
         self._pending = []
         if self._bloom is not None:
-            # ONE driver-side fold of all flushed pairs (deduped, so the
-            # cuckoo holds one copy per distinct pair) — the big broadcast
+            # ONE driver-side fold of all flushed pairs — the big broadcast
             # is invalidated here, once per flush, instead of once per
             # deferred add
             keep = order[first]
@@ -906,34 +741,21 @@ class SeenSet:
         """Driver-local incremental fold of raw (bucket, key) arrays into the
         cached dense filter."""
         if self._bloom is None:
-            self._bloom = self._new_filter()
-        if self.backend == "bloom" and isinstance(self._bloom, DenseBloom):
-            # r6: fold straight into the dense matrix with flat indices —
-            # the shard-dict path scanned a boolean mask of the whole batch
-            # once per bucket (256 x |batch| work); this is k vectorized
-            # scatter-ORs over the batch. Measured 0.68 s -> ~0.05 s per
-            # 843k-key flush fold.
-            m64 = self._bloom.m // 64
-            flat = self._bloom.bits.reshape(-1)
-            base = buckets.astype(np.int64) * m64
-            for pos in _bloom_positions(keys, self._bloom.m, self._bloom.k):
-                np.bitwise_or.at(
-                    flat,
-                    base + (pos >> 6),
-                    np.uint64(1) << (pos & 63).astype(np.uint64),
-                )
-            self._invalidate_filter_broadcasts(buckets)
-            return
-        if self.backend == "bloom":
-            local = BloomShards(self.m, self.k)
-        else:
-            local = CuckooShards(self.cuckoo_rows)
-        local.add(buckets, keys)
-        for b, bm in local.shards.items():
-            self._bloom.merge_shard(b, bm)
-        for b, row, fp in getattr(local, "overflow", []):
-            self._bloom.reinsert_pair(b, int(row), int(fp))
-        self._invalidate_filter_broadcasts(buckets)
+            self._bloom = DenseBloom(self.m, self.k, self.n_buckets)
+        # r6: fold straight into the dense matrix with flat indices — the
+        # shard-dict path scanned a boolean mask of the whole batch once per
+        # bucket (256 x |batch| work); this is k vectorized scatter-ORs over
+        # the batch. Measured 0.68 s -> ~0.05 s per 843k-key flush fold.
+        m64 = self._bloom.m // 64
+        flat = self._bloom.bits.reshape(-1)
+        base = buckets.astype(np.int64) * m64
+        for pos in _bloom_positions(keys, self._bloom.m, self._bloom.k):
+            np.bitwise_or.at(
+                flat,
+                base + (pos >> 6),
+                np.uint64(1) << (pos & 63).astype(np.uint64),
+            )
+        self._invalidate_bloom_bc()
 
     def _fold_files_into_bloom(self, files: list[str]) -> None:
         """Driver-local incremental fold: read (bucket, key) of freshly
@@ -970,47 +792,20 @@ class SeenSet:
         Used by periodic J9 reconciliation: a deleted package's registry
         URL is released so a later re-publish re-crawls it.
 
-        The cached prefilter is updated in place: the cuckoo backend
-        deletes exactly; the bloom backend cannot delete, so it is left
-        stale-conservative (extra false positives resolved by the exact
-        check — never a false negative). Returns the new snapshot id."""
+        The Bloom prefilter cannot delete, so it is left stale-conservative:
+        the removed keys stay prefilter hits and the exact check resolves
+        them as unseen (never a false negative). Returns the new snapshot
+        id."""
         if self._pending:
             # merge_delete operates on the durable table only
             self.flush(spark)
-        keyed = self._rows_of(urls, url_col)
         prev_snap = self.table.current_snapshot_id()
-        filter_live = self._bloom is not None and self._bloom_snapshot == prev_snap
-        # O(batch) driver collect, cuckoo only (bloom can't delete anyway);
-        # remove() batches are reconcile-sized, not crawl-sized. The delete
-        # set is semi-joined on (key, key2) against the exact table first:
-        # cuckoo delete is only valid for keys actually added (cuckoo.py
-        # contract) — deleting a never-added url whose key collides with,
-        # or fingerprint-aliases, a present one would strip the present
-        # row's copy and create a prefilter false negative.
-        rows = []
-        if filter_live and self.backend == "cuckoo" and prev_snap is not None:
-            batch = keyed.localCheckpoint(eager=True)
-            bks = sorted({r["bucket"] for r in batch.select("bucket").distinct().collect()})
-            files = self.table.files_matching("bucket", bks)
-            if files:
-                present = (
-                    spark.read.parquet(*files)
-                    .where(F.col("bucket").isin([int(b) for b in bks]))
-                    .select("key", "key2")
-                )
-                rows = batch.join(present, ["key", "key2"], "left_semi").collect()
         sid = self.table.merge_delete(
-            spark, keyed.select("key", "key2"), key=["key", "key2"],
-            meta={"op": "seen-remove"},
+            spark, self._rows_of(urls, url_col).select("key", "key2"),
+            key=["key", "key2"], meta={"op": "seen-remove"},
         )
-        if filter_live:
-            if self.backend == "cuckoo" and rows:
-                bks = np.array([r["bucket"] for r in rows], dtype=np.int64)
-                self._bloom.delete(
-                    bks, np.array([r["key"] for r in rows], dtype=np.int64)
-                )
-                self._invalidate_filter_broadcasts(bks)
-            # bloom: superset filter stays valid (conservative)
+        if self._bloom is not None and self._bloom_snapshot == prev_snap:
+            # a superset of the table stays a valid prefilter
             self._bloom_snapshot = sid
         return sid
 

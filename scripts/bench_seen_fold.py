@@ -1,13 +1,12 @@
 #!/usr/bin/env python
 """Measure the seen-set prefilter fold + broadcast costs at 1e8 keys and
-extrapolate to the 10^10-key north star (VERDICT r4 "Next round" #3).
+extrapolate to the 10^10-key north star.
 
 Two driver-side costs bound a flush:
-1. the FOLD — hashing the flushed keys into the dense filter
+1. the FOLD — hashing the flushed keys into the dense Bloom filter
    (``_fold_arrays_into_bloom``), linear in flushed keys;
-2. the RE-BROADCAST — dense mode re-ships the WHOLE filter to every
-   worker after any fold; sharded mode re-slices and re-ships only the
-   bucket ranges the flush touched (``_range_broadcasts``).
+2. the RE-BROADCAST — any fold invalidates the filter's broadcast, so the
+   next streamed check re-ships the whole filter to every worker.
 
 This script measures both at 1e8 preloaded keys, then a steady-state
 2M-key flush (the bench gate's generation size), and prints one JSON line
@@ -17,7 +16,7 @@ synthesized with a deterministic xxhash-like mix (the fold only sees
 cost).
 
 Usage: python scripts/bench_seen_fold.py [--keys 100000000]
-       [--flush-keys 2000000] [--n-ranges 32] [--backend bloom] [--spark]
+       [--flush-keys 2000000] [--spark]
 """
 
 from __future__ import annotations
@@ -32,11 +31,7 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from npm_search_spark.seen import (  # noqa: E402
-    SeenSet,
-    _range_bounds,
-    _slice_filter,
-)
+from npm_search_spark.seen import DenseBloom, SeenSet  # noqa: E402
 
 
 def synth_keys(n: int, seed: int, n_buckets: int) -> tuple[np.ndarray, np.ndarray]:
@@ -59,11 +54,9 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--keys", type=int, default=100_000_000)
     ap.add_argument("--flush-keys", type=int, default=2_000_000)
-    ap.add_argument("--n-ranges", type=int, default=32)
-    ap.add_argument("--backend", default="bloom")
     ap.add_argument("--out-root", default=".tmp/seen_fold_bench")
     ap.add_argument("--spark", action="store_true",
-                    help="also time real Spark broadcasts (dense vs dirty slices)")
+                    help="also time a real Spark broadcast of the filter")
     args = ap.parse_args()
 
     # SeenSet's schema parse needs an active session even for the pure
@@ -76,12 +69,8 @@ def main() -> int:
     seen = SeenSet(
         os.path.join(args.out_root, "seen"),
         expected_keys_per_bucket=max(args.keys // n_buckets, 1000),
-        backend=args.backend,
-        n_ranges=args.n_ranges,
     )
-    filter_bytes = seen._new_filter().bits.nbytes if args.backend == "bloom" else (
-        seen._new_filter().table.nbytes
-    )
+    filter_bytes = DenseBloom(seen.m, seen.k, seen.n_buckets).bits.nbytes
 
     # -- 1. bulk fold: 1e8 keys into an empty filter (bootstrap-scale) -----
     bks, kys = synth_keys(args.keys, seed=1, n_buckets=n_buckets)
@@ -94,28 +83,13 @@ def main() -> int:
     t0 = time.time()
     seen._fold_arrays_into_bloom(fb, fk)
     flush_fold_s = time.time() - t0
-    dirty_after_flush = len(seen._range_dirty)
 
-    # -- 2b. watch-mode micro-batch: a few hundred keys touch a few buckets,
-    # so the sharded invalidation re-ships only those ranges' slices
-    seen._range_dirty = set()
-    mb, mk = synth_keys(200, seed=7, n_buckets=n_buckets)
-    seen._fold_arrays_into_bloom(mb, mk)
-    dirty_after_micro = len(seen._range_dirty)
-    seen._range_dirty = set(range(args.n_ranges))  # restore full-dirty state
-
-    # -- 3. re-broadcast payloads: whole filter vs dirty slices ------------
+    # -- 3. re-broadcast payload: the whole filter -------------------------
     import pickle
 
     t0 = time.time()
     whole_pickle = len(pickle.dumps(seen._bloom, protocol=5))
     whole_ser_s = time.time() - t0
-    t0 = time.time()
-    slice_bytes = 0
-    for rid in sorted(seen._range_dirty):
-        lo, hi = _range_bounds(rid, args.n_ranges, n_buckets)
-        slice_bytes += len(pickle.dumps(_slice_filter(seen._bloom, lo, hi), protocol=5))
-    slice_ser_s = time.time() - t0
 
     spark_timings = {}
     if args.spark:
@@ -123,33 +97,17 @@ def main() -> int:
         bc = spark.sparkContext.broadcast(seen._bloom)
         spark_timings["dense_broadcast_s"] = round(time.time() - t0, 3)
         bc.unpersist()
-        t0 = time.time()
-        seen._range_bcs = []  # force a full slice build, then time dirty-only
-        seen._range_dirty = set()
-        seen._range_broadcasts(spark)
-        spark_timings["all_slices_broadcast_s"] = round(time.time() - t0, 3)
-        fb2, fk2 = synth_keys(args.flush_keys, seed=3, n_buckets=n_buckets)
-        seen._fold_arrays_into_bloom(fb2, fk2)
-        t0 = time.time()
-        seen._range_broadcasts(spark)
-        spark_timings["dirty_slices_rebroadcast_s"] = round(time.time() - t0, 3)
 
     scale = 1e10 / args.keys
     out = {
-        "backend": args.backend,
         "n_keys": args.keys,
-        "n_ranges": args.n_ranges,
         "filter_bytes": filter_bytes,
         "bulk_fold_s": round(bulk_fold_s, 3),
         "bulk_fold_keys_per_s": round(args.keys / bulk_fold_s, 1),
         "flush_keys": args.flush_keys,
         "flush_fold_s": round(flush_fold_s, 3),
-        "dirty_ranges_after_flush": dirty_after_flush,
         "whole_filter_pickle_bytes": whole_pickle,
         "whole_filter_pickle_s": round(whole_ser_s, 3),
-        "dirty_slices_pickle_bytes": slice_bytes,
-        "dirty_slices_pickle_s": round(slice_ser_s, 3),
-        "dirty_ranges_after_200key_micro_batch": dirty_after_micro,
         "extrapolation_1e10": {
             # the fold is linear in FLUSHED keys, so the steady-state cost
             # at 1e10 total keys is the same per-flush fold (flush size
@@ -157,23 +115,8 @@ def main() -> int:
             # fold scales with total keys
             "bootstrap_fold_s": round(bulk_fold_s * scale, 1),
             "per_flush_fold_s": round(flush_fold_s, 3),
+            # every filter version is shipped whole to every worker
             "filter_bytes": int(filter_bytes * scale),
-            # the headline sharded win is READ-side: per filter version,
-            # dense mode ships filter_bytes to EVERY worker; sharded mode
-            # ships each range slice only to the workers whose candidate
-            # partitions cover it — total ~filter_bytes across the cluster
-            # (poison test: tests/test_seen_sharded.py), i.e. 1/W of the
-            # dense traffic on a W-worker cluster
-            "dense_fetch_bytes_per_worker": int(filter_bytes * scale),
-            "sharded_fetch_bytes_per_worker_32_workers": int(
-                filter_bytes * scale / 32
-            ),
-            # flush-side invalidation matters for bucket-sparse batches
-            # (watch-mode micro-batches): only the touched ranges re-ship
-            "micro_batch_dirty_ranges": dirty_after_micro,
-            "micro_batch_rebroadcast_bytes": int(
-                filter_bytes * scale * dirty_after_micro / args.n_ranges
-            ),
         },
         "spark": spark_timings,
     }

@@ -334,6 +334,29 @@ class TestPolitenessSchedule:
         assert a == b  # ties broken by url, not partition order
 
 
+class TestEmptyOutcomes:
+    def test_all_ok_generation_commits_no_not_found(self, spark, universe, tmp_path):
+        """A generation whose registry fetches all come back ``ok`` writes
+        and commits nothing to ``not_found``: no zero-row file."""
+        c = Crawl(
+            spark, str(tmp_path / "crawl"), universe,
+            total_npm_downloads=10_000_000, budget_multiplier=10,
+            backoff_scale=0.02, transient_modulus=0,
+        )
+        # the synthetic registry's not-found rule (run_generation's
+        # `not_found` condition), negated: every seeded doc fetches ok
+        found = universe["raw_docs"].where(
+            F.col("raw_json").isNotNull()
+            & (F.pmod(F.xxhash64("doc_id"), F.lit(41)) != 0)
+        )
+        c.seed(found.select("doc_id"))
+        before = c.not_found.current_snapshot_id()
+        m = c.run_generation(0)
+        assert m["registry_ok"] > 0
+        assert m["registry_retry"] == m["registry_throttled"] == 0
+        assert c.not_found.current_snapshot_id() == before
+
+
 class TestBootstrap:
     def test_full_crawl(self, crawl, spark):
         metrics = crawl.run_bootstrap(max_generations=60, log=None)

@@ -1,7 +1,8 @@
 """Property-based invariants (hypothesis): URL canonicalization algebra,
 politeness-scheduler exactness vs a brute-force reference on random
-frontiers (window and range-sorted boundary carves), and Bloom
-no-false-negatives."""
+frontiers (window and range-sorted boundary carves), and the Bloom
+prefilter: no false negatives, design fp rate, and one bitmap whichever
+way it is built."""
 
 from __future__ import annotations
 
@@ -235,42 +236,6 @@ class TestBloomProperties:
         assert dense.might_contain(buckets, keys_arr).all()
         assert shards.might_contain(buckets, keys_arr).all()
 
-
-@pytest.fixture(scope="module", autouse=True)
-def _quiet(spark):
-    spark.sparkContext.setLogLevel("ERROR")
-    yield
-
-
-class TestCuckooProperties:
-    """Cuckoo-filter invariants on random key sets: never a false
-    negative (before or after deleting an arbitrary subset), deletes of
-    added keys always succeed, and the build is order-deterministic."""
-
-    @settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-    @given(
-        st.lists(
-            st.integers(min_value=-(2**62), max_value=2**62),
-            min_size=1,
-            max_size=400,
-            unique=True,
-        ),
-        st.integers(min_value=0, max_value=400),
-    )
-    def test_membership_and_delete(self, keys, n_delete):
-        from npm_search_spark.cuckoo import DenseCuckoo, rows_for
-
-        arr = np.array(keys, dtype=np.int64)
-        buckets = np.abs(arr) % 8
-        cf = DenseCuckoo(rows_for(max(len(arr) // 8, 8)), 8)
-        cf.add(buckets, arr)
-        assert cf.might_contain(buckets, arr).all()
-
-        k = min(n_delete, len(arr))
-        removed = cf.delete(buckets[:k], arr[:k])
-        assert removed.all()
-        assert cf.might_contain(buckets[k:], arr[k:]).all()
-
     @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
     @given(
         st.lists(
@@ -280,18 +245,53 @@ class TestCuckooProperties:
             unique=True,
         )
     )
-    def test_split_build_equals_whole_build_membership(self, keys):
-        """Inserting in two halves (the incremental micro-batch path) must
-        accept exactly the same membership set as one build."""
-        from npm_search_spark.cuckoo import DenseCuckoo, rows_for
+    def test_split_build_equals_whole_build_membership(self, spark, tmp_path_factory, keys):
+        """The cold rebuild (executor BloomShards OR-merged into the dense
+        matrix) and the incremental path (two driver-side folds, one per
+        flush) must give a bit-identical filter: a resume that rebuilds
+        from the table sees exactly the filter the crawl had."""
+        from npm_search_spark.seen import BloomShards, DenseBloom, SeenSet
 
         arr = np.array(keys, dtype=np.int64)
         buckets = np.abs(arr) % 4
-        rows = rows_for(max(len(arr) // 4, 8))
-        whole, split = DenseCuckoo(rows, 4), DenseCuckoo(rows, 4)
-        whole.add(buckets, arr)
+        s = SeenSet(
+            str(tmp_path_factory.getbasetemp() / "split-build"),
+            expected_keys_per_bucket=max(len(arr) // 4, 8),
+            n_buckets=4,
+        )
+        shards = BloomShards(s.m, s.k)
+        shards.add(buckets, arr)
+        cold = DenseBloom(s.m, s.k, 4)
+        for b, bm in shards.shards.items():
+            cold.merge_shard(b, bm)
         mid = len(arr) // 2
-        split.add(buckets[:mid], arr[:mid])
-        split.add(buckets[mid:], arr[mid:])
-        assert split.might_contain(buckets, arr).all()
-        assert whole.might_contain(buckets, arr).all()
+        s._fold_arrays_into_bloom(buckets[:mid], arr[:mid])
+        s._fold_arrays_into_bloom(buckets[mid:], arr[mid:])
+        assert np.array_equal(s._bloom.bits, cold.bits)
+        assert cold.might_contain(buckets, arr).all()
+
+    def test_false_positive_rate(self):
+        """At its design load (``expected_keys_per_bucket`` keys in every
+        bucket) the filter's false-positive rate stays near ``fp_rate``."""
+        from npm_search_spark.seen import BloomShards, DenseBloom, _bloom_params
+
+        n_buckets, per_bucket, fp = 16, 2_500, 0.01
+        m, k = _bloom_params(per_bucket, fp)
+        rng = np.random.default_rng(7)
+        keys = rng.permutation(np.unique(rng.integers(-(2**63), 2**63 - 1, 200_000)))
+        added, probe = keys[: n_buckets * per_bucket], keys[n_buckets * per_bucket :]
+        buckets = np.repeat(np.arange(n_buckets, dtype=np.int64), per_bucket)
+        shards = BloomShards(m, k)
+        shards.add(buckets, added)
+        bloom = DenseBloom(m, k, n_buckets)
+        for b, bm in shards.shards.items():
+            bloom.merge_shard(b, bm)
+        assert bloom.might_contain(buckets, added).all()
+        fpr = bloom.might_contain(rng.integers(0, n_buckets, len(probe)), probe).mean()
+        assert fpr < 2 * fp, fpr
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _quiet(spark):
+    spark.sparkContext.setLogLevel("ERROR")
+    yield

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from npm_search_spark import seen as seen_mod
-from npm_search_spark.seen import SeenSet
+from npm_search_spark.seen import DenseBloom, SeenSet
 
 PATHS = ["array", "streamed"]
 
@@ -35,13 +35,11 @@ def _urls(spark, lo, hi):
     )
 
 
-@pytest.fixture(params=["bloom", "cuckoo"])
-def wide(request, tmp_path):
-    return SeenSet(
-        str(tmp_path / f"seen-{request.param}"),
-        expected_keys_per_bucket=64,
-        backend=request.param,
-    )
+# the streamed check's id is ``bloom``: it is the path the Bloom prefilter serves
+@pytest.fixture(params=PATHS, ids=["array", "bloom"])
+def wide(request, tmp_path, monkeypatch):
+    _pin_path(monkeypatch, request.param)
+    return SeenSet(str(tmp_path / "seen"), expected_keys_per_bucket=64)
 
 
 class TestWideKeyMode:
@@ -117,6 +115,92 @@ class TestDeltaBroadcastIsPerBatch:
         out = s.filter_unseen(spark, _urls(spark, 50, 250))
         assert out.count() == 30
         assert s._exact_bc is None and s._bloom_bc is not None
+
+
+class TestEmptyTable:
+    def test_deferred_adds_without_snapshot_take_array_path(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Before the first flush there is no snapshot, only deferred adds
+        (the first interval of a checkpoint_interval > 1 crawl). That reads
+        as an empty table on the array path, even with every table above
+        the driver bound: the deltas decide alone, and no Bloom is
+        allocated or broadcast."""
+        _pin_path(monkeypatch, "streamed")
+        s = SeenSet(str(tmp_path / "s"), expected_keys_per_bucket=64)
+        s.add(spark, _urls(spark, 0, 100), defer=True)
+        assert s.table.current_snapshot_id() is None
+        got = sorted(r["url"] for r in s.filter_unseen(spark, _urls(spark, 50, 150)).collect())
+        assert got == sorted(r["url"] for r in _urls(spark, 100, 150).collect())
+        assert s._bloom is None and s._bloom_bc is None
+        assert s._exact_bc is not None
+
+
+class TestStreamedBloom:
+    """The streamed check's Bloom prefilter: cold rebuild, zero-file
+    snapshots and stale-conservative removal."""
+
+    @pytest.fixture(autouse=True)
+    def _streamed(self, monkeypatch):
+        _pin_path(monkeypatch, "streamed")
+
+    @pytest.fixture()
+    def urls(self, spark):
+        return _urls(spark, 0, 500)
+
+    def test_cold_start_rebuild(self, spark, tmp_path, urls, monkeypatch):
+        """A fresh SeenSet over an existing table rebuilds the Bloom from
+        parquet via executor shards (mapInArrow), once."""
+        root = str(tmp_path / "c2")
+        SeenSet(root, expected_keys_per_bucket=64).add(spark, urls)
+        s2 = SeenSet(root, expected_keys_per_bucket=64)
+        builds = []
+        real = SeenSet._shards_of
+        monkeypatch.setattr(
+            SeenSet, "_shards_of", lambda self, df: builds.append(1) or real(self, df)
+        )
+        assert s2.filter_unseen(spark, urls).count() == 0
+        assert s2.filter_unseen(spark, urls).count() == 0
+        assert isinstance(s2._bloom, DenseBloom) and s2._bloom_bc is not None
+        assert len(builds) == 1
+
+    def test_filter_unseen_zero_file_snapshot(self, spark, tmp_path, urls, monkeypatch):
+        """A snapshot that exists but holds zero files (everything
+        merge-deleted) must treat every candidate as unseen in BOTH
+        pruning modes — the unpruned branch used to call
+        spark.read.parquet() with no paths and raise."""
+        # below 0 even the zero-byte table takes the streamed check
+        monkeypatch.setattr(SeenSet, "EXACT_DRIVER_MAX_BYTES", -1)
+        root = str(tmp_path / "zf")
+        s = SeenSet(root, expected_keys_per_bucket=64)
+        s.add(spark, urls)
+        # force a snapshot with an EMPTY file list (remove() may leave a
+        # rewritten file behind; the regression needs literally zero files)
+        s.table._commit("delete", [], {}, {})
+        fresh = SeenSet(root, expected_keys_per_bucket=64)
+        assert fresh.table.snapshot().files == []
+        n = urls.count()
+        assert fresh.filter_unseen(spark, urls, prune_buckets=True).count() == n
+        assert fresh.filter_unseen(spark, urls, prune_buckets=False).count() == n
+
+    def test_remove_releases_urls(self, spark, tmp_path, urls):
+        """remove() cannot delete from the Bloom: the removed keys stay
+        prefilter hits, and the exact check reads them unseen."""
+        s = SeenSet(str(tmp_path / "r"), expected_keys_per_bucket=64)
+        s.add(spark, urls)
+        assert s.filter_unseen(spark, urls).count() == 0
+        assert s._bloom is not None
+        gone = urls.limit(100)
+        s.remove(spark, gone)
+        keyed = s.keyed(gone).select("bucket", "key").collect()
+        assert s._bloom.might_contain(
+            np.array([r["bucket"] for r in keyed], dtype=np.int64),
+            np.array([r["key"] for r in keyed], dtype=np.int64),
+        ).all()
+        # released URLs pass the filter again; the rest stay seen
+        back = {r["url"] for r in s.filter_unseen(spark, urls).collect()}
+        assert back == {r["url"] for r in gone.collect()}
+        assert s.count(spark) == 400
 
 
 class TestRollback:
@@ -209,24 +293,20 @@ class TestModeEquivalence:
             SeenSet(str(tmp_path / "u"), store_urls=True)
 
 
-@pytest.mark.parametrize(
-    "path,backend",
-    [("array", "bloom"), ("streamed", "bloom"), ("streamed", "cuckoo")],
-)
+# ids name the check path and the SeenSet's (only) prefilter
+@pytest.mark.parametrize("path", PATHS, ids=["array-bloom", "streamed-bloom"])
 class TestKeyCollisions:
     """Identity is the 128-bit (key, key2) pair: with ``url_key`` forced
     down to two values every url collides with half the others on key,
     and defer, flush, durable add, remove and count must still tell them
     apart by key2."""
 
-    def test_colliding_keys_stay_distinct(
-        self, spark, tmp_path, monkeypatch, path, backend
-    ):
+    def test_colliding_keys_stay_distinct(self, spark, tmp_path, monkeypatch, path):
         monkeypatch.setattr(
             seen_mod, "url_key", lambda u: F.pmod(F.xxhash64(u), F.lit(2))
         )
         _pin_path(monkeypatch, path)
-        s = SeenSet(str(tmp_path / "s"), expected_keys_per_bucket=64, backend=backend)
+        s = SeenSet(str(tmp_path / "s"), expected_keys_per_bucket=64)
 
         def unseen(lo, hi):
             out = s.filter_unseen(spark, _urls(spark, lo, hi))

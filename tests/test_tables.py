@@ -290,16 +290,6 @@ class TestSeenDeferred:
         s.flush(spark)
         assert s.table.read(spark).count() == 1
 
-    def test_deferred_cuckoo_backend(self, spark, tmp_path):
-        s = SeenSet(
-            str(tmp_path / "seen"), expected_keys_per_bucket=1000, backend="cuckoo"
-        )
-        b1 = [f"https://registry.npmjs.org/ck-{i}" for i in range(40)]
-        s.add(spark, self._urls(spark, b1), defer=True)
-        assert s.filter_unseen(spark, self._urls(spark, b1)).count() == 0
-        s.flush(spark)
-        assert s.filter_unseen(spark, self._urls(spark, b1)).count() == 0
-
 
 class TestBucketPartitionTokens:
     def test_tokens_match_spark_hash_partitioning(self, spark):
