@@ -9,11 +9,13 @@ as a generation loop of pure DataFrame stages over SnapTables:
   dedup      URL-seen anti-join (J8) via seen.SeenSet
   fetch      synthetic (join against the generated universe) — the real
              deployment swaps in an iterator mapInPandas HTTP stage
-  process    per-kind: registry_doc -> formatPkg+enrich+MERGE + file_list
+  process    per-kind: registry_doc -> formatPkg+enrich + file_list
              hop; file_list -> span metadata patch + changelog-probe hop;
-             changelog_probe -> deterministic first-hit-wins (L4)
-  commit     frontier/packages/seen/one_time updates + state row with
-             snapshot ids, metrics, per-partition lineage
+             changelog_probe -> deterministic first-hit-wins (L4). A hop
+             whose host is admitted fuses into the same generation
+             (Crawl.run_generation), so a small batch resolves in one
+  commit     one write per table: packages/one_time/seen/frontier + a
+             state row with snapshot ids, metrics, per-partition lineage
 
 Scale design (10^10 frontier):
 - Politeness top-k is a distributed exact threshold top-k (per-host
@@ -25,7 +27,7 @@ Scale design (10^10 frontier):
 - After seeding, the frontier table is only ever touched via pending-state
   filters (pruned parquet scans), file-granular MERGE of the scheduled
   batch (plan-asserted: no generation rewrites the whole table), appends
-  of new hop rows, and — with gc_terminal — MERGE-DELETE of
+  of hop rows that did not fuse, and — with gc_terminal — MERGE-DELETE of
   successfully-processed rows so table bytes track the active set, the way
   the reference GCs isProcessed:1 queue rows (MainWatchIndexer.ts:51-61).
 - All joins against the packages table go through doc_id equi-joins;
@@ -42,6 +44,7 @@ from __future__ import annotations
 
 import json
 import time
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -126,18 +129,24 @@ def politeness_schedule(
 
     The result is the exact top-budget per host, independent of input
     partitioning — deterministic replay (ties broken by url)."""
-    # None -> the reference's per-host budgets; an explicit {} means "no
-    # per-host overrides, default_budget for every host" (an `or` here
-    # would silently turn {} into DEFAULT_BUDGETS)
-    budgets = DEFAULT_BUDGETS if budgets is None else budgets
-
-    def host_budget(host: str) -> int:
-        return budgets.get(host, default_budget) * budget_multiplier
-
     return _schedule_histogram_topk(
-        pending, host_budget, n_partitions,
+        pending, host_budgets(budgets, default_budget, budget_multiplier), n_partitions,
         hist_hints=hist_hints, hist_counts=hist_counts,
     )
+
+
+def host_budgets(
+    budgets: dict[str, int] | None = None,
+    default_budget: int = 6,
+    budget_multiplier: int = 1,
+):
+    """host -> its per-generation budget: the one rule the scheduler and
+    hop fusion's admission share. None -> the reference's per-host
+    budgets; an explicit {} means "no per-host overrides, default_budget
+    for every host" (an `or` here would silently turn {} into
+    DEFAULT_BUDGETS)."""
+    budgets = DEFAULT_BUDGETS if budgets is None else budgets
+    return lambda host: budgets.get(host, default_budget) * budget_multiplier
 
 
 # a host's boundary bin larger than this is ranked by the range-sorted
@@ -429,21 +438,28 @@ def _schedule_histogram_topk(
             if need_hosts
             else F.lit(None).cast("long"),
         )
-    cand = cand.localCheckpoint(eager=True)
+    # each candidate's class travels as a column of the checkpoint: 0 a
+    # definite winner (take_all hosts carry a null _thr — every one of
+    # their rows is definite), 1 in its host's boundary bin. The carves
+    # below filter on _cls alone: a `_bin = _thr` filter over the
+    # checkpoint would let the optimizer infer, from the checkpoint's
+    # recorded constraints, Filters that re-evaluate the whole bin formula
+    # and the _thr lookup on every candidate row
+    cand = cand.withColumn(
+        "_cls",
+        F.when(F.col("_thr").isNull() | (F.col("_bin") > F.col("_thr")), 0)
+        .when(F.col("_bin") == F.col("_thr"), 1),
+    ).localCheckpoint(eager=True)
 
-    helper_cols = ["_bin", "_thr", "_rem"]
-    # take_all hosts carry a null _thr (absent from thr_bin) — every one of
-    # their rows is a definite winner
-    definite = cand.where(
-        F.col("_thr").isNull() | (F.col("_bin") > F.col("_thr"))
-    ).drop(*helper_cols)
+    helper_cols = ["_bin", "_thr", "_rem", "_cls"]
+    definite = cand.where(F.col("_cls") == 0).drop(*helper_cols)
 
     # the boundary bins: exact top-(remaining) per host. Tiny by
     # construction (~count/n_bins rows per host); hosts whose boundary bin
     # degenerated (massively duplicated priorities) go through the
     # range-sorted fallback instead of a single-task window. Both carve
     # from the checkpointed candidates — never from pending.
-    bdry_all = cand.where(F.col("_bin") == F.col("_thr"))
+    bdry_all = cand.where(F.col("_cls") == 1)
     small_hosts = [hh for hh in need_hosts if boundary_n[hh] <= HIST_BOUNDARY_CAP]
     big_hosts = [hh for hh in need_hosts if boundary_n[hh] > HIST_BOUNDARY_CAP]
     parts = [definite]
@@ -646,7 +662,10 @@ def filter_new_urls(
         # in the returned plan itself (assert_true evaluates per row when
         # the output is consumed — no extra driver action): a row whose
         # host is outside the pruning list fails the enqueue loudly
-        # instead of re-queuing a duplicate.
+        # instead of re-queuing a duplicate. The message names the url as
+        # well as the host: a check over `host` alone is a constraint the
+        # optimizer copies onto any relation joined on host (the robots
+        # rules, which list other hosts), where it would fail.
         in_hosts = F.col("host").isin(list(hosts))
         out = out.where(
             F.assert_true(
@@ -654,10 +673,21 @@ def filter_new_urls(
                 F.concat(
                     F.lit("filter_new_urls: addition host outside pruning list: "),
                     F.coalesce(F.col("host"), F.lit("NULL")),
+                    F.lit(" url "),
+                    F.coalesce(F.col("url"), F.lit("NULL")),
                 ),
             ).isNull()
         )
     return out
+
+
+def _patch_where(rows: DataFrame, hit, updates: dict) -> DataFrame:
+    """``rows`` with each ``updates`` column replaced on the rows where
+    ``hit`` holds, in order (a later value may read an earlier patched
+    column), and those rows marked for the packages upsert (``_up``)."""
+    for col, value in updates.items():
+        rows = rows.withColumn(col, F.when(hit, value).otherwise(F.col(col)))
+    return rows.withColumn("_up", F.col("_up") | hit)
 
 
 def registry_url(name_col) -> "F.Column":
@@ -1087,14 +1117,54 @@ class Crawl:
         remaining per-trigger-window ledger so a multi-generation
         micro-batch never admits more than rate x trigger per host.
 
+        Hop fusion: like the reference's one-pass resolve (registry doc,
+        formatPkg, file list, changelog probe — src/saveDocs.ts:16-139),
+        each hop's new rows (hop 2: file lists of the docs formatted now;
+        hop 3: changelog candidates of the file lists patched now) run in
+        THIS generation when their host is admitted, else they are
+        enqueued. Admission is all-or-nothing per (host, generation) and
+        runs on the driver before formatPkg, from bounds the metrics pass
+        already holds (hop 2: one file list per fetched doc; hop 3:
+        len(FILE_OPTIONS) probes per file list): host h fuses only if it is
+        not paused and the tick's admissions for h plus h's bound fit h's
+        budget (the window ledger in watch mode). A host below its budget
+        had every due pending row scheduled, so the per-host top-k stays
+        exact (T7); a backing-off row of h may be overtaken, as it would be
+        by any row the scheduler took. filter_new_urls, robots and the
+        seen filter apply either way. Each hop kind has ONE body, over its
+        dequeued ∪ fused rows. Fused rows count in ``scheduled``,
+        ``scheduled_by_host`` (the watch ledger debits them),
+        ``robots_blocked``, ``deduped``, ``filelist_ok`` and
+        ``probes``; ``fused_by_host`` names them.
+
+        One write per table, in this order: packages (ONE upsert: the
+        formatted docs and the file-list/changelog patches, computed over
+        the in-flight rows ∪ packages), one_time (one memo append), seen
+        (one add), frontier (ONE MERGE of the scheduled rows' new states;
+        fused rows land in it only as the terminal rows their dequeued
+        twins would leave — robots_blocked ones always, the rest only
+        without ``gc_terminal``; hop rows that did not fuse are appended
+        as pending rows), then not_found. Resume undoes a crash between
+        any two.
+
         Driver actions: the scheduler's own scans, then ONE fused metrics
-        pass (every count plus the scheduled batch's data files). An empty
-        tick runs no action at all (the scheduler's exact
-        ``scheduled_count`` decides), and the frontier MERGE runs no
-        detection: the pending scan carries each row's file (provenance),
-        so the MERGE rewrites the scheduled rows' files directly."""
+        pass (every count plus the scheduled batch's data files), the
+        packages MERGE (its Pin builds the upsert frame inside the MERGE's
+        commit: formatPkg's Arrow pass, then the hop bodies, each
+        checkpointed once), and, when rows fused, one count pass over
+        them. Admission runs no action. An empty tick runs no action at
+        all (the scheduler's exact ``scheduled_count`` decides), and
+        neither MERGE detects: the pending scan and the packages read carry
+        each row's file (provenance), so each MERGE rewrites exactly those
+        files."""
         spark = self.spark
-        metrics: dict[str, Any] = {"generation": generation}
+        # an empty tick returns these zeros as they are
+        metrics: dict[str, Any] = {
+            "generation": generation, "scheduled": 0, "robots_blocked": 0,
+            "deduped": 0, "scheduled_by_host": {}, "fused_by_host": {},
+            "registry_ok": 0, "registry_retry": 0, "registry_throttled": 0,
+            "filelist_ok": 0, "probes": 0,
+        }
         t0 = time.time()
 
         # provenance: every pending row carries its data file, so the
@@ -1143,9 +1213,6 @@ class Crawl:
             # even scanned; the rest get their absolute remaining budget
             live = {hh: b for hh, b in budgets_override.items() if b > 0}
             if not live:
-                metrics["scheduled"] = 0
-                metrics["robots_blocked"] = 0
-                metrics["scheduled_by_host"] = {}
                 return metrics
             pending = _host_subset(pending, sorted(live))
             if counts is not None:
@@ -1153,15 +1220,14 @@ class Crawl:
                 # rejoin the ledger after the tick
                 aside_counts = {h: v for h, v in counts.items() if h not in live}
                 counts = {h: v for h, v in counts.items() if h in live}
-            sched_raw = politeness_schedule(
-                pending, live, default_budget=0, budget_multiplier=1,
-                hist_hints=hints, hist_counts=counts,
-            )
+            budget_args: dict[str, Any] = {
+                "budgets": live, "default_budget": 0, "budget_multiplier": 1,
+            }
         else:
-            sched_raw = politeness_schedule(
-                pending, self.budgets, budget_multiplier=self.budget_multiplier,
-                hist_hints=hints, hist_counts=counts,
-            )
+            budget_args = {"budgets": self.budgets, "budget_multiplier": self.budget_multiplier}
+        sched_raw = politeness_schedule(
+            pending, **budget_args, hist_hints=hints, hist_counts=counts,
+        )
         new_hints = getattr(sched_raw, "hist_hints", None)
         if new_hints:
             self.hist_hints = dict(new_hints)
@@ -1186,9 +1252,6 @@ class Crawl:
             # its exact winner count driver-side, so no action runs — the
             # backoff-wait loop in run_bootstrap probes with empty
             # generations until the earliest next_attempt_at matures
-            metrics["scheduled"] = 0
-            metrics["robots_blocked"] = 0
-            metrics["scheduled_by_host"] = {}
             return metrics
         # robots.txt: disallowed URLs are terminal, never fetched. Flagging
         # (instead of splitting) lets one aggregation produce both the
@@ -1245,8 +1308,6 @@ class Crawl:
             .cache()
         )
         ok = reg_fetched.where(F.col("_status") == "ok").drop("_status")
-        new_rows = []
-        hop_hosts: set[str] = set()  # static host set of enqueued hop kinds
 
         # ---- fused per-generation metrics pass ---------------------------------
         # ONE driver action materializes all three cached frames (flagged,
@@ -1310,14 +1371,10 @@ class Crawl:
                         time.time() + HOST_PAUSE_S * self.backoff_scale
                     )
         n_scheduled = sum(cnt.values())
-        metrics["scheduled"] = n_scheduled
-        metrics["robots_blocked"] = cnt.get(True, 0)
-        metrics["scheduled_by_host"] = sched_by_host
         if n_scheduled == 0:
             for df in (flagged, fresh, reg_fetched):
                 df.unpersist()
             return metrics
-        metrics["deduped"] = n_scheduled - metrics["robots_blocked"] - sum(kc.values())
         # retries/throttles re-enter pending when their next_attempt_at
         # matures — a mutation the ledger cannot see. Drop it now; the
         # carry block-until is set at generation end (after the MERGE that
@@ -1337,148 +1394,242 @@ class Crawl:
             for s in ("retry", "throttled", "not_found")
             if sc.get(s)
         }
-        if n_ok:
-            formatted = format_packages_df(
-                ok, self.now_day_ms, "2026-08-16T00:00:00.000Z"
-            ).withColumn("spans", F.array().cast(
-                "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-            ))
-            enriched = enrich_packages(
-                formatted,
-                self._hits_ranked,
-                self.universe["definitely_typed"],
-                self.universe["npm_downloads"],
-                self.total_downloads,
-                self.now_day_ms,
-            )
-            # pinned, materialised inside the MERGE: formatPkg's Arrow pass
-            # runs once per generation, in the MERGE's SQL execution
-            landed = Pin(enriched.select(*[f.name for f in FINAL_PACKAGE.fields]))
+
+        # ---- hop admission (fusion) ------------------------------------------
+        # each hop's new rows either fuse into THIS generation or are
+        # enqueued as pending rows. Decided on the driver from bounds the
+        # pass above already counted: hop 2 yields at most one file list per
+        # fetched doc, hop 3 at most len(FILE_OPTIONS) probes per file list.
+        # A host fuses when it is not paused and its bound fits its budget
+        # next to what this tick scheduled for it — a host below its budget
+        # had every due pending row scheduled, so the tick stays the exact
+        # top-k (T7). Admission runs no Spark job.
+        budget_of = host_budgets(**budget_args)
+        fused: list[DataFrame] = []  # admitted hop rows, with _blocked
+        fused_fresh: list[DataFrame] = []  # the ones fetched (allowed, unseen)
+        enqueue: list[DataFrame] = []  # hop rows left pending
+        cached: list[DataFrame] = [flagged, fresh, reg_fetched]
+
+        def hop(new: DataFrame, hosts: tuple[str, ...], bound: int) -> DataFrame | None:
+            """One hop's new rows: enqueues those of the hosts that do not
+            fuse and returns the fused ones to fetch now (None when no host
+            fuses)."""
+            admit = [
+                h for h in hosts
+                if h not in self.host_pauses and sched_by_host.get(h, 0) + bound <= budget_of(h)
+            ]
+            additions = self._hop_additions(new, hosts, generation, robots)
+            rest = [h for h in hosts if h not in admit]
+            if rest:
+                enqueue.append(_host_subset(additions, rest).drop("_blocked"))
+            if not admit:
+                return None
+            rows_f = _host_subset(additions, admit)
+            fused.append(rows_f)
+            fresh_f = self.seen.filter_unseen(
+                spark, rows_f.where(~F.col("_blocked")).drop("_blocked")
+            ).cache()
+            cached.append(fresh_f)
+            fused_fresh.append(fresh_f)
+            return fresh_f
+
+        # ---- the packages rows: formatPkg and the hop bodies -----------------
+        # built inside the packages MERGE's own commit (a Pin), so
+        # formatPkg's Arrow pass runs there, once, and the hops read its
+        # checkpoint
+        probe_in = probe.select("url", "doc_id")
+        rows = None  # every row the bodies touch; _up marks the upserts
+        pkgs, pkgs_sid = self.packages.read_with_files(spark)
+
+        def upsert_rows() -> DataFrame:
+            nonlocal probe_in, rows
+            # ---- registry_doc body ---------------------------------------------
+            inflight = fl_fused = probe_fused = None
+            fl_in = fl.select("doc_id")
+            if n_ok:
+                formatted = format_packages_df(
+                    ok, self.now_day_ms, "2026-08-16T00:00:00.000Z"
+                ).withColumn("spans", F.array().cast(
+                    "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+                ))
+                enriched = enrich_packages(
+                    formatted,
+                    self._hits_ranked,
+                    self.universe["definitely_typed"],
+                    self.universe["npm_downloads"],
+                    self.total_downloads,
+                    self.now_day_ms,
+                )
+                # materialised once: hop 2 and the patches read the checkpoint
+                inflight = enriched.select(
+                    *[f.name for f in FINAL_PACKAGE.fields]
+                ).localCheckpoint(eager=True)
+                # hop 2: file list URLs of the docs just formatted
+                fl_fused = hop(
+                    inflight.select(
+                        canonicalize_url(filelist_url(F.col("objectID"), F.col("version"))).alias("url"),
+                        F.lit("cdn.jsdelivr.net").alias("host"),
+                        F.lit("file_list").alias("kind"),
+                        F.col("objectID").alias("doc_id"),
+                        F.col("downloadsLast30Days").cast("double").alias("priority"),
+                    ),
+                    ("cdn.jsdelivr.net",),
+                    n_ok,
+                )
+                if fl_fused is not None:
+                    fl_in = fl_in.unionByName(fl_fused.select("doc_id"))
+            # file lists this generation fetches, at most (hop 3's bound)
+            n_fl_max = kc.get("file_list", 0) + (n_ok if fl_fused is not None else 0)
+
+            # ---- package rows the hop bodies patch -------------------------------
+            # in-flight docs win over their packages rows (a watch re-change
+            # formatted this generation is patched, not its old row); each
+            # row carries its packages data file, so the one MERGE rewrites
+            # exactly those files
+            ids = [fl_in.select(F.col("doc_id").alias("_id")),
+                   probe_in.select(F.col("doc_id").alias("_id"))]
+            if inflight is not None:
+                ids.append(inflight.select(F.col("objectID").alias("_id")))
+            rows = pkgs.join(
+                F.broadcast(reduce(DataFrame.unionByName, ids)),
+                F.col("objectID") == F.col("_id"), "left_semi",
+            ).withColumn("_up", F.lit(False))
+            if inflight is not None:
+                rows = inflight.join(
+                    F.broadcast(rows.select("objectID", FILE_COL)), "objectID", "left"
+                ).withColumn("_up", F.lit(True)).unionByName(
+                    rows.join(F.broadcast(inflight.select("objectID")), "objectID", "left_anti")
+                )
+
+            # ---- file_list body: span metadata patch + hop 3 ------------------------
+            if n_fl_max:
+                spans_df = (
+                    fl_in.join(self.universe["documents"], "doc_id", "left")
+                    .select(
+                        F.col("doc_id").alias("_fl_id"),
+                        F.coalesce(F.col("spans"), F.array().cast(
+                            "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+                        )).alias("spans"),
+                    )
+                )
+                rows = rows.join(F.broadcast(spans_df), F.col("objectID") == F.col("_fl_id"), "left")
+                hit = F.col("_fl_id").isNotNull()
+                rows = _patch_where(rows, hit, {
+                    "changelogFilename": SP.changelog_filename(F.col("spans")),
+                    "types": SP.ts_support(
+                        F.col("spans"), F.col("types.ts"),
+                        F.when(F.col("types.ts") == "definitely-typed",
+                               F.regexp_replace(F.col("types.definitelyTyped"), "^@types/", ""))
+                        .otherwise(F.lit(None))),
+                    "moduleTypes": SP.module_types_from_files(F.col("spans"), F.col("moduleTypes")),
+                    "styleTypes": SP.style_types_from_files(F.col("spans"), F.col("styleTypes")),
+                    # reads the patched changelogFilename
+                    "_oneTimeDataToUpdateAt": F.when(
+                        F.col("changelogFilename").isNull(), F.lit(self.now_day_ms)
+                    ).otherwise(F.lit(0)),
+                })
+                # materialized once: hop 3 and the probe body both read it
+                rows = rows.drop("spans").localCheckpoint(eager=True)
+                # hop 3: changelog probes for packages still missing a
+                # changelog, memoized against one_time_data (J4)
+                need = rows.where(hit & F.col("changelogFilename").isNull())
+                if self.one_time.exists():
+                    memo = self.one_time.read(spark).select(
+                        F.col("objectID").alias("_memo_id")
+                    )
+                    need = need.join(
+                        F.broadcast(memo),
+                        F.concat_ws("@", need.objectID, need.version) == F.col("_memo_id"),
+                        "left_anti",
+                    )
+                rows = rows.drop("_fl_id")
+                probe_fused = hop(
+                    changelog_candidates(need).select(
+                        canonicalize_url(F.col("url")).alias("url"),
+                        "host",
+                        F.lit("changelog_probe").alias("kind"),
+                        "doc_id",
+                        # probe priority: candidate order, best first (rank 1 -> highest)
+                        (F.lit(1000.0) - F.col("rank")).alias("priority"),
+                    ),
+                    ("raw.githubusercontent.com", "gitlab.com", "bitbucket.org"),
+                    len(FILE_OPTIONS) * n_fl_max,
+                )
+                if probe_fused is not None:
+                    probe_in = probe_in.unionByName(probe_fused.select("url", "doc_id"))
+
+            # ---- changelog_probe body: deterministic first-hit-wins (L4) -------
+            if kc.get("changelog_probe") or probe_fused is not None:
+                winners_universe = self.universe["repo_changelogs"]
+                hits = probe_in.withColumn("_file", F.element_at(F.split("url", "/"), -1)).join(
+                    F.broadcast(winners_universe),
+                    (F.col("doc_id") == winners_universe.name)
+                    & (F.col("_file") == winners_universe.filename),
+                    "left_semi",
+                )
+                winners = (
+                    hits.withColumn("_rank", candidate_rank(F.col("url")))
+                    .groupBy(F.col("doc_id").alias("_cl_id"))
+                    .agg(F.min_by("url", "_rank").alias("_cl_url"))
+                )
+                rows = rows.join(F.broadcast(winners), F.col("objectID") == F.col("_cl_id"), "left")
+                rows = _patch_where(rows, F.col("_cl_id").isNotNull(), {
+                    "changelogFilename": F.col("_cl_url"),
+                    "_oneTimeDataToUpdateAt": F.lit(0),
+                }).drop("_cl_id", "_cl_url")
+            # cached for the memo below
+            rows = rows.cache()
+            cached.append(rows)
+            return rows.where(F.col("_up")).drop("_up")
+
+        # ---- packages: ONE upsert of the formatted + patched rows --------------
+        if n_ok or kc.get("file_list") or kc.get("changelog_probe"):
             self.packages.merge_upsert(
                 spark,
-                landed,
+                Pin(upsert_rows),
                 key="objectID",
                 guard="src._revision >= tgt._revision",
                 meta={"generation": generation},
-            )
-            # hop 2: file list URLs — derived from the pinned enriched batch
-            # (what the MERGE just landed), not a table read-back and not a
-            # second formatPkg pass
-            hop2 = landed.get().select(
-                canonicalize_url(filelist_url(F.col("objectID"), F.col("version"))).alias("url"),
-                F.lit("cdn.jsdelivr.net").alias("host"),
-                F.lit("file_list").alias("kind"),
-                F.col("objectID").alias("doc_id"),
-                F.col("downloadsLast30Days").cast("double").alias("priority"),
-            )
-            new_rows.append(hop2)
-            hop_hosts.add("cdn.jsdelivr.net")
-
-        # ---- file_list hop ----------------------------------------------------
-        n_fl = kc.get("file_list", 0)
-        metrics["filelist_ok"] = n_fl
-        if n_fl:
-            spans_df = fl.select("doc_id").join(self.universe["documents"], "doc_id", "left")
-            spans_df = spans_df.withColumn(
-                "spans",
-                F.coalesce(F.col("spans"), F.array().cast(
-                    "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-                )),
-            )
-            pkgs, pkgs_sid = self.packages.read_with_files(spark)
-            patched = (
-                pkgs.join(F.broadcast(spans_df), pkgs.objectID == spans_df.doc_id, "inner")
-                .drop("doc_id")
-                .withColumn("changelogFilename", SP.changelog_filename(F.col("spans")))
-                .withColumn("types", SP.ts_support(
-                    F.col("spans"), F.col("types.ts"),
-                    F.when(F.col("types.ts") == "definitely-typed",
-                           F.regexp_replace(F.col("types.definitelyTyped"), "^@types/", ""))
-                    .otherwise(F.lit(None))))
-                .withColumn("moduleTypes", SP.module_types_from_files(F.col("spans"), F.col("moduleTypes")))
-                .withColumn("styleTypes", SP.style_types_from_files(F.col("spans"), F.col("styleTypes")))
-                .withColumn(
-                    "_oneTimeDataToUpdateAt",
-                    F.when(F.col("changelogFilename").isNull(), F.lit(self.now_day_ms)).otherwise(F.lit(0)),
-                )
-                .drop("spans")
-            )
-            # provenance: the patched rows are packages rows, so the MERGE
-            # rewrites their files without a detection scan
-            self.packages.merge_upsert(
-                spark, patched, key="objectID", meta={"generation": generation},
                 read_at=pkgs_sid,
             )
-            # hop 3: changelog probes for packages still missing a changelog,
-            # memoized against one_time_data (J4)
-            need = patched.where(F.col("changelogFilename").isNull())
-            if self.one_time.exists():
-                memo = self.one_time.read(spark).select(
-                    F.col("objectID").alias("_memo_id")
-                )
-                need = need.join(
-                    F.broadcast(memo),
-                    F.concat_ws("@", need.objectID, need.version) == F.col("_memo_id"),
-                    "left_anti",
-                )
-            cands = changelog_candidates(need).select(
-                canonicalize_url(F.col("url")).alias("url"),
-                "host",
-                F.lit("changelog_probe").alias("kind"),
-                "doc_id",
-                # probe priority: candidate order, best first (rank 1 -> highest)
-                (F.lit(1000.0) - F.col("rank")).alias("priority"),
-            )
-            new_rows.append(cands)
-            hop_hosts.update(
-                ("raw.githubusercontent.com", "gitlab.com", "bitbucket.org")
-            )
 
-        # ---- changelog_probe hop -------------------------------------------------
+        # ---- fused counts: one pass over rows the MERGE materialised -----------
+        fused_by_host: dict[str, int] = {}
+        n_fused_blocked = 0
+        n_fl = kc.get("file_list", 0)
         n_probe = kc.get("changelog_probe", 0)
+        if fused:
+            legs = [
+                f.select(F.lit(True).alias("_adm"), "host", "kind", "_blocked") for f in fused
+            ] + [
+                f.select(F.lit(False).alias("_adm"), "host", "kind", F.lit(False).alias("_blocked"))
+                for f in fused_fresh
+            ]
+            for r in (
+                reduce(DataFrame.unionByName, legs)
+                .groupBy("_adm", "host", "kind", "_blocked").count().collect()
+            ):
+                if r["_adm"]:
+                    fused_by_host[r["host"]] = fused_by_host.get(r["host"], 0) + r["count"]
+                    n_fused_blocked += r["count"] if r["_blocked"] else 0
+                elif r["kind"] == "file_list":
+                    n_fl += r["count"]
+                else:
+                    n_probe += r["count"]
+        metrics["filelist_ok"] = n_fl
         metrics["probes"] = n_probe
         if n_probe:
-            winners_universe = self.universe["repo_changelogs"]
-            hits = probe.withColumn("_file", F.element_at(F.split("url", "/"), -1)).join(
-                F.broadcast(winners_universe),
-                (F.col("doc_id") == winners_universe.name)
-                & (F.col("_file") == winners_universe.filename),
-                "left_semi",
-            )
-            winners = (
-                hits.withColumn("_rank", candidate_rank(F.col("url")))
-                .groupBy("doc_id")
-                .agg(F.min_by("url", "_rank").alias("changelog_url"))
-            )
-            pkgs, pkgs_sid = self.packages.read_with_files(spark)
-            patched = (
-                pkgs.join(F.broadcast(winners), pkgs.objectID == winners.doc_id, "inner")
-                .drop("doc_id")
-                .withColumn("changelogFilename", F.col("changelog_url"))
-                .withColumn("_oneTimeDataToUpdateAt", F.lit(0))
-                .drop("changelog_url")
-            )
-            self.packages.merge_upsert(
-                spark, patched, key="objectID", meta={"generation": generation},
-                read_at=pkgs_sid,
-            )
-            memo_rows = (
-                self.packages.read(spark)
-                .join(F.broadcast(probe.select("doc_id").distinct()),
-                      F.col("objectID") == F.col("doc_id"), "left_semi")
-                .select(
-                    F.concat_ws("@", "objectID", "version").alias("objectID"),
-                    F.col("changelogFilename"),
-                )
+            memo_rows = rows.join(
+                F.broadcast(probe_in.select("doc_id")),
+                F.col("objectID") == F.col("doc_id"), "left_semi",
+            ).select(
+                F.concat_ws("@", "objectID", "version").alias("objectID"),
+                F.col("changelogFilename"),
             )
             self.one_time.append(memo_rows, meta={"generation": generation})
 
-        # ---- frontier bookkeeping --------------------------------------------------
-        from functools import reduce
 
-        def union_all(dfs):
-            return reduce(lambda a, b: a.unionByName(b), dfs)
-
+        # ---- seen set: one add ---------------------------------------------------
         # only *successfully processed* URLs enter the seen set: a transiently
         # failed URL is re-queued for retry and must pass the dedup filter on
         # the retry attempt (otherwise the retry is dropped as a dup and the
@@ -1488,12 +1639,14 @@ class Crawl:
         for pending_again in ("retry", "throttled"):
             if pending_again in outcome_urls:
                 processed = processed.join(outcome_urls[pending_again], "url", "left_anti")
+        processed = reduce(DataFrame.unionByName, [processed, *(f.select("url") for f in fused_fresh)])
         self.seen.add(spark, processed, defer=self.checkpoint_interval > 1)
 
+        # ---- frontier: one MERGE ---------------------------------------------------
         updates = [fresh.select("url").withColumn("_new_state", F.lit("done"))]
         updates += [u.withColumn("_new_state", F.lit(s)) for s, u in outcome_urls.items()]
         # later entries win (retry/not_found override the blanket 'done')
-        upd = union_all(updates).groupBy("url").agg(
+        upd = reduce(DataFrame.unionByName, updates).groupBy("url").agg(
             F.max_by("_new_state", F.when(F.col("_new_state") == "done", 0).otherwise(1)).alias("_new_state")
         )
         # dedup-dropped scheduled rows are terminal duplicates
@@ -1551,6 +1704,19 @@ class Crawl:
             .select(*[f.name for f in FRONTIER.fields])
             .localCheckpoint(eager=False)
         )
+        # fused rows are terminal the moment they are admitted: done
+        # (fetched or a seen duplicate) or robots_blocked. They land
+        # exactly as their dequeued twins would have (never-fetched
+        # robots_blocked rows stay in the frontier either way)
+        landing = [
+            f.withColumn(
+                "state",
+                F.when(F.col("_blocked"), F.lit("robots_blocked")).otherwise(F.lit("done")),
+            ).drop("_blocked")
+            for f in fused
+        ]
+        if self.gc_terminal:
+            landing = [f.where(F.col("state") != "done") for f in landing]
         if self.gc_terminal:
             # the reference GCs processed queue rows every minute
             # (src/indexers/MainWatchIndexer.ts:51-61, PeriodicBackground
@@ -1559,12 +1725,13 @@ class Crawl:
             # rewritten as terminal tombstones, so frontier bytes stay
             # bounded by the active (pending/retrying) set. The seen set
             # remains the dedup authority; not_found rows are quarantined in
-            # their own table below before the delete.
+            # their own table below.
             terminal = upd_rows.where(F.col("state").isin("done", "not_found"))
+            upserts = upd_rows.where(~F.col("state").isin("done", "not_found"))
             self.frontier.merge_apply(
                 spark,
                 "url",
-                upserts=upd_rows.where(~F.col("state").isin("done", "not_found")),
+                upserts=reduce(DataFrame.unionByName, [upserts, *landing]),
                 # host/priority carried so stats pruning applies to deletes
                 # too, should the MERGE fall back to detection
                 delete_keys=terminal.select("url", "host", "priority"),
@@ -1574,47 +1741,22 @@ class Crawl:
             )
         else:
             self.frontier.merge_upsert(
-                spark, upd_rows, key="url", meta={"generation": generation},
+                spark, reduce(DataFrame.unionByName, [upd_rows, *landing]),
+                key="url", meta={"generation": generation},
                 read_at=fr_sid, files=source_files(sched_files),
             )
-        if new_rows:
-            additions = (
-                union_all(new_rows)
-                .withColumn("retries", F.lit(0))
-                .withColumn("state", F.lit("pending"))
-                .withColumn("next_attempt_at", F.lit(None).cast("timestamp"))
-                .withColumn("seq", F.lit(0).cast("long"))
-                .withColumn(
-                    "lineage",
-                    F.struct(
-                        F.spark_partition_id().alias("partition_id"),
-                        F.lit(self.frontier.current_snapshot_id() or 0).cast("long").alias("snapshot_id"),
-                        F.lit(generation).alias("generation"),
-                    ),
-                )
-                .dropDuplicates(["url"])
-            )
-            # a URL already present in the frontier must not be re-queued:
-            # stats-pruned, broadcast-probed check — never a shuffle of the
-            # frontier (see filter_new_urls)
-            additions = filter_new_urls(
-                self.frontier, spark, additions, sorted(hop_hosts)
-            )
+        if enqueue:
+            # hop rows that did not fuse queue as pending rows
+            queued = reduce(DataFrame.unionByName, enqueue)
+            self.frontier.append(queued, meta={"generation": generation})
             if self.hist_counts is not None:
-                # counts-carry: snapshot the enqueued rows (the dedup probe
-                # above reads the frontier, so a lazy re-execution after the
-                # append would see its own output — checkpoint breaks that)
-                # and fold their bins into the ledger with one O(additions)
-                # collect. A host outside the hints bounds (null bin) can't
-                # be binned — the ledger drops and the next tick rescans.
-                additions = additions.localCheckpoint(eager=True)
-            self.frontier.append(
-                additions.select(*[f.name for f in FRONTIER.fields]),
-                meta={"generation": generation},
-            )
-            if self.hist_counts is not None:
+                # counts-carry: fold the queued rows' bins into the ledger
+                # with one O(additions) collect (the rows are checkpointed,
+                # so this reads no frontier). A host outside the hints bounds
+                # (null bin) can't be binned — the ledger drops and the
+                # next tick rescans.
                 folds: list[tuple[str, int, int]] = []
-                for r in additions.groupBy(
+                for r in queued.groupBy(
                     "host", histogram_bin_expr(self.hist_hints).alias("_bin")
                 ).count().collect():
                     if r["_bin"] is None:
@@ -1633,6 +1775,19 @@ class Crawl:
             )
             self.not_found.append(nf_rows, meta={"generation": generation})
 
+        # fused admissions count like dequeued ones: the watch ledger
+        # debits scheduled_by_host
+        for h, n in fused_by_host.items():
+            sched_by_host[h] = sched_by_host.get(h, 0) + n
+        n_admitted = n_scheduled + sum(fused_by_host.values())
+        metrics["scheduled"] = n_admitted
+        metrics["scheduled_by_host"] = sched_by_host
+        metrics["fused_by_host"] = fused_by_host
+        metrics["robots_blocked"] = cnt.get(True, 0) + n_fused_blocked
+        metrics["deduped"] = (
+            n_admitted - metrics["robots_blocked"]
+            - kc.get("registry_doc", 0) - n_fl - n_probe
+        )
         if had_maturities:
             # anchored AFTER the MERGE stamped next_attempt_at; +1 covers
             # the driver-vs-plan current_timestamp skew within one box
@@ -1646,10 +1801,45 @@ class Crawl:
         # mismatch and force a rescan
         self._counts_snapshot = self.frontier.current_snapshot_id()
         metrics["elapsed_s"] = round(time.time() - t0, 3)
-        metrics["throughput_urls_per_s"] = round(n_scheduled / max(metrics["elapsed_s"], 1e-9), 1)
-        for df in (flagged, fresh, reg_fetched):
+        metrics["throughput_urls_per_s"] = round(n_admitted / max(metrics["elapsed_s"], 1e-9), 1)
+        for df in cached:
             df.unpersist()
         return metrics
+
+    def _hop_additions(
+        self, rows: DataFrame, hosts: tuple[str, ...], generation: int, robots
+    ) -> DataFrame:
+        """One hop's new rows as pending frontier rows, url-deduped, minus
+        urls the frontier already holds (filter_new_urls — ``hosts`` is
+        the hop kind's static host set), robots-flagged (``_blocked``) and
+        checkpointed: fused and enqueued rows are both carved from it, and
+        the MERGE source, the frontier landing rows and the fused counts
+        read one copy."""
+        additions = (
+            rows.withColumn("retries", F.lit(0))
+            .withColumn("state", F.lit("pending"))
+            .withColumn("next_attempt_at", F.lit(None).cast("timestamp"))
+            .withColumn("seq", F.lit(0).cast("long"))
+            .withColumn(
+                "lineage",
+                F.struct(
+                    F.spark_partition_id().alias("partition_id"),
+                    F.lit(self.frontier.current_snapshot_id() or 0).cast("long").alias("snapshot_id"),
+                    F.lit(generation).alias("generation"),
+                ),
+            )
+            .dropDuplicates(["url"])
+        )
+        # a URL already present in the frontier must not be re-queued:
+        # stats-pruned, broadcast-probed check — never a shuffle of the
+        # frontier (see filter_new_urls)
+        additions = filter_new_urls(self.frontier, self.spark, additions, sorted(hosts))
+        additions = additions.select(*[f.name for f in FRONTIER.fields])
+        if robots is not None:
+            additions = flag_robots(additions, robots)
+        else:
+            additions = additions.withColumn("_blocked", F.lit(False))
+        return additions.localCheckpoint(eager=False)
 
     # -- full bootstrap ------------------------------------------------------------
 

@@ -62,7 +62,7 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,20 +99,19 @@ def source_files(uris) -> list[str]:
 
 
 class Pin:
-    """A DataFrame whose plan runs once, at the first ``get()``: the rows
-    are checkpointed there and every later ``get()`` reads the checkpoint.
-    A MERGE given a Pin as its upserts materialises it inside its own
-    commit, so the plan runs in the MERGE's SQL execution, and a caller
-    that derives more rows from the same batch afterwards re-runs nothing
-    (the crawl's hop 2 reads the formatted packages it just merged)."""
+    """Upserts built and materialised inside the MERGE's own commit: the
+    first ``get()`` calls ``build`` and checkpoints the DataFrame it
+    returns; every later ``get()`` reads the checkpoint. The plan
+    therefore runs in the MERGE's SQL executions (the crawl's packages
+    upsert: formatPkg's Arrow pass and the hop bodies that read it)."""
 
-    def __init__(self, df: DataFrame):
-        self._plan = df
+    def __init__(self, build: Callable[[], DataFrame]):
+        self._build = build
         self._rows: DataFrame | None = None
 
     def get(self) -> DataFrame:
         if self._rows is None:
-            self._rows = self._plan.localCheckpoint(eager=True)
+            self._rows = self._build().localCheckpoint(eager=True)
         return self._rows
 
 

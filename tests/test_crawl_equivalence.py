@@ -1,7 +1,11 @@
 """North-rule gate: the engine's multi-generation crawl ordering and final
 URL-seen set must equal a straight-line Python simulator of the reference
 semantics (priority queue + per-host politeness budget + 3-hop expansion +
-dedup) on the same seed list and budgets.
+dedup) on the same seed list and budgets. The simulator models hop fusion:
+a host's new hop rows run in the generation that produced them when a
+bound on them (one file list per fetched doc, len(FILE_OPTIONS) probes per
+fetched file list) fits the host's budget next to what the generation
+scheduled for it; otherwise they queue.
 
 The simulator is an independent reimplementation: plain dicts/sorts, no
 Spark — only the synthetic universe *facts* (doc properties, robots rules,
@@ -51,6 +55,9 @@ def simulate(not_found_ids: set[str]) -> tuple[list[set[str]], dict[str, str]]:
         path = re.sub(r"^[a-z+]+://[^/]+", "", url)
         return any(path.startswith(p) for p in ROBOTS.get(host, []))
 
+    def budget(host: str) -> int:
+        return DEFAULT_BUDGETS.get(host, 6) * MULT
+
     for _gen in range(100):
         # politeness: per-host top-budget by (priority desc, url asc)
         by_host: dict[str, list] = {}
@@ -58,31 +65,38 @@ def simulate(not_found_ids: set[str]) -> tuple[list[set[str]], dict[str, str]]:
             by_host.setdefault(host, []).append((url, kind, doc, prio))
         scheduled = []
         for host, rows in by_host.items():
-            budget = DEFAULT_BUDGETS.get(host, 6) * MULT
             rows.sort(key=lambda r: (-r[3], r[0]))
-            scheduled.extend((host, *r) for r in rows[:budget])
+            scheduled.extend((host, *r) for r in rows[: budget(host)])
         if not scheduled:
             break
-        fetched: set[str] = set()
-        additions: dict[str, tuple[str, str, str, float]] = {}
-        for host, url, kind, doc, prio in scheduled:
+        # the frontier as the generation found it: hop rows already queued
+        # (or crawled) there are neither re-queued nor fused
+        frontier = set(pending) | set(states)
+        n_sched: dict[str, int] = {}
+        for host, url, *_ in scheduled:
             del pending[url]
+            n_sched[host] = n_sched.get(host, 0) + 1
+        fetched: set[str] = set()
+
+        def process(host: str, url: str, kind: str, doc: str) -> dict:
+            """Fetch one url; returns the hop rows it yields."""
+            hops: dict[str, tuple[str, str, str, float]] = {}
             if robots_blocked(url, host):
                 states[url] = "robots_blocked"
-                continue
+                return hops
             if url in seen:
                 states[url] = "done"  # dup
-                continue
+                return hops
             seen.add(url)
             fetched.add(url)
             p = props[doc]
             if kind == "registry_doc":
                 if doc in not_found_ids:
                     states[url] = "not_found"
-                    continue
+                    return hops
                 states[url] = "done"
                 fl = f"https://cdn.jsdelivr.net/npm/{doc}@{p['version']}/flat"
-                additions[fl] = ("cdn.jsdelivr.net", "file_list", doc, float(p["downloads"]))
+                hops[fl] = ("cdn.jsdelivr.net", "file_list", doc, float(p["downloads"]))
             elif kind == "file_list":
                 states[url] = "done"
                 hit = next(
@@ -103,7 +117,7 @@ def simulate(not_found_ids: set[str]) -> tuple[list[set[str]], dict[str, str]]:
                         base = f"https://bitbucket.org/{user}/{project}/raw/master"
                     bhost = base.split("/")[2]
                     for rank, fname in enumerate(FILE_OPTIONS, start=1):
-                        additions[f"{base}/{fname}"] = (
+                        hops[f"{base}/{fname}"] = (
                             bhost, "changelog_probe", doc, 1000.0 - rank,
                         )
             else:  # changelog_probe
@@ -114,9 +128,45 @@ def simulate(not_found_ids: set[str]) -> tuple[list[set[str]], dict[str, str]]:
                         prev = changelog.get(doc)
                         if prev is None:
                             changelog[doc] = url
-        for u, row in additions.items():
-            if u not in pending and u not in seen and u not in states:
-                pending[u] = row
+            return hops
+
+        def admit(hops: dict, bound: int) -> list:
+            """Hop fusion: a host's new rows run in this generation when a
+            bound on them fits its budget next to what this generation
+            scheduled for it; otherwise they queue."""
+            rows_by_host: dict[str, list] = {}
+            for u, row in hops.items():
+                if u not in frontier:
+                    rows_by_host.setdefault(row[0], []).append((u, row))
+            fused = []
+            for host, rows in rows_by_host.items():
+                if n_sched.get(host, 0) + bound <= budget(host):
+                    fused.extend((host, u, row[1], row[2]) for u, row in rows)
+                else:
+                    pending.update(rows)
+            return fused
+
+        # one body per hop kind, each over its dequeued rows plus the rows
+        # the previous hop fused into this generation. The bounds: hop 2
+        # yields one file list per fetched doc, hop 3 len(FILE_OPTIONS)
+        # probes per fetched file list
+        stage = {"registry_doc": [], "file_list": [], "changelog_probe": []}
+        for host, url, kind, doc, _prio in scheduled:
+            stage[kind].append((host, url, kind, doc))
+        hop2: dict = {}
+        for row in stage["registry_doc"]:
+            hop2.update(process(*row))
+        n_ok = len(hop2)
+        hop3: dict = {}
+        for row in stage["file_list"]:
+            hop3.update(process(*row))
+        n_fl = sum(1 for row in stage["file_list"] if row[1] in fetched)
+        for row in admit(hop2, n_ok):
+            hop3.update(process(*row))
+        cdn = "cdn.jsdelivr.net"
+        n_fl += n_ok if n_sched.get(cdn, 0) + n_ok <= budget(cdn) else 0
+        for row in stage["changelog_probe"] + admit(hop3, len(FILE_OPTIONS) * n_fl):
+            process(*row)
         per_gen.append(fetched)
     return per_gen, states
 

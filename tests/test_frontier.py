@@ -550,6 +550,10 @@ class TestCountsCarryEngine:
         def run(root: str, carry: bool):
             c = Crawl(
                 spark, str(tmp_path / root), universe, 10_000_000,
+                # cdn below the 12 docs a generation formats: hop-2 rows
+                # never fit, so they queue (no fusion) and cdn is a ledger
+                # host by the time the override sets it aside
+                budgets={**FR.DEFAULT_BUDGETS, "cdn.jsdelivr.net": 5},
                 budget_multiplier=2, backoff_scale=0.02,
                 transient_modulus=0, throttle_modulus=0, carry_counts=carry,
             )
@@ -563,13 +567,13 @@ class TestCountsCarryEngine:
             ms.append(c.run_generation(7))  # full again: asides must rejoin
             return c, ms
 
-        c1, ms1 = run("carry", True)
+        c1, ms = run("carry", True)
         c0, ms0 = run("nocarry", False)
-        assert [m.get("scheduled") for m in ms1] == [m.get("scheduled") for m in ms0]
-        assert [m.get("scheduled_by_host") for m in ms1] == [
+        assert [m.get("scheduled") for m in ms] == [m.get("scheduled") for m in ms0]
+        assert [m.get("scheduled_by_host") for m in ms] == [
             m.get("scheduled_by_host") for m in ms0
         ]
-        carried = [m.get("hist_counts_carried") for m in ms1]
+        carried = [m.get("hist_counts_carried") for m in ms]
         assert any(carried[4:6]), carried  # an override tick consumed a carry
         assert carried[6], carried  # asides rejoined: the full gen carried too
 
@@ -589,6 +593,47 @@ class TestCountsCarryEngine:
         c1.frontier.append(extra, meta={"op": "external-enqueue"})
         m = c1.run_generation(9)
         assert m.get("hist_counts_carried") is False
+
+    def test_fused_host_stays_out_of_the_ledger_until_it_enqueues(
+        self, spark, universe, tmp_path
+    ):
+        """The ledger shape above at the default cdn budget, so hop 2
+        fuses: fused rows never enter the frontier, so cdn is not a ledger
+        host while it fuses, and carry still engages. When an override
+        (cdn's window exhausted) makes cdn enqueue, its first queued rows
+        cannot be binned: the ledger drops, the next full tick rescans,
+        schedules the queued rows, and the tick after carries again."""
+        cdn = "cdn.jsdelivr.net"
+        ov = {
+            "registry.npmjs.org": 7,
+            cdn: 0,
+            "raw.githubusercontent.com": 5,
+            "gitlab.com": 5,
+            "bitbucket.org": 5,
+        }
+
+        c = Crawl(
+            spark, str(tmp_path / "carry"), universe, 10_000_000,
+            budget_multiplier=2, backoff_scale=0.02,
+            transient_modulus=0, throttle_modulus=0, carry_counts=True,
+        )
+        c.seed(universe["raw_docs"].select("doc_id"))
+        ms, ledgers = [], []
+        for g in range(1, 8):
+            ms.append(c.run_generation(g, budgets_override=ov if g == 5 else None))
+            ledgers.append(None if c.hist_counts is None else set(c.hist_counts))
+        carried = [m["hist_counts_carried"] for m in ms]
+        fused = range(4)  # gens 1-4: every generation's hop 2 fuses
+        assert all(cdn in ms[i]["fused_by_host"] for i in fused), ms
+        assert all(cdn not in (ledgers[i] or ()) for i in fused), ledgers
+        assert carried[3], carried  # a fused generation scheduled off the ledger
+        # gen 5: cdn's window is exhausted, so its hop rows queue: the
+        # carried ledger was consumed, then dropped at the first cdn enqueue
+        assert carried[4] and cdn not in ms[4]["fused_by_host"], carried
+        assert ledgers[4] is None, ledgers
+        # gen 6: full again — a rescan, which dequeues the queued cdn rows
+        assert not carried[5] and ms[5]["scheduled_by_host"].get(cdn), (carried, ms[5])
+        assert carried[6], carried
 
 
 class TestRetryClasses:

@@ -204,6 +204,54 @@ def test_histogram_schedule_never_shuffles_pending(spark, monkeypatch):
     _assert_pending_never_shuffled(plans)
 
 
+def test_boundary_carve_filters_on_the_class_column(spark, monkeypatch):
+    """The definite/boundary carve over the candidate checkpoint filters
+    on the checkpointed class column only. A `_bin = _thr` carve let the
+    optimizer infer, from the checkpoint's recorded constraints, a Filter
+    that re-evaluated the bin formula (literal-map lookups, FLOOR) and the
+    threshold lookup on every candidate row of the boundary branch."""
+    pending = _pending(spark, 5000, 2, 997)
+    out, plans = _schedule_checkpoint_plans(
+        monkeypatch, pending, budgets={"h0.org": 50, "h1.org": 70}, default_budget=6
+    )
+    assert out.count() == 120
+    winners_plan = plans[-1]
+    assert winners_plan.count("Scan ExistingRDD") == 2  # definite + boundary
+    filters = [ln for ln in winners_plan.splitlines() if "Filter (" in ln]
+    assert filters
+    for ln in filters:
+        assert "map(keys" not in ln and "FLOOR" not in ln, ln
+
+
+def test_enqueue_check_output_joins_on_host(spark, tmp_path):
+    """filter_new_urls' host-contract check must not be copied onto a
+    relation joined to its output on host: the robots rules list other
+    hosts, and an inferred copy of the check over them raised."""
+    from npm_search_spark.frontier import filter_new_urls, flag_robots
+    from npm_search_spark.schema import FRONTIER
+    from npm_search_spark.sources.synthetic import robots
+    from npm_search_spark.tables import SnapTable
+
+    t = SnapTable(str(tmp_path / "fr"), FRONTIER, stats_cols=["url", "host", "priority"])
+
+    def row(url, doc):
+        return (url, "cdn.jsdelivr.net", "file_list", doc, 1.0, 0, "pending", None, 0,
+                {"partition_id": 0, "snapshot_id": 0, "generation": 0})
+
+    t.append(spark.createDataFrame([row("https://cdn.jsdelivr.net/npm/a@1/flat", "a")], FRONTIER))
+    additions = spark.createDataFrame(
+        [row("https://cdn.jsdelivr.net/npm/b@1/flat", "b"),
+         row("https://cdn.jsdelivr.net/npm/@angular/c@1/flat", "c")],
+        FRONTIER,
+    )
+    flagged = flag_robots(
+        filter_new_urls(t, spark, additions, ["cdn.jsdelivr.net"]), robots(spark)
+    )
+    assert {(r["doc_id"], r["_blocked"]) for r in flagged.collect()} == {
+        ("b", False), ("c", True)
+    }
+
+
 def test_whole_stage_codegen_on_span_functions(spark):
     from npm_search_spark.functions import spans as SP
     from npm_search_spark.schema import DOCUMENTS
