@@ -407,12 +407,13 @@ def _docs_with_dups(spark, sf):
     """documents ∪ exact copies of every 10th doc (ids +1000000) — a
     deterministic near-dup universe both engines can derive identically.
 
-    No fan-out here: the CPU-heavy per-doc stages (doc_grams, which
-    n-gram Jaccard and MinHash both read, and simhash_signatures) each
-    repartition to cluster width themselves when the input arrives
-    under-partitioned, while the cheap fingerprint groupBy (dedup_exact)
+    No fan-out here: the per-doc stages (exact_duplicates, doc_grams, which
+    n-gram Jaccard and MinHash both read, and simhash_signatures) each pass
+    their input through dedup._fan_out_if_heavy, which repartitions to
+    cluster width only an under-partitioned input whose size estimate is
+    past ~200 KB; below that one task beats the shuffle, and dedup_exact
     consumes the unshuffled scan — a blanket repartition was a pure shuffle
-    tax on the latter."""
+    tax there."""
     d = _t(spark, sf, "documents").select("doc_id", "text")
     # r6: ONE scan instead of a union of two (the dup branch's modulo
     # predicate does not push down, so the union decoded the text column

@@ -3,28 +3,32 @@
   exact            hash-groupBy on a normalized-content fingerprint
   n-gram Jaccard   inverted-index self-join (explode ngram -> equi-join ->
                    shared/union counting) — the scalable exact method
-  MinHash + LSH    64-perm signature + banded buckets in ONE Arrow numpy
-                   pass -> candidate pairs -> exact-Jaccard verification
+  MinHash + LSH    64-perm signature + banded buckets inside the gram pass
+                   -> candidate pairs -> exact-Jaccard verification
   SimHash          tokens hashed JVM-side -> 64-bit bit-vote via segmented
                    numpy sums, near-dup = small Hamming distance in buckets
 
 n-gram Jaccard and MinHash share ONE gram definition and ONE shingling
 pass, ``doc_grams``: word 3-grams of normalized text, hashed to 64 bits in
 a vectorized Arrow pass (no per-row Python, no interpreted Catalyst
-higher-order functions) and pinned so every consumer reads it once.
+higher-order functions) and pinned so every consumer reads it once. When
+MinHash asks for them, the same Arrow batch also yields the LSH band
+buckets, so MinHash crosses the Python boundary once per query.
 
 Scale notes: every method is shuffle-bounded by its join key (fingerprint /
 ngram / band bucket), never all-pairs. Arrow stages work on whole batches:
 tokens are hashed once per distinct token per task, permutation minima are
-``np.minimum.reduceat`` matrix ops. LSH bands turn the quadratic pair
-search into an equi-join; the exact verification joins only candidate
-pairs.
+``np.minimum.reduceat`` matrix ops. Per-doc stages fan out to cluster
+width only through ``_fan_out_if_heavy``. LSH bands turn the quadratic
+pair search into an equi-join; the exact verification joins only
+candidate pairs.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,6 +36,14 @@ from .textstats import normalize_text
 
 NUM_PERM = 64
 BANDS = 16  # 16 bands x 4 rows: P(candidate | j=0.9) ~ 1 - (1-0.9^4)^16 ~ 0.999
+GOLD = np.uint64(0x9E3779B97F4A7C15)
+
+
+def _mix(x):
+    """splitmix64 finalizer, elementwise over uint64 arrays."""
+    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return x ^ (x >> np.uint64(31))
 
 
 # ---------------------------------------------------------------------------
@@ -39,24 +51,42 @@ BANDS = 16  # 16 bands x 4 rows: P(candidate | j=0.9) ~ 1 - (1-0.9^4)^16 ~ 0.999
 # ---------------------------------------------------------------------------
 
 
-def _fan_out_if_heavy(df: DataFrame, min_bytes: int = 4 << 20) -> DataFrame:
-    """Repartition an under-partitioned input to cluster width — but only
-    when the optimizer's size estimate says the per-task text volume is
-    worth a shuffle (r6: a blanket fanout was measured a net loss on small
-    inputs — the shuffle tax exceeds the parallel-hashing win below a few
-    MB — while a single-row-group file at sf1.0 serialized ~40 MB of
-    regex+md5 through one task). At real scale inputs arrive with more
-    partitions than cores and this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
+def _plan_partitions(plan) -> int:
+    """Partitions a physical plan node produces, read without executing it:
+    its declared output partitioning (an exchange's count — the plan's,
+    not AQE's coalesced one), else the sum over its children, down to a
+    leaf scan whose RDD is built (split planning, no job) but not run."""
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = plan.children()
+    if kids.isEmpty():
+        return plan.execute().getNumPartitions()
+    return sum(_plan_partitions(kids.apply(i)) for i in range(kids.size()))
+
+
+def _fan_out_if_heavy(df: DataFrame, min_bytes: int = 192 << 10) -> DataFrame:
+    """The one fan-out rule of the per-doc stages (exact dedup,
+    ``doc_grams``, ``simhash_signatures``): repartition an
+    under-partitioned input to cluster width only when the optimizer's
+    size estimate (compressed parquet bytes) is past the crossover measured
+    on local[4], warm: one task won at 28 KB (sf0.01) and 115 KB (the
+    150-doc perfbench corpus: grams 0.28 vs 0.45 s), fanning out won at
+    255 KB (sf0.1: MinHash 0.96 vs 0.82 s) and 2.5 MB (sf1.0: 5.2 vs 2.5 s).
+    At real scale inputs arrive with more partitions than cores: a no-op.
+    Runs no Spark job: the partition count comes from the unexecuted
+    physical plan (``df.rdd`` would run the input's shuffles under AQE)."""
     try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        if int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) < min_bytes:
+            return df
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        parts = _plan_partitions(plan)
     except Exception:  # noqa: BLE001 — stats are advisory; stay conservative
         return df
-    if est < min_bytes:
-        return df
-    return df.repartition(sc.defaultParallelism)
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n) if parts < n else df
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -188,7 +218,9 @@ def ngram_jaccard_pairs_at_scale(
 # ---------------------------------------------------------------------------
 
 
-def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
+def doc_grams(
+    df: DataFrame, n: int = 3, text_col: str = "text", with_bands: bool = False
+) -> DataFrame:
     """(doc_id, grams) materialized once — the gram source of n-gram
     Jaccard (index, stop-gram count, verification) and of MinHash
     (signature stage, verification).
@@ -204,10 +236,13 @@ def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     over hash sets still equals Jaccard over the DuckDB oracle's string
     grams modulo 64-bit collisions.
 
-    If the input arrives in fewer partitions than the cluster has cores
-    (small files), fan it out first so the whole cluster shingles — at real
-    scale the input already has more partitions than cores and this is a
-    no-op.
+    ``with_bands`` adds MinHash's ``bands`` column: the BANDS LSH band
+    buckets of each doc's gram set (``_minhash_bands``), computed in the
+    same Arrow batch, so MinHash pays one Python pass. n-gram Jaccard
+    leaves it off and never pays for the permutations.
+
+    The input fans out to cluster width only through ``_fan_out_if_heavy``:
+    a small under-partitioned input shingles in one task, with no shuffle.
 
     The pin is eager: the Arrow pass runs as one job here, before any
     consumer plan exists. A lazy pin is truncated at the end of whichever
@@ -216,25 +251,17 @@ def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     old lineage; their metric updates then reach accumulators that were
     already unregistered (DAGScheduler "Failed to update accumulator"
     errors)."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
+    df = _fan_out_if_heavy(df)
     id_type = df.schema["doc_id"].dataType.simpleString()
+    out_names = ["doc_id", "grams"] + ["bands"] * with_bands
+    schema = ", ".join([f"doc_id {id_type}"] + [f"{c} array<bigint>" for c in out_names[1:]])
 
     def grams_of(batches):
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         from hashlib import blake2b
 
-        P1 = np.uint64(0x9E3779B97F4A7C15)
-        P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-
-        def mix(x):
-            x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-            x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-            return x ^ (x >> np.uint64(31))
-
+        P1, P2 = GOLD, np.uint64(0xC2B2AE3D27D4EB4F)
         vocab: dict[str, int] = {}  # token -> u64 hash, memoized per task
 
         for batch in batches:
@@ -290,13 +317,12 @@ def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
             if total >= n:
                 g = h_flat[: total - n + 1] * P1
                 for j in range(1, n):
-                    g = mix(g ^ h_flat[j : total - n + 1 + j] * P2)
+                    g = _mix(g ^ h_flat[j : total - n + 1 + j] * P2)
             else:
                 g = np.empty(0, dtype=np.uint64)
             # a window is valid if it lies inside one doc with T >= n
             tok_doc = np.repeat(np.arange(nb, dtype=np.int64), t_counts)
             tok_pos = np.arange(total, dtype=np.int64) - starts[tok_doc] if total else np.empty(0, dtype=np.int64)
-            out_grams: list[np.ndarray] = []
             if total >= n:
                 wdoc = tok_doc[: total - n + 1]
                 wvalid = tok_pos[: total - n + 1] <= (t_counts[wdoc] - n)
@@ -316,7 +342,7 @@ def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
             for k, d in enumerate(short):
                 acc = P1
                 for h in h_flat[starts[d] : starts[d] + t_counts[d]]:
-                    acc = mix(acc ^ h * P2)
+                    acc = _mix(acc ^ h * P2)
                 sg[k] = acc
             all_d = np.concatenate((vd, short))
             all_g = np.concatenate((vg, sg))
@@ -324,92 +350,62 @@ def doc_grams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
             all_d, all_g = all_d[order], all_g[order]
             counts = np.bincount(all_d, minlength=nb)
             g_offs = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
-            grams_arr = pa.ListArray.from_arrays(
-                pa.array(g_offs), pa.array(all_g.view(np.int64))
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), grams_arr], names=["doc_id", "grams"]
-            )
+            cols = [
+                batch.column("doc_id"),
+                pa.ListArray.from_arrays(pa.array(g_offs), pa.array(all_g.view(np.int64))),
+            ]
+            if with_bands:
+                bk = _minhash_bands(all_g, g_offs)
+                b_offs = np.arange(0, bk.size + 1, BANDS, dtype=np.int32)
+                cols.append(pa.ListArray.from_arrays(
+                    pa.array(b_offs), pa.array(bk.reshape(-1).view(np.int64))))
+            yield pa.RecordBatch.from_arrays(cols, names=out_names)
 
     return (
         df.select("doc_id", text_col)
-        .mapInArrow(grams_of, schema=f"doc_id {id_type}, grams array<bigint>")
+        .mapInArrow(grams_of, schema=schema)
         .localCheckpoint(eager=True)
     )
 
 
-def minhash_band_buckets(grams_df: DataFrame, num_perm: int = NUM_PERM, bands: int = BANDS) -> DataFrame:
-    """(doc_id, band, bucket) in one Arrow-vectorized pass.
+def _minhash_bands(grams, offsets):
+    """(docs, BANDS) uint64 LSH band buckets of the uint64 gram hashes
+    between consecutive ``offsets`` (one doc per segment).
 
-    ``grams_df`` is ``doc_grams`` output: grams arrive as 64-bit hashes
-    from its Arrow pass. The NUM_PERM permutation minima are a numpy
-    matrix op over the Arrow list buffers (segmented min via
-    ``np.minimum.reduceat`` on the flattened values — no per-row Python,
-    no 64x Catalyst expression blowup, which cost ~10x the rest of the
-    query battery), and the band buckets fold signature rows with a
-    splitmix64-style mixer. Output is exploded to BANDS rows per doc for
-    the equi-join."""
-    rows = num_perm // bands
-    hashed = grams_df.select("doc_id", F.col("grams").alias("gh"))
-    id_type = hashed.schema["doc_id"].dataType.simpleString()
-
-    def sigs(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        GOLD = np.uint64(0x9E3779B97F4A7C15)
-        seeds = (np.arange(num_perm, dtype=np.uint64) + np.uint64(1)) * GOLD
-
-        def mix(x):
-            x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-            x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-            return x ^ (x >> np.uint64(31))
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            doc_col = batch.column("doc_id")
-            gh = batch.column("gh")
-            flat = gh.flatten().to_numpy(zero_copy_only=False).astype(np.uint64)
-            lens = pc.list_value_length(gh).to_numpy(zero_copy_only=False).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            nonempty = lens > 0
-            sig = np.full((num_perm, n), np.uint64(0xFFFFFFFFFFFFFFFF), dtype=np.uint64)
-            ne_starts = starts[nonempty]
-            for i in range(num_perm):
-                h = mix(flat + seeds[i])
-                if len(ne_starts):
-                    sig[i, nonempty] = np.minimum.reduceat(h, ne_starts)
-            buckets = np.empty((bands, n), dtype=np.uint64)
-            for b in range(bands):
-                seed = np.uint64(((b + 1) * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF)
-                acc = np.full(n, seed, dtype=np.uint64)
-                for r in range(rows):
-                    acc = mix(acc ^ sig[b * rows + r])
-                buckets[b] = acc
-            idx = np.tile(np.arange(n, dtype=np.int64), bands)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_col.take(pa.array(idx)),
-                    pa.array(np.repeat(np.arange(bands, dtype=np.int32), n)),
-                    pa.array(buckets.reshape(-1).view(np.int64)),
-                ],
-                names=["doc_id", "band", "bucket"],
-            )
-
-    return hashed.mapInArrow(sigs, schema=f"doc_id {id_type}, band int, bucket long")
+    The NUM_PERM permutation minima are a numpy matrix op over the Arrow
+    list buffers (segmented min via ``np.minimum.reduceat`` — no per-row
+    Python, no 64x Catalyst expression blowup, which cost ~10x the rest of
+    the query battery); band b folds its NUM_PERM // BANDS signature rows
+    with the splitmix64 mixer from seed ``(b + 1) * GOLD``. A doc with no
+    grams has an all-ones signature."""
+    seeds = (np.arange(NUM_PERM, dtype=np.uint64) + np.uint64(1)) * GOLD
+    starts, lens = offsets[:-1], np.diff(offsets)
+    nonempty = lens > 0
+    sig = np.full((NUM_PERM, len(lens)), np.uint64(0xFFFFFFFFFFFFFFFF), dtype=np.uint64)
+    if nonempty.any():
+        for i in range(NUM_PERM):
+            sig[i, nonempty] = np.minimum.reduceat(_mix(grams + seeds[i]), starts[nonempty])
+    sig = sig.reshape(BANDS, NUM_PERM // BANDS, -1)
+    acc = np.repeat(seeds[:BANDS, None], len(lens), axis=1)
+    for r in range(sig.shape[1]):
+        acc = _mix(acc ^ sig[:, r])
+    return acc.T
 
 
 def minhash_lsh_candidates(
     df: DataFrame, n: int = 3, text_col: str = "text", grams: DataFrame | None = None
 ) -> DataFrame:
-    """Candidate pairs sharing at least one LSH band bucket."""
+    """Candidate pairs sharing at least one LSH band bucket. ``grams``, when
+    given, is ``doc_grams(df, n, text_col, with_bands=True)`` output: its
+    ``bands`` column is exploded to (band, bucket) rows in the JVM."""
     if grams is None:
-        grams = doc_grams(df, n, text_col)
-    # unpinned: the signature stage has one consumer, the groupBy below
-    bands = minhash_band_buckets(grams)
+        grams = doc_grams(df, n, text_col, with_bands=True)
+    elif "bands" not in grams.columns:
+        raise ValueError(
+            "minhash_lsh_candidates: grams= has no 'bands' column; build it with "
+            "doc_grams(df, n, text_col, with_bands=True)"
+        )
+    bands = grams.select("doc_id", F.posexplode("bands").alias("band", "bucket"))
     # r6: one shuffle instead of two — the previous shape self-joined the
     # band table (each side shuffled + sorted O(docs x bands) rows); this
     # groups each (band, bucket) once with map-side partial aggregation
@@ -444,9 +440,10 @@ def minhash_lsh_dedup_pairs(
     df: DataFrame, threshold: float = 0.9, n: int = 3, text_col: str = "text"
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard — final near-dup pairs."""
-    # grams feed three consumers (the signature stage and both sides of
-    # the verify join); doc_grams pins them, so the Arrow pass runs once
-    grams = doc_grams(df, n, text_col)
+    # grams and bands feed three consumers (the band groupBy and both
+    # sides of the verify join); doc_grams pins them, so the Arrow pass
+    # runs once
+    grams = doc_grams(df, n, text_col, with_bands=True)
     cands = minhash_lsh_candidates(df, n, text_col, grams=grams)
     ga = grams.select(
         F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"),
@@ -486,10 +483,8 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     hashed JVM-side (xxhash64 inside a transform — codegen, deterministic),
     so the Arrow stage sees only list<long> buffers: the per-bit vote is 64
     segmented sums over the flattened hash array (``np.add.reduceat``) —
-    no per-token Python anywhere."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
+    no per-token Python anywhere. Fans out like ``doc_grams``."""
+    df = _fan_out_if_heavy(df)
     toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
     hashed = df.select(
         "doc_id", F.transform(toks, lambda t: F.xxhash64(t)).alias("th")
@@ -497,7 +492,6 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     id_type = hashed.schema["doc_id"].dataType.simpleString()
 
     def run(batches: Iterator) -> Iterator:
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 

@@ -31,6 +31,21 @@ def near_dup_docs(spark):
     return spark.createDataFrame(rows, DOC_SCHEMA)
 
 
+@pytest.fixture
+def arrow_inputs(spark, monkeypatch):
+    """The frames ``DataFrame.mapInArrow`` is called on, in call order."""
+    DataFrame = type(spark.range(0))  # the session's concrete class
+    frames: list = []
+    real = DataFrame.mapInArrow
+
+    def spy(self, *args, **kwargs):
+        frames.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "mapInArrow", spy)
+    return frames
+
+
 def _reference_corpus() -> list[tuple[int, str]]:
     """Docs with planted near-duplicates, docs under 3 tokens, runs of
     mixed whitespace and upper case."""
@@ -210,6 +225,103 @@ class TestDedup:
         assert len(calls) == 1
         analyzed = out._jdf.queryExecution().analyzed().toString()
         assert "lambdafunction" not in analyzed
+
+    def test_minhash_runs_one_arrow_pass(self, spark, arrow_inputs):
+        """MinHash's grams and band buckets come from one ``mapInArrow``."""
+        from npm_search_spark.pipeline.dedup import minhash_lsh_dedup_pairs
+
+        df = spark.createDataFrame(_reference_corpus(), DOC_SCHEMA)
+        assert minhash_lsh_dedup_pairs(df, 0.8).collect()
+        assert len(arrow_inputs) == 1
+
+    def test_minhash_bands_match_two_pass_reference(self, spark):
+        """The in-pass ``bands`` column, exploded as the LSH groupBy reads
+        it, equals the former separate band pass: 64 seeded splitmix
+        minima per doc, then 16 bands folding 4 signature rows each."""
+        import numpy as np
+
+        from npm_search_spark.pipeline.dedup import doc_grams
+
+        M = (1 << 64) - 1
+
+        def mix(x):
+            x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+            x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+            return x ^ (x >> np.uint64(31))
+
+        df = spark.createDataFrame(_reference_corpus(), DOC_SCHEMA)
+        grams = doc_grams(df, with_bands=True)
+        got = {
+            (r["doc_id"], r["band"], r["bucket"])
+            for r in grams.select(
+                "doc_id", F.posexplode("bands").alias("band", "bucket")
+            ).collect()
+        }
+        want = set()
+        for r in grams.collect():
+            g = np.array(r["grams"], dtype=np.int64).view(np.uint64)
+            sig = [
+                mix(g + np.uint64((i + 1) * 0x9E3779B97F4A7C15 & M)).min(keepdims=True)
+                for i in range(64)
+            ]
+            for b in range(16):
+                acc = np.array([(b + 1) * 0x9E3779B97F4A7C15 & M], dtype=np.uint64)
+                for s in sig[b * 4 : b * 4 + 4]:
+                    acc = mix(acc ^ s)
+                want.add((r["doc_id"], b, int(acc.view(np.int64)[0])))
+        assert len(got) == 16 * len(_reference_corpus())
+        assert got == want
+
+    def test_minhash_candidates_need_bands(self, spark, near_dup_docs):
+        from npm_search_spark.pipeline.dedup import doc_grams, minhash_lsh_candidates
+
+        with pytest.raises(ValueError, match="with_bands=True"):
+            minhash_lsh_candidates(near_dup_docs, grams=doc_grams(near_dup_docs))
+
+    @pytest.mark.parametrize("min_bytes", [None, 0])
+    def test_per_doc_stages_fan_out_by_size(self, spark, tmp_path, arrow_inputs, monkeypatch,
+                                            min_bytes):
+        """A small single-partition input shingles and votes in one task,
+        with no round-robin exchange ahead of either Arrow pass; past the
+        gate's size threshold (0 here) both stages fan out to cluster
+        width."""
+        import functools
+
+        from npm_search_spark.pipeline import dedup as D
+
+        width = 1
+        if min_bytes is not None:
+            gate = functools.partial(D._fan_out_if_heavy, min_bytes=min_bytes)
+            monkeypatch.setattr(D, "_fan_out_if_heavy", gate)
+            width = spark.sparkContext.defaultParallelism
+        path = str(tmp_path / "docs")
+        spark.createDataFrame(_reference_corpus(), DOC_SCHEMA).coalesce(1).write.parquet(path)
+        df = spark.read.parquet(path)
+        assert D.doc_grams(df).rdd.getNumPartitions() == width
+        D.simhash_signatures(df)
+        assert len(arrow_inputs) == 2
+        for inp in arrow_inputs:
+            plan = inp._jdf.queryExecution().executedPlan().toString()
+            assert ("RoundRobinPartitioning" in plan) == (width > 1)
+            assert width == 1 or f"RoundRobinPartitioning({width})" in plan
+
+    def test_fan_out_gate_runs_no_job(self, spark, near_dup_docs):
+        """The gate reads the unexecuted plan: on an input holding a
+        shuffle it starts no Spark job (``df.rdd`` would run the shuffle
+        stage under AQE) and sees the plan's partition count, not AQE's
+        coalesced one."""
+        from npm_search_spark.pipeline.dedup import _fan_out_if_heavy
+
+        sc = spark.sparkContext
+        grouped = near_dup_docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+        sc.setJobGroup("fan-out-gate", "gate only")
+        try:
+            out = _fan_out_if_heavy(grouped, min_bytes=0)
+            assert list(sc.statusTracker().getJobIdsForGroup("fan-out-gate")) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert out is grouped  # spark.sql.shuffle.partitions >= defaultParallelism
 
     def test_minhash_lsh_finds_exact_and_near(self, spark, near_dup_docs):
         from npm_search_spark.pipeline.dedup import minhash_lsh_dedup_pairs
